@@ -1,21 +1,26 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{IntegerType, LongType}
+
+import graft.functions.VecCellId
 
 /** IVF (inverted-file) approximate nearest neighbour search — the coarse
   * -quantizer scale path for embedding search (north-star; SURVEY §2.11),
   * complementing the random-hyperplane LSH variant in [[Similarity]].
   *
   * Train: a small k-means (Lloyd) over the corpus — deterministic
-  * hash-picked init, element-wise mean via posexplode + groupBy, centroids
-  * collected to the driver (k × dim doubles — trivially driver-sized at
+  * hash-picked init; each iteration is one narrow pass that keeps per-cell
+  * vector sums and counts in every partition, and the driver turns the
+  * merged sums into normalized means (k × dim doubles — driver-sized at
   * any corpus scale). Search: every vector is assigned to its best cell by
-  * argmax cosine against the broadcast centroid literals (k codegen'd
-  * VecDot calls per row); queries probe their `nprobe` best cells and rank
-  * exact cosine only within those cells.
+  * argmax cosine against the centroids (one codegen'd
+  * [[graft.functions.VecCellId]] pass per row); queries probe their
+  * `nprobe` best cells and rank exact cosine only within those cells.
   *
   * Scale: the corpus shuffles once on cell id; per-query candidate count is
   * ~nprobe/k of the corpus. Cell assignment is a narrow map — the classic
@@ -43,22 +48,75 @@ object Ivf {
   private[ext] def simArray(vec: Column, m: Model): Column =
     array(m.centroids.map(c => centroidSim(vec, c)): _*)
 
-  /** Best-cell id (0-based; first max wins deterministically). Let-bound
-    * so the k centroid dot products run once per row, not once per
-    * array_position/array_max reference. */
+  /** Best-cell id: the 0-based index of the centroid with the greatest
+    * cosine, first maximum winning; a null or zero vector lands in cell 0.
+    * One codegen'd pass per row ([[graft.functions.VecCellId]]): the norm
+    * once, then the k centroid dots. */
   def cellId(vec: Column, m: Model): Column =
-    (element_at(transform(array(simArray(vec, m)),
-      a => array_position(a, array_max(a))), 1) - 1).cast(IntegerType)
+    Bridge.column(VecCellId(Bridge.expression(vec), m.centroids))
+
+  /** Per-cell, per-position sums and non-null counts of one partition's
+    * vectors; `len(c)` is the longest vector cell `c` received (0: the
+    * cell received no element). Merged on the driver in partition order,
+    * so the floating sums are reproducible run to run. */
+  private final case class CellSums(len: Array[Int],
+      sum: Array[Array[Double]], cnt: Array[Array[Long]]) {
+
+    private def grow(c: Int, n: Int): Unit = if (n > len(c)) {
+      sum(c) = java.util.Arrays.copyOf(sum(c), n)
+      cnt(c) = java.util.Arrays.copyOf(cnt(c), n)
+      len(c) = n
+    }
+
+    def add(c: Int, v: ArrayData): Unit = {
+      val n = v.numElements()
+      grow(c, n)
+      val (s, k) = (sum(c), cnt(c))
+      var i = 0
+      while (i < n) {
+        if (!v.isNullAt(i)) { s(i) += v.getDouble(i); k(i) += 1 }
+        i += 1
+      }
+    }
+
+    def merge(o: CellSums): CellSums = {
+      for (c <- len.indices) {
+        grow(c, o.len(c))
+        var i = 0
+        while (i < o.len(c)) {
+          sum(c)(i) += o.sum(c)(i); cnt(c)(i) += o.cnt(c)(i)
+          i += 1
+        }
+      }
+      this
+    }
+
+    /** Element-wise mean of cell `c` (a position whose elements were all
+      * null averages to 0), or None for a cell that received nothing. */
+    def mean(c: Int): Option[Seq[Double]] =
+      if (len(c) == 0) None
+      else Some((0 until len(c)).map(i =>
+        if (cnt(c)(i) == 0) 0.0 else sum(c)(i) / cnt(c)(i)))
+  }
+
+  private object CellSums {
+    def empty(k: Int): CellSums = CellSums(new Array[Int](k),
+      Array.fill(k)(Array.emptyDoubleArray), Array.fill(k)(Array.emptyLongArray))
+  }
 
   /** Lloyd k-means on cosine similarity (spherical k-means). Deterministic:
     * init picks the k corpus rows with the smallest xxhash64(id).
     *
     * The projected vector column is persisted across the `iters` Lloyd
-    * scans (each iteration re-reads it for assignment + mean), then
-    * unpersisted — without this the source is rescanned per iteration.
-    * Works for both array&lt;float&gt; and array&lt;double&gt; corpora; null
-    * vectors are dropped up front. The two collect()s are driver-sized by
-    * construction (k rows; k × dim means). */
+    * scans, then unpersisted — without this the source is rescanned per
+    * iteration. Works for both array&lt;float&gt; and array&lt;double&gt;
+    * corpora; null and non-finite vectors are dropped up front.
+    *
+    * Each iteration is ONE job with no exchange: every partition assigns
+    * its rows to cells and keeps per-cell vector sums and counts
+    * ([[CellSums]], k × dim doubles), and the driver merges the partials,
+    * takes each cell's element-wise mean and normalizes it. An empty cell
+    * keeps its centroid. Driver-side state is k × dim per partition. */
   def train(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int = 16, iters: Int = 3): Model = {
     // one cast up front: downstream code sees array<double> regardless of
@@ -85,20 +143,18 @@ object Ivf {
         normalized(r.getSeq[Double](1)))
 
       for (_ <- 0 until iters) {
-        val m = Model(centroids)
-        val means = vecs
-          .withColumn("cell", cellId(col("v"), m))
-          .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy(col("cell"), col("pos"))
-          .agg(avg(col("x").cast(DoubleType)).as("m"))
-          .collect()
-        val byCell = means.groupBy(_.getInt(0))
-        centroids = centroids.zipWithIndex.map { case (old, c) =>
-          byCell.get(c) match {
-            case Some(rows) =>
-              normalized(rows.sortBy(_.getInt(1)).toSeq.map(_.getDouble(2)))
-            case None => old // empty cell keeps its centroid
+        val nCells = centroids.size
+        val sums = vecs.select(cellId(col("v"), Model(centroids)), col("v"))
+          .queryExecution.toRdd
+          .mapPartitions { rows =>
+            val acc = CellSums.empty(nCells)
+            rows.foreach(r => acc.add(r.getInt(0), r.getArray(1)))
+            Iterator.single(acc)
           }
+          .collect()
+          .foldLeft(CellSums.empty(nCells))(_ merge _)
+        centroids = centroids.zipWithIndex.map { case (old, c) =>
+          sums.mean(c).map(normalized).getOrElse(old)
         }
       }
       Model(centroids)

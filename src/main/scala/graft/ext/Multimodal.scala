@@ -57,20 +57,25 @@ object Multimodal {
   // JDK audio format is accepted by exactly one shipped reader, so
   // provider order cannot change which one decodes), minus the per-call
   // scan and lock.
-  private lazy val audioReaders
-      : Seq[javax.sound.sampled.spi.AudioFileReader] = {
+  private lazy val audioReaders =
+    audioProviders(classOf[javax.sound.sampled.spi.AudioFileReader])
+  private lazy val audioWriters =
+    audioProviders(classOf[javax.sound.sampled.spi.AudioFileWriter])
+
+  /** The class loader audio SPI providers load through: the thread's
+    * context loader — inside a Spark task the executor loader, which also
+    * sees the application's jars — else the system loader, which does
+    * not (it is also what `AudioSystem`'s own bootstrap loader falls back
+    * to). */
+  private[graft] def spiLoader(): ClassLoader =
+    Option(Thread.currentThread.getContextClassLoader)
+      .getOrElse(ClassLoader.getSystemClassLoader)
+
+  /** Every installed provider of `service`, the JDK's and the
+    * application's, through [[spiLoader]]. */
+  private[graft] def audioProviders[T](service: Class[T]): Seq[T] = {
     import scala.jdk.CollectionConverters._
-    java.util.ServiceLoader
-      .load(classOf[javax.sound.sampled.spi.AudioFileReader],
-        classOf[javax.sound.sampled.AudioSystem].getClassLoader)
-      .iterator().asScala.toSeq
-  }
-  private lazy val audioWriters
-      : Seq[javax.sound.sampled.spi.AudioFileWriter] = {
-    import scala.jdk.CollectionConverters._
-    java.util.ServiceLoader
-      .load(classOf[javax.sound.sampled.spi.AudioFileWriter],
-        classOf[javax.sound.sampled.AudioSystem].getClassLoader)
+    java.util.ServiceLoader.load(service, spiLoader())
       .iterator().asScala.toSeq
   }
 

@@ -94,7 +94,10 @@ object TextStats {
     * built every shingle STRING through interpreted per-window lambdas —
     * on the curate rule filter that dominated the whole projection.
     * Values identical to the string form absent a within-doc 64-bit gram
-    * fold collision (the q62/q78 hash-equality caveat). */
+    * fold collision (the q62/q78 hash-equality caveat).
+    * `repetitionRatio(NULL)` is NULL (the HOF form returned 0.0): a
+    * missing text has no repetition to measure, so a rule filter on it
+    * drops the row unless the caller coalesces. */
   def repetitionRatio(text: Column, n: Int = 3): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.GramRepetition(

@@ -152,10 +152,13 @@ object MinHashAgg {
   * this to carry (shset, sig) in ONE narrow cached projection instead of
   * a sets cache plus a shuffled signature cache.
   *
-  * Empty array → all −1 (the aggregate's fully-empty densification);
-  * callers that previously relied on `explode` DROPPING empty-set docs
-  * must filter `size(shset) > 0` themselves. Null elements cannot occur
-  * (shingle-hash arrays are containsNull = false).
+  * Empty array → NULL. An empty shingle set has no signature: the
+  * aggregate never sees such a doc (`explode` drops it), and an all −1
+  * densification would look like a valid signature and bucket every
+  * empty doc together. Callers drop blank text first
+  * (`Dedup.shingleSets` keeps `rlike("\\S")` rows, which always have a
+  * shingle). Null elements cannot occur (shingle-hash arrays are
+  * containsNull = false).
   */
 case class MinHashArray(child: Expression, k: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
@@ -177,11 +180,14 @@ case class MinHashArray(child: Expression, k: Int)
             s"hashes), got ${other.sql}")
     }
 
+  override def nullable: Boolean = true
+
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val n = arr.numElements()
+    if (n == 0) return null
     val buf = Array.fill(k)(Long.MaxValue)
     var i = 0
-    val n = arr.numElements()
     while (i < n) {
       MinHashOph.update(buf, k, arr.getLong(i))
       i += 1

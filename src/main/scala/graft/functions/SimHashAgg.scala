@@ -103,11 +103,11 @@ object SimHashAgg {
   * the signature is a pure per-row function of the token-hash multiset,
   * so computing it needs NO shuffle (guide §2.4 — remove shuffles
   * outright; the r19 twin of [[MinHashArray]]). NULL elements are
-  * skipped exactly as the aggregate skips NULL inputs; an empty (or
-  * all-null) array yields signature 0L — callers that relied on
-  * `explode` dropping tokenless docs must filter them out themselves
-  * (a genuine document can also legitimately hash to 0L, so 0 is NOT
-  * an empty-doc marker). */
+  * skipped exactly as the aggregate skips NULL inputs. An empty (or
+  * all-null) array yields NULL: a tokenless doc has no signature, and
+  * 0L would pass for one (a genuine document can hash to 0L too) and
+  * cluster with every doc whose bit-majorities all tie low. Callers drop
+  * tokenless docs first (`Dedup.simHash` keeps `rlike("\\S")` rows). */
 case class SimHashArray(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -126,6 +126,8 @@ case class SimHashArray(child: Expression)
             s"hashes), got ${other.sql}")
     }
 
+  override def nullable: Boolean = true
+
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     val counts = new Array[Long](64)
@@ -141,6 +143,7 @@ case class SimHashArray(child: Expression)
       }
       i += 1
     }
+    if (n == 0L) return null
     var sig = 0L
     var j = 0
     while (j < 64) {

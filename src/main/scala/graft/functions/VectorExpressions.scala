@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
@@ -86,6 +87,118 @@ case class VecDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)
+}
+
+/** Codegen'd nearest-centroid (IVF cell) assignment: the 0-based index of
+  * the centroid with the greatest cosine to the vector. One pass computes
+  * `‖v‖` once, then the k centroid dots in a primitive loop. The Column
+  * form (`array_position(array_max(sims), …) − 1` over k `VecDot / norm`
+  * cosines) needs a higher-order function to bind the sims once, which
+  * Spark does not code-generate: it runs interpreted and re-evaluates
+  * the norm once per centroid.
+  *
+  * Same answer as that Column form, bit for bit: each cosine is
+  * `dot / ‖v‖` with [[VecDot]]'s sequential accumulation (null elements
+  * contribute 0; lengths may differ — the overlap is used); a null or
+  * zero-norm vector scores 0 against every centroid and lands in cell 0;
+  * NaN orders greatest (Spark's double ordering), and the first maximum
+  * wins, with -0.0 equal to 0.0. `centroids` are driver-side literals
+  * (k × dim doubles, normally unit-norm); with no centroids the result is
+  * null. */
+case class VecCellId(child: Expression, centroids: Seq[Seq[Double]])
+    extends UnaryExpression with Serializable {
+
+  @transient private lazy val cs: Array[Array[Double]] =
+    centroids.map(_.toArray).toArray
+
+  override def dataType: DataType = IntegerType
+
+  override def nullable: Boolean = centroids.isEmpty
+
+  override def prettyName: String = "vec_cell_id"
+
+  override def toString: String =
+    s"$prettyName($child, ${centroids.size} centroids)"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"vec_cell_id needs an array<float|double> input, got ${other.sql}")
+  }
+
+  private def floats: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def eval(input: InternalRow): Any =
+    if (centroids.isEmpty) null
+    else VecCellId.assign(child.eval(input).asInstanceOf[ArrayData], floats, cs)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (centroids.isEmpty) {
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        int ${ev.value} = -1;""")
+    } else {
+      val c = child.genCode(ctx)
+      val ref = ctx.addReferenceObj("centroids", cs, "double[][]")
+      ev.copy(code = code"""
+        ${c.code}
+        int ${ev.value} = graft.functions.VecCellId$$.MODULE$$.assign(
+          ${c.isNull} ? null : ${c.value}, ${floats.toString}, $ref);""",
+        isNull = FalseLiteral)
+    }
+
+  override protected def withNewChildInternal(newChild: Expression): VecCellId =
+    copy(child = newChild)
+}
+
+object VecCellId {
+
+  /** The kernel behind [[VecCellId]] (interpreted and generated code share
+    * it). `v` null → cell 0. */
+  def assign(v: ArrayData, floats: Boolean, cs: Array[Array[Double]]): Int = {
+    if (v == null) return 0
+    val n = v.numElements()
+    val x = new Array[Double](n)
+    var hasNull = false
+    var nn = 0.0
+    var i = 0
+    while (i < n) {
+      if (v.isNullAt(i)) hasNull = true
+      else {
+        val xi = if (floats) v.getFloat(i).toDouble else v.getDouble(i)
+        x(i) = xi
+        nn += xi * xi
+      }
+      i += 1
+    }
+    val norm = math.sqrt(nn)
+    // Spark's `norm > 0` is TRUE for NaN: only an exact zero scores 0
+    if (norm == 0.0) return 0
+    var best = 0
+    var bestSim = 0.0
+    var j = 0
+    while (j < cs.length) {
+      val c = cs(j)
+      val len = math.min(n, c.length)
+      var d = 0.0
+      var p = 0
+      // a null element is skipped, not added as 0.0 * c: VecDot's exact sum
+      if (!hasNull) while (p < len) { d += x(p) * c(p); p += 1 }
+      else while (p < len) {
+        if (!v.isNullAt(p)) d += x(p) * c(p)
+        p += 1
+      }
+      val s = d / norm
+      if (j == 0 || (!bestSim.isNaN && (s.isNaN || s > bestSim))) {
+        best = j
+        bestSim = s
+      }
+      j += 1
+    }
+    best
+  }
 }
 
 /** Codegen'd squared L2 distance — [[VecDot]]'s twin for the PQ/IVF hot

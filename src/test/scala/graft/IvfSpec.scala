@@ -20,6 +20,41 @@ class IvfSpec extends SparkSpec {
     }
   }
 
+  private def assertClose(got: Ivf.Model, want: Ivf.Model, what: String) = {
+    assert(got.centroids.map(_.size) == want.centroids.map(_.size), what)
+    got.centroids.flatten.zip(want.centroids.flatten).foreach { case (g, w) =>
+      assert(math.abs(g - w) <= 1e-12, s"$what: $g vs $w")
+    }
+  }
+
+  test("train matches the posexplode/groupBy Lloyd update it replaced") {
+    for ((k, iters) <- Seq((8, 2), (16, 3)))
+      assertClose(Ivf.train(emb, "vec_id", "embedding", k, iters),
+        IvfReference.train(emb, "vec_id", "embedding", k, iters),
+        s"k=$k iters=$iters")
+  }
+
+  test("a cell that receives no rows keeps its centroid") {
+    // give the second init row the first init row's vector: their
+    // centroids tie exactly, the first maximum takes every row, and the
+    // second cell stays empty through the one iteration
+    val base = emb.select("vec_id", "embedding").filter(col("vec_id") < 60)
+    val init = base.orderBy(xxhash64(col("vec_id")), col("vec_id"))
+      .select("vec_id").as[Long].take(2)
+    val firstVec = base.filter(col("vec_id") === init(0))
+      .select("embedding").head().get(0)
+    val corpus = base.withColumn("embedding",
+      when(col("vec_id") === init(1), typedlit(firstVec.asInstanceOf[
+        scala.collection.Seq[Float]].toSeq)).otherwise(col("embedding")))
+    val m = Ivf.train(corpus, "vec_id", "embedding", k = 4, iters = 1)
+    val v = firstVec.asInstanceOf[scala.collection.Seq[Float]].map(_.toDouble)
+    val n = math.sqrt(v.map(x => x * x).sum)
+    assert(m.centroids(1) == v.map(_ / n).toSeq)
+    assert(m.centroids(0) != m.centroids(1))
+    assertClose(m, IvfReference.train(corpus, "vec_id", "embedding",
+      k = 4, iters = 1), "empty cell")
+  }
+
   test("cell assignment is total and within range") {
     val m = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     val cells = emb.select(Ivf.cellId(col("embedding"), m).as("c"))

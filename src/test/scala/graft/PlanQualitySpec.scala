@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, LambdaFunction}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{AsOfJoin, Sampling}
@@ -523,5 +525,65 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("Exchange hashpartitioning") &&
       !p.contains("Exchange rangepartitioning"), p)
     assert(!p.contains("Join"), p)
+  }
+
+  test("Ivf.cellId is one native expression: no lambda or higher-order " +
+    "function in its plan") {
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    val m = graft.ext.Ivf.train(emb, "vec_id", "embedding", k = 4, iters = 1)
+    def exprsOf(cell: Column) = emb
+      .select(cell.as("cell")).queryExecution.optimizedPlan
+      .flatMap(_.expressions)
+    def hasHof(es: Seq[Expression]) = es.exists(_.exists {
+      case _: LambdaFunction | _: HigherOrderFunction => true
+      case _ => false
+    })
+    val cv = col("embedding").cast("array<double>")
+    val native = exprsOf(graft.ext.Ivf.cellId(cv, m))
+    assert(!hasHof(native), native)
+    assert(native.exists(_.exists(_.isInstanceOf[graft.functions.VecCellId])))
+    // the probe sees the Column form's transform(...) lambda
+    assert(hasHof(exprsOf(IvfReference.cellId(cv, m))))
+  }
+
+  test("an Ivf.train Lloyd iteration is one job, one stage, no exchange") {
+    // a local input has no exchange of its own upstream, so every stage
+    // train runs is its own work
+    val emb = Tables.load(spark, sfDir, "embeddings")
+      .select("vec_id", "embedding")
+    val local = spark.createDataFrame(emb.collectAsList(), emb.schema)
+    val key = "graft.test.probe"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      private def tagged(p: java.util.Properties) =
+        p != null && p.getProperty(key) != null
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (tagged(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (tagged(e.properties)) stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten
+            + e.taskMetrics.shuffleReadMetrics.totalBytesRead)
+    }
+    def probe(iters: Int): (Int, Int) = {
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+      jobs.set(0); stages.clear()
+      spark.sparkContext.setLocalProperty(key, "ivf-train")
+      try graft.ext.Ivf.train(local, "vec_id", "embedding", k = 8, iters)
+      finally spark.sparkContext.setLocalProperty(key, null)
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+      (jobs.get, stages.size)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (j1, s1) = probe(1)
+      val (j3, s3) = probe(3)
+      assert(j3 - j1 == 2 && s3 - s1 == 2, s"jobs $j1/$j3, stages $s1/$s3")
+      assert(j1 == s1, s"jobs $j1, stages $s1")
+      assert(shuffleBytes.get == 0L)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

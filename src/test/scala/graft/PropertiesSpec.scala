@@ -263,6 +263,87 @@ class PropertiesSpec extends SparkSpec {
     assert(cmp == 0)
   }
 
+  test("vec_cell_id equals the array_position(array_max(sims)) Column form") {
+    // elements from a small integer range make exact ties (equal cosines,
+    // 0.0 vs -0.0, duplicate centroids) common; nulls, NaN and ±Inf ride
+    // along, and vectors may be shorter or longer than the centroids
+    val elem: Gen[Option[Double]] = Gen.frequency(
+      6 -> Gen.chooseNum(-2, 2).map(i => Some(i.toDouble)),
+      6 -> Gen.chooseNum(-1.0, 1.0).map(Some(_)),
+      1 -> Gen.const(None),
+      1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity).map(Some(_)))
+    val caseGen = for {
+      dim <- Gen.chooseNum(1, 8)
+      k <- Gen.chooseNum(1, 32)
+      base <- Gen.listOfN(k, Gen.listOfN(dim, Gen.frequency(
+        9 -> Gen.chooseNum(-2, 2).map(_.toDouble),
+        9 -> Gen.chooseNum(-1.0, 1.0),
+        1 -> Gen.const(Double.NaN))))
+      dupes <- Gen.listOfN(k, Gen.chooseNum(0, k - 1))
+      vecs <- Gen.listOfN(24, Gen.frequency(
+        1 -> Gen.const(None),
+        1 -> Gen.const(Some(Seq.fill(dim)(Some(0.0)))),
+        8 -> Gen.chooseNum(0, dim + 2).flatMap(n =>
+          Gen.listOfN(n, elem).map(Some(_)))))
+    } yield {
+      // every third centroid copies an earlier one: exact duplicate ties
+      val cents = base.indices.map(j =>
+        if (j % 3 == 2) base(dupes(j) % j) else base(j))
+      (cents.map(_.toSeq), vecs)
+    }
+    def mismatches(cents: Seq[Seq[Double]],
+        vecs: Seq[Option[Seq[Option[Double]]]]): Long = {
+      val m = graft.ext.Ivf.Model(cents)
+      val df = vecs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("i", "vd")
+        .withColumn("vf", col("vd").cast("array<float>"))
+      Seq("vd", "vf").map { c =>
+        df.select(
+            graft.ext.Ivf.cellId(col(c), m).as("got"),
+            IvfReference.cellId(col(c), m).as("want"))
+          .filter(!col("got").eqNullSafe(col("want"))).count()
+      }.sum
+    }
+    // both the generated and the interpreted path share one kernel; pin both
+    def bothModes(cents: Seq[Seq[Double]],
+        vecs: Seq[Option[Seq[Option[Double]]]]): Boolean =
+      mismatches(cents, vecs) == 0 && {
+        val keys = Seq("spark.sql.codegen.wholeStage",
+          "spark.sql.codegen.factoryMode")
+        val prev = keys.map(spark.conf.getOption)
+        spark.conf.set(keys(0), "false")
+        spark.conf.set(keys(1), "NO_CODEGEN")
+        try mismatches(cents, vecs) == 0
+        finally keys.zip(prev).foreach {
+          case (key, Some(v)) => spark.conf.set(key, v)
+          case (key, None) => spark.conf.unset(key)
+        }
+      }
+    check("vec_cell_id parity", Prop.forAll(caseGen) { case (cents, vecs) =>
+      bothModes(cents, vecs)
+    })
+    // the named edge cases, each on its own against fixed centroids
+    val cents = Seq(Seq(0.0, 1.0), Seq(0.0, -1.0), Seq(0.6, 0.8),
+      Seq(0.6, 0.8), Seq(1.0, 0.0))
+    val edges: Seq[Option[Seq[Option[Double]]]] = List(
+      None,                                        // null vector
+      Some(List(None, Some(1.0))),                 // null element
+      Some(List(None, None)),                      // all-null elements
+      Some(List(Some(0.0), Some(0.0))),            // zero vector
+      Some(Nil),                                   // empty vector
+      Some(List(Some(Double.NaN), Some(1.0))),     // NaN element
+      Some(List(Some(Double.PositiveInfinity), Some(1.0))),
+      Some(List(Some(Double.NegativeInfinity), Some(0.0))),
+      Some(List(Some(1.0))),                       // shorter than centroids
+      Some(List(Some(0.0), Some(1.0), Some(5.0))), // longer than centroids
+      Some(List(Some(1.0), Some(0.0))),            // 0.0 vs -0.0 tie
+      Some(List(Some(3.0), Some(4.0))))            // duplicate-centroid tie
+    assert(bothModes(cents, edges))
+    // no centroids: no cell
+    assert(spark.range(1).select(graft.ext.Ivf.cellId(array(lit(1.0)),
+      graft.ext.Ivf.Model(Nil))).head().isNullAt(0))
+  }
+
   test("sketch aggs reject non-BIGINT input at analysis time") {
     GraftExtensions.register(spark)
     Seq(1).toDF("i").createOrReplaceTempView("ints")
@@ -296,13 +377,11 @@ class PropertiesSpec extends SparkSpec {
         .head().getSeq[Long](1)
       viaArray == viaAgg
     })
-    // empty set: the array form densifies to all -1; callers filter
-    // size(shset) > 0 to reproduce explode's drop — pin the sentinel so
-    // a silent behavior change there cannot hide
+    // empty set: no signature (NULL), never a valid-looking all -1 one
     val empty = Seq((1L, Seq.empty[Long])).toDF("id", "shset")
       .select(graft.functions.MinHashArray.minhash(col("shset"), 8).as("sig"))
-      .head().getSeq[Long](0)
-    assert(empty == Seq.fill(8)(-1L))
+    assert(empty.schema("sig").nullable)
+    assert(empty.head().isNullAt(0))
   }
 
   test("simhash_array equals simhash_agg over the exploded elements") {
@@ -321,6 +400,12 @@ class PropertiesSpec extends SparkSpec {
         .head().getLong(1)
       viaArray == viaAgg
     })
+    // no tokens (empty or all-null): no signature (NULL), never 0L
+    val empty = Seq((1L, Seq.empty[Option[Long]]), (2L, Seq(None, None)))
+      .toDF("id", "hs")
+      .select(graft.functions.SimHashArray.simhash(col("hs")).as("sig"))
+    assert(empty.schema("sig").nullable)
+    assert(empty.collect().forall(_.isNullAt(0)))
   }
 
   test("gram_repetition equals the string-shingle HOF formulation") {

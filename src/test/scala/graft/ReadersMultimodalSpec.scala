@@ -145,6 +145,38 @@ class ReadersMultimodalSpec extends SparkSpec {
     assert(feats(2L).duration_ms != 1000L) // stub-derived, not a real parse
   }
 
+  test("multimodal: audio SPI providers load through the context class " +
+    "loader, else the system loader") {
+    // only this child loader registers the probe reader
+    val dir = Files.createTempDirectory("spi")
+    val services = dir.resolve("META-INF/services")
+    Files.createDirectories(services)
+    Files.write(services.resolve(
+      classOf[javax.sound.sampled.spi.AudioFileReader].getName),
+      classOf[ProbeAudioReader].getName.getBytes("UTF-8"))
+    val child = new java.net.URLClassLoader(Array(dir.toUri.toURL),
+      getClass.getClassLoader)
+    def readers = Multimodal
+      .audioProviders(classOf[javax.sound.sampled.spi.AudioFileReader])
+      .map(_.getClass.getName)
+    val thread = Thread.currentThread
+    val prev = thread.getContextClassLoader
+    try {
+      thread.setContextClassLoader(child)
+      assert(Multimodal.spiLoader() eq child)
+      assert(readers.contains(classOf[ProbeAudioReader].getName))
+      // the JDK's own readers are still found (WAV lives there)
+      assert(readers.exists(_.contains("Wave")), readers)
+      thread.setContextClassLoader(null)
+      assert(Multimodal.spiLoader() eq ClassLoader.getSystemClassLoader)
+      assert(!readers.contains(classOf[ProbeAudioReader].getName))
+      assert(readers.exists(_.contains("Wave")), readers)
+    } finally {
+      thread.setContextClassLoader(prev)
+      child.close()
+    }
+  }
+
   test("multimodal: decompression-bomb image falls back to the stub") {
     // hand-crafted PNG header declaring 60000x60000 — ImageIO reads the
     // dimensions from the IHDR without decoding; the guard must refuse
