@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
@@ -185,9 +186,10 @@ object Dedup {
     * leave no CacheManager entries, and the result's own blocks are
     * GC-released once the caller drops the frame.
     *
-    * Shuffles: signature agg (by id), band explode + self-join (by band
-    * hash), two hash joins to re-attach shingle sets. No global cross
-    * join anywhere. */
+    * Shuffles: the signature-group window and the bucket-count window
+    * (both cached by one banding action), the band self-join and the
+    * pair dedup, two joins to re-attach shingle sets (small sides
+    * broadcast at runtime). No global cross join anywhere. */
   def minHashLsh(docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
       minJaccard: Double = 0.5, maxBucketSize: Int = 1000): DataFrame = {
@@ -222,24 +224,30 @@ object Dedup {
     // otherwise launch its branch stages concurrently and they'd race to
     // fill the cache, recomputing the shingle pipeline per branch
     stageT("lsh", "sets+signatures") { keyed.count() }
-    // min_by carries the rep's own sig array out of the SAME aggregate
-    // (the sigReps shape): recovering it with a left_semi join back
-    // against keyed paid one extra shuffle of the full keyed
-    // signature set on the hottest dedup path
-    val clusters = keyed.groupBy(col("__sk1"), col("__sk2"))
-      .agg(min(col("id")).as("rep"),
-        min_by(col("sig"), col("id")).as("__repsig"))
-    val dupCand = keyed
-      .join(clusters.select("__sk1", "__sk2", "rep"), Seq("__sk1", "__sk2"))
-      .filter(col("id") =!= col("rep"))
+    // rep = min(id) over ONE window on the signature key: the same frame
+    // yields the member→rep pairs (id ≠ rep) and the representatives with
+    // their own sig arrays (id = rep) — no aggregate, and no join back
+    // against keyed to re-attach the rep to each member.
+    // Skew bound: a window has no partial aggregation, so one task holds a
+    // whole signature group (every exact copy of a document), as the
+    // member join of the aggregate form already did; the rows are ids and
+    // one sig array each, and the task only takes a running min.
+    val withRep = keyed.select(col("id"), col("sig"),
+      min(col("id")).over(Window.partitionBy(col("__sk1"), col("__sk2")))
+        .as("rep"))
+      .persist()
+    val dupCand = withRep.filter(col("id") =!= col("rep"))
       .select(col("rep").as("a"), col("id").as("b"))
 
     // band-block only distinct signatures, skipping non-discriminating
-    // (over-full) buckets — their members remain reachable via other bands
-    val reps = clusters.select(col("rep").as("id"), col("__repsig").as("sig"))
-    val banded = bandify(reps, bands, rowsPerBand).persist()
-    stageT("lsh", "banding") { banded.count() }
-    val bounded = boundBuckets(banded, maxBucketSize)
+    // (over-full) buckets — their members remain reachable via other bands.
+    // The ONE banding action fills both caches (bounded's plan reads
+    // withRep's), so neither window runs again for the candidates below.
+    val reps = withRep.filter(col("id") === col("rep"))
+      .select(col("id"), col("sig"))
+    val bounded = boundBuckets(bandify(reps, bands, rowsPerBand),
+      maxBucketSize).persist()
+    stageT("lsh", "banding") { bounded.count() }
     val bandCand = bounded
       .select(col("band"), col("band_hash"), col("id").as("a"))
       .join(bounded.select(col("band"), col("band_hash"), col("id").as("b")),
@@ -265,7 +273,7 @@ object Dedup {
           .withColumn("jaccard", Shingles.jaccard(col("sh_a"), col("sh_b")))
           .filter(col("jaccard") >= minJaccard)
           .select(col("a"), col("b"), col("jaccard"))) }
-    keyed.unpersist(); banded.unpersist()
+    keyed.unpersist(); withRep.unpersist(); bounded.unpersist()
     result
   }
 
@@ -654,13 +662,18 @@ object Dedup {
         .as(Seq("band", "band_hash")))
 
   /** Drop band buckets hotter than `cap`: they carry no discriminating
-    * information and their members remain reachable via other bands. */
+    * information and their members remain reachable via other bands.
+    * One count over a window on the bucket key instead of an aggregate
+    * joined back: the frame is read once, and no join.
+    * Skew bound: a window has no partial aggregation, so one task holds a
+    * whole bucket, hot ones included, as the bucket join of the aggregate
+    * form already did; its rows are (band, band hash, id) and the task
+    * only counts them. */
   private def boundBuckets(banded: DataFrame, cap: Int): DataFrame =
-    banded.join(
-      banded.groupBy(col("band"), col("band_hash"))
-        .agg(count(lit(1)).as("__n")).filter(col("__n") <= cap)
-        .select(col("band"), col("band_hash")),
-      Seq("band", "band_hash"))
+    banded
+      .withColumn("__n", count(lit(1)).over(
+        Window.partitionBy(col("band"), col("band_hash"))))
+      .filter(col("__n") <= cap).drop("__n")
 
   /** One representative (min id) per distinct signature — the
     * duplicate-heavy-corpus guard: banding members individually would
@@ -692,10 +705,9 @@ object Dedup {
     // minHashLsh): a new copy of kept boilerplate matches the rep — and
     // rep verification (exact Jaccard vs the rep's shingle set) decides
     val reps = sigReps(sigsFromSets(sets, bands * rowsPerBand))
-    // snapshot before boundBuckets: it references the banded frame twice
-    // (scan side + bucket-count side), and unsnapshotted the whole kept
-    // shingle/MinHash pipeline would run twice when the caller
-    // materializes index.banded (minHashLsh persists for the same reason)
+    // snapshot before boundBuckets: unsnapshotted, every read of
+    // index.banded (one per increment) would re-run the whole kept
+    // shingle/MinHash pipeline
     val banded = graft.util.Caches.snapshot(
       bandify(reps, bands, rowsPerBand))
     val bounded = boundBuckets(banded, maxBucketSize)

@@ -25,6 +25,31 @@ object TextPipeline {
 
   final case class CurationResult(curated: DataFrame, stats: CurationStats)
 
+  /** The curate rule filter: keeps the docs whose normalized text
+    * ([[TextStats.normalizeText]]) has at least `minChars` characters,
+    * whose [[TextStats.qualityScore]] reaches `minQuality`, whose
+    * [[TextStats.repetitionRatio]] is at most `maxRepetition` (NULL text
+    * fails it) and, when `allowedLangs` is non-empty, whose
+    * [[TextStats.langId]] is one of them. A narrow filter, no new column:
+    * with the default `allowedLangs` every signal is a native one-pass
+    * expression. */
+  private[graft] def ruleFilter(
+      docs: DataFrame,
+      textCol: String,
+      minQuality: Double = 0.7,
+      maxRepetition: Double = 0.5,
+      minChars: Int = 50,
+      allowedLangs: Seq[String] = Nil): DataFrame = {
+    val t = col(textCol)
+    val langOk: Column =
+      if (allowedLangs.isEmpty) lit(true)
+      else TextStats.langId(t).isin(allowedLangs: _*)
+    docs.filter(length(TextStats.normalizeText(t)) >= minChars &&
+      TextStats.qualityScore(t) >= minQuality &&
+      TextStats.repetitionRatio(t) <= maxRepetition &&
+      langOk)
+  }
+
   def curate(
       docs: DataFrame,
       idCol: String,
@@ -35,22 +60,14 @@ object TextPipeline {
       allowedLangs: Seq[String] = Nil,
       nearDupJaccard: Double = 0.8,
       computeStats: Boolean = true): CurationResult = {
-    val t = col(textCol)
-    val langOk: Column =
-      if (allowedLangs.isEmpty) lit(true)
-      else TextStats.langId(t).isin(allowedLangs: _*)
     // per-stage counts are extra actions; callers that only want the
     // curated frame skip them (-1 sentinel)
     def maybeCount(df: DataFrame): Long = if (computeStats) df.count() else -1L
 
     import graft.util.Stages.{time => stage}
     val input = maybeCount(docs)
-    val filtered0 = docs
-      .withColumn("__norm", TextStats.normalizeText(t))
-      .filter(length(col("__norm")) >= minChars &&
-        TextStats.qualityScore(t) >= minQuality &&
-        TextStats.repetitionRatio(t) <= maxRepetition &&
-        langOk)
+    val filtered0 = ruleFilter(docs, textCol, minQuality, maxRepetition,
+      minChars, allowedLangs)
     // `filtered` has exactly ONE downstream consumer (the exact-dedup
     // window below), so its persist+count buys nothing but the
     // afterRuleFilter stat — with stats off, skip the extra corpus
@@ -63,12 +80,15 @@ object TextPipeline {
       else -1L
 
     // exact dedup: survivors are min-id per content hash. Same rule as
-    // [[Dedup.exactDedup]] (min id per md5(__norm)) expressed as ONE
-    // shuffle: rank rows within their content-hash group and keep rank 1
-    // — ids are unique, so the rank-1 row IS the row the old
-    // groupBy(min id) + semi-join kept, at a third of the shuffles
+    // [[Dedup.exactDedup]] (min id per md5 of the normalized text)
+    // expressed as ONE shuffle: rank rows within their content-hash group
+    // and keep rank 1 — ids are unique, so the rank-1 row IS the row the
+    // old groupBy(min id) + semi-join kept, at a third of the shuffles
     // (r18 opt; the groupBy + semi-join form shuffled the corpus three
-    // times: hash agg, then both SMJ sides on the id).
+    // times: hash agg, then both SMJ sides on the id). The window keys on
+    // the 32-char md5 alone: the normalized text itself is never a column,
+    // so neither the exchange nor the `exact` cache carries a second copy
+    // of every surviving text.
     //
     // PRECONDITION (the curate contract): idCol is unique per row. With
     // duplicate ids the old form kept EVERY row bearing the surviving
@@ -83,8 +103,8 @@ object TextPipeline {
     // alternative (salted two-level min + a semi-join on the survivor
     // ids) pays TWO more corpus-scale shuffles on every healthy corpus
     // to shave one straggler task on a pathological one.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col("__norm"))).orderBy(col(idCol))
+    val w = Window.partitionBy(md5(TextStats.normalizeText(col(textCol))))
+      .orderBy(col(idCol))
     val exact = filtered
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
@@ -99,10 +119,11 @@ object TextPipeline {
     // blocks GC-release once the caller drops the frame.
     val near = stage("curate", "near-dedup") { graft.util.Caches.snapshot(
       Dedup.dedupNearDuplicates(exact, idCol, textCol,
-        minJaccard = nearDupJaccard).drop("__norm")) }
-    val afterNear0 = near.count() // cheap: scans the snapshot blocks
+        minJaccard = nearDupJaccard)) }
+    // cheap (scans the snapshot blocks) but still a job: only run it when
+    // the stat is wanted
+    val afterNear = maybeCount(near)
     exact.unpersist()
-    val afterNear = if (computeStats) afterNear0 else -1L
 
     CurationResult(near,
       CurationStats(input, afterFilter, afterExact, afterNear))

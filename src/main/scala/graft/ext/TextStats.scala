@@ -2,24 +2,30 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Text analysis for training-data pipelines (north-star ops; SURVEY §2.11):
-  * word/char/token counts, quality scoring, n-gram language ID — all pure
-  * Column algebra (codegen'd, no UDFs), so every operator runs inside
-  * whole-stage codegen and scales linearly with one pass over the text.
+  * word/char/token counts, quality scoring, n-gram language ID — Column
+  * algebra and native codegen'd expressions (no UDFs), so every operator
+  * runs inside whole-stage codegen and scales linearly with one pass over
+  * the text.
   */
 object TextStats {
 
-  /** Whitespace-token count as the number of `\S+` runs; empty/blank/null
-    * text counts 0. Counting matches — not `size(split(trim(x), "\\s+"))`
-    * — matters twice: split keeps leading/trailing empty tokens when the
-    * text starts/ends with non-space whitespace (Spark `trim` strips only
-    * spaces, so "a b\n" would count 3), and regexp_count needs no array
-    * materialization. DuckDB mirror: `len(regexp_extract_all(t, '\S+'))`. */
-  def nWords(text: Column): Column =
-    when(text.isNull, lit(0L))
-      .otherwise(regexp_count(text, lit("\\S+")).cast(LongType))
+  /** Whitespace-token count as the number of `\S+` runs (Java regex
+    * `\s`, `[ \t\n\x0B\f\r]`); empty/blank text counts 0 and
+    * `nWords(NULL)` is 0, as before. Counting runs — not
+    * `size(split(trim(x), "\\s+"))` — matters because split keeps
+    * leading/trailing empty tokens when the text starts/ends with
+    * non-space whitespace (Spark `trim` strips only spaces, so "a b\n"
+    * would count 3). One native pass over the bytes
+    * ([[graft.functions.TextQuality]]); `regexp_count` is no cheaper than
+    * an array: Spark plans it as `size(regexp_extract_all(...))`. Column
+    * form: `TextStatsReference.nWords` (tests). DuckDB mirror:
+    * `len(regexp_extract_all(t, '\S+'))`. */
+  def nWords(text: Column): Column = Bridge.column(
+    graft.functions.TextQuality(Bridge.expression(text), words = true))
 
   /** Count of regex-token matches — a BPE-ish tokenizer proxy
     * (letter runs or single digits). */
@@ -47,17 +53,15 @@ object TextStats {
 
   /** Heuristic quality score in [0,1]: additive rubric over word count,
     * digit ratio and length (the length/punct/stopword-ratio style scoring
-    * used in LLM data curation). Deterministic: thresholds on exact
-    * integer counts. */
-  def qualityScore(text: Column): Column = {
-    val words = nWords(text)
-    val digitRatio = when(length(text) > 0,
-      digitCount(text).cast(DoubleType) / length(text).cast(DoubleType))
-      .otherwise(lit(1.0))
-    (when(words.between(20, 10000), lit(0.5)).otherwise(lit(0.0)) +
-      when(digitRatio < 0.3, lit(0.3)).otherwise(lit(0.0)) +
-      when(length(text) >= 100, lit(0.2)).otherwise(lit(0.0)))
-  }
+    * used in LLM data curation): 0.5 for 20–10000 `\S+` words, + 0.3 when
+    * ASCII digits are under 30% of the characters (an empty text's ratio
+    * counts as 1.0), + 0.2 for 100+ characters. Deterministic: thresholds
+    * on exact integer counts. `qualityScore(NULL)` is 0.0, as before.
+    * One native pass computes all three counts
+    * ([[graft.functions.TextQuality]]). Column form:
+    * `TextStatsReference.qualityScore` (tests). */
+  def qualityScore(text: Column): Column = Bridge.column(
+    graft.functions.TextQuality(Bridge.expression(text), words = false))
 
   /** Flesch reading-ease score: 206.835 − 1.015·(words/sentences) −
     * 84.6·(syllables/words) — the classic readability signal (90+ ≈
@@ -98,10 +102,8 @@ object TextStats {
     * `repetitionRatio(NULL)` is NULL (the HOF form returned 0.0): a
     * missing text has no repetition to measure, so a rule filter on it
     * drops the row unless the caller coalesces. */
-  def repetitionRatio(text: Column, n: Int = 3): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.GramRepetition(
-        org.apache.spark.sql.graftbridge.Bridge.expression(text), n))
+  def repetitionRatio(text: Column, n: Int = 3): Column = Bridge.column(
+    graft.functions.GramRepetition(Bridge.expression(text), n))
 
   /** PII-style redaction: emails, 16-digit card-ish numbers, then
     * US-format phone numbers, replaced with typed placeholders. Regexes are
@@ -114,12 +116,15 @@ object TextStats {
     regexp_replace(card, "\\b[0-9]{3}-[0-9]{3}-[0-9]{4}\\b", "<PHONE>")
   }
 
-  /** Canonical text normalization for dedup/tokenization: lowercase,
-    * non-alphanumerics → space, whitespace collapsed, trimmed. One
-    * codegen'd projection. */
-  def normalizeText(c: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(lower(c), "[^a-z0-9\\s]", " "), "\\s+", " "))
+  /** Canonical text normalization for dedup/tokenization: the
+    * `[a-z0-9]+` runs of `lower(text)` joined by single spaces — lowercase,
+    * every other character (whitespace, punctuation, any non-ASCII code
+    * point left after lowercasing) separates runs, no leading or trailing
+    * space. `normalizeText(NULL)` is NULL, as before. One native pass over
+    * the bytes ([[graft.functions.NormalizeText]]). Column form:
+    * `TextStatsReference.normalizeText` (tests). */
+  def normalizeText(c: Column): Column = Bridge.column(
+    graft.functions.NormalizeText(Bridge.expression(c)))
 
   /** Share of whitespace tokens that are `lang` stopwords — a standard
     * quality/fluency signal. Deterministic: integer counts, one double
@@ -233,7 +238,6 @@ object TextStats {
   def winnowingFingerprintNative(docs: DataFrame, idCol: String,
       textCol: String, k: Int = 3, window: Int = 4,
       exact: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     docs.select(col(idCol), Bridge.column(graft.functions.WinnowHashes(
       Bridge.expression(col(textCol)), k, window, exact))
       .as("fingerprint"))

@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,6 +29,11 @@ private[functions] object GramHashing {
   private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
       c == '\r'
+
+  /** [[isWs]] over one UTF-8 byte: the class is pure ASCII, so no byte of
+    * a multi-byte code point is ever in it. */
+  def isWsByte(b: Byte): Boolean =
+    b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
   /** Per-token 64-bit hashes of the doc's tokens (maximal non-whitespace
     * runs; blank text yields zero tokens — never a phantom "" token). */
@@ -253,6 +260,168 @@ case class GramRepetition(child: Expression, n: Int)
       newChild: Expression): GramRepetition = copy(child = newChild)
 }
 
+/** Canonical dedup text in ONE pass over the UTF-8 bytes: the
+  * `[a-z0-9]+` runs of `lower(x)` joined by single spaces. That is
+  * exactly the Column form it replaces, `trim(regexp_replace(
+  * regexp_replace(lower(x), [^a-z0-9\s], " "), \s+, " "))` (regexes
+  * unescaped): every other code point, whitespace included, only ever
+  * separates runs. The Column form ran a lowercase copy plus two regex
+  * passes per row, twice on curate's rule filter (Catalyst pushes the
+  * filter below the projection).
+  *
+  * ASCII rows lowercase in the loop. A row with any non-ASCII byte is
+  * lowercased first with `UTF8String.toLowerCase()`, because lowercasing
+  * can produce ASCII: U+0130 → "i" + U+0307, U+212A (Kelvin) → "k" (over
+  * every code point, the only two). Spark's `lower` takes ICU's case
+  * mapping by default (`spark.sql.icu.caseMappings.enabled`) where this
+  * takes the JVM's; the two map both of those alike, and every non-ASCII
+  * output byte is a separator here, so the result is the same.
+  * NULL → NULL. */
+case class NormalizeText(child: Expression)
+    extends UnaryExpression with Serializable {
+
+  override def dataType: DataType = StringType
+
+  override def prettyName: String = "normalize_text"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"normalize_text needs a string input, got ${child.dataType.sql}")
+
+  override protected def nullSafeEval(input: Any): Any =
+    NormalizeText.normalize(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.NormalizeText$$.MODULE$$.normalize($c)")
+
+  override protected def withNewChildInternal(
+      newChild: Expression): NormalizeText = copy(child = newChild)
+}
+
+object NormalizeText {
+
+  /** The kernel behind [[NormalizeText]] (interpreted and generated code
+    * share it). */
+  def normalize(in: UTF8String): UTF8String = {
+    val s = if (in.isFullAscii) in else in.toLowerCase
+    val n = s.numBytes
+    // runs plus one space between runs never outgrow the input: each
+    // space stands for at least one separator byte
+    val out = new Array[Byte](n)
+    var len = 0
+    var gap = false
+    var i = 0
+    while (i < n) {
+      var b = s.getByte(i)
+      if (b >= 'A' && b <= 'Z') b = (b + ('a' - 'A')).toByte
+      if ((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')) {
+        if (gap && len > 0) { out(len) = ' '; len += 1 }
+        gap = false
+        out(len) = b
+        len += 1
+      } else gap = true // a non-ASCII byte is never [a-z0-9]
+      i += 1
+    }
+    UTF8String.fromBytes(out, 0, len)
+  }
+}
+
+/** The text-quality counters in ONE pass over the UTF-8 bytes: `\S+`
+  * word runs (whitespace is Java regex `\s`, `[ \t\n\x0B\f\r]`, all
+  * ASCII, so no multi-byte code point is ever whitespace), ASCII digits
+  * and the code-point count Spark's `length` returns. `words = true`
+  * yields the word count (BIGINT, the `regexp_count(x, '\S+')` it
+  * replaces); `words = false` yields the [[graft.ext.TextStats.qualityScore]]
+  * rubric (DOUBLE), summed in the Column form's order so the double is
+  * bit-identical. Never NULL: NULL text counts 0 words and scores 0.0,
+  * as the Column forms did. Valid UTF-8 input. */
+case class TextQuality(child: Expression, words: Boolean)
+    extends UnaryExpression with Serializable {
+
+  override def dataType: DataType = if (words) LongType else DoubleType
+
+  override def nullable: Boolean = false
+
+  override def prettyName: String =
+    if (words) "text_word_count" else "text_quality"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs a string input, got ${child.dataType.sql}")
+
+  override def eval(input: InternalRow): Any = {
+    val s = child.eval(input).asInstanceOf[UTF8String]
+    if (words) TextQuality.wordCount(s) else TextQuality.score(s)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val fn = if (words) "wordCount" else "score"
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.TextQuality$$.MODULE$$.$fn(${c.isNull} ? null : ${c.value});""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): TextQuality = copy(child = newChild)
+}
+
+object TextQuality {
+
+  /** `\S+` runs; NULL → 0. */
+  def wordCount(s: UTF8String): Long = {
+    if (s == null) return 0L
+    val n = s.numBytes
+    var words = 0L
+    var inWord = false
+    var i = 0
+    while (i < n) {
+      if (GramHashing.isWsByte(s.getByte(i))) inWord = false
+      else if (!inWord) { words += 1; inWord = true }
+      i += 1
+    }
+    words
+  }
+
+  /** 0.5 for 20–10000 words + 0.3 for a digit share under 0.3 (1.0 for
+    * empty text) + 0.2 for 100+ characters; NULL → 0.0. Characters step
+    * by `UTF8String.numBytesForFirstByte`, exactly as `numChars` does. */
+  def score(s: UTF8String): Double = {
+    if (s == null) return 0.0
+    val n = s.numBytes
+    var words = 0L
+    var digits = 0L
+    var chars = 0L
+    var inWord = false
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      chars += 1
+      if (b >= 0) {
+        if (GramHashing.isWsByte(b)) inWord = false
+        else {
+          if (!inWord) { words += 1; inWord = true }
+          if (b >= '0' && b <= '9') digits += 1
+        }
+        i += 1
+      } else {
+        if (!inWord) { words += 1; inWord = true }
+        i += UTF8String.numBytesForFirstByte(b)
+      }
+    }
+    val digitRatio =
+      if (chars > 0) digits.toDouble / chars.toDouble else 1.0
+    (if (words >= 20 && words <= 10000) 0.5 else 0.0) +
+      (if (digitRatio < 0.3) 0.3 else 0.0) +
+      (if (chars >= 100) 0.2 else 0.0)
+  }
+}
+
 /** Winnowing fingerprint selection (Schleimer et al., SIGMOD'03) in ONE
   * imperative pass per row: tokenize → per-position gram hash →
   * monotonic-deque sliding-window minima → first-occurrence dedup.
@@ -309,13 +478,11 @@ case class WinnowHashes(child: Expression, n: Int, window: Int, md5: Boolean)
       val ends = new scala.collection.mutable.ArrayBuilder.ofInt
       var i = 0
       val len = bytes.length
-      def ws(b: Byte): Boolean = b == ' ' || b == '\t' || b == '\n' ||
-        b == 0x0B || b == '\f' || b == '\r'
       while (i < len) {
-        while (i < len && ws(bytes(i))) i += 1
+        while (i < len && GramHashing.isWsByte(bytes(i))) i += 1
         if (i < len) {
           starts += i
-          while (i < len && !ws(bytes(i))) i += 1
+          while (i < len && !GramHashing.isWsByte(bytes(i))) i += 1
           ends += i
         }
       }

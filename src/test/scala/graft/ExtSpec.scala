@@ -381,6 +381,39 @@ class ExtSpec extends SparkSpec {
     assert(!res.curated.columns.contains("__norm"))
   }
 
+  test("curate with computeStats = false skips all three stat counts and " +
+    "returns the same rows") {
+    // the input, rule-filter and near-dedup counts are the only actions
+    // that differ between the modes; the dedup stages fill their caches
+    // the same way in both
+    val counts = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "count") counts.incrementAndGet()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    def run(stats: Boolean): (Int, Seq[org.apache.spark.sql.Row]) = {
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+      counts.set(0)
+      val res = graft.ext.TextPipeline.curate(docsWithDups, "doc_id", "text",
+        computeStats = stats)
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+      val n = counts.get
+      (n, res.curated.orderBy("doc_id").collect().toSeq)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (withStats, rows) = run(stats = true)
+      val (without, rowsNoStats) = run(stats = false)
+      assert(withStats - without == 3, s"$withStats vs $without count actions")
+      assert(rows.nonEmpty && rows == rowsNoStats)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   // ---------- similarity ----------
 
   test("cosine of identical and orthogonal vectors") {

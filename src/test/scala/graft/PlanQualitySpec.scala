@@ -586,4 +586,65 @@ class PlanQualitySpec extends SparkSpec {
       assert(shuffleBytes.get == 0L)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("curate's rule filter runs no regex, extract or lowercase node") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val es = graft.ext.TextPipeline.ruleFilter(docs, "text")
+      .queryExecution.optimizedPlan.flatMap(_.expressions)
+    val slow = es.flatMap(_.collect {
+      case e: org.apache.spark.sql.catalyst.expressions.RegExpReplace => e
+      case e: org.apache.spark.sql.catalyst.expressions.RegExpExtractAll => e
+      case e: org.apache.spark.sql.catalyst.expressions.Lower => e
+    })
+    assert(slow.isEmpty, slow)
+    assert(es.exists(_.exists(_.isInstanceOf[graft.functions.NormalizeText])))
+    assert(es.exists(_.exists(_.isInstanceOf[graft.functions.TextQuality])))
+  }
+
+  test("minHashLsh candidates+verify runs at most 1 shuffle and 3 " +
+    "broadcasts") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    // originals, exact copies (one signature group each) and near copies
+    // (banded candidates), so both candidate branches carry rows
+    val base = Tables.load(spark, sfDir, "documents").filter(col("doc_id") < 50)
+    val docs = base
+      .unionByName(base.withColumn("doc_id", col("doc_id") + 1000L))
+      .unionByName(base.withColumn("doc_id", col("doc_id") + 2000L)
+        .withColumn("text", concat(col("text"), lit(" zzzz"))))
+    // the verified pairs are an eager snapshot: the plan of interest runs
+    // INSIDE the call, as its last checkpoint
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, org.apache.spark.sql.execution.SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add((funcName, qe.executedPlan))
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val pairs = try {
+      val out = graft.ext.Dedup.minHashLsh(docs, "doc_id", "text",
+        minJaccard = 0.5).collect()
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+      out
+    } finally spark.listenerManager.unregister(listener)
+    assert(pairs.exists(r => r.getLong(1) == r.getLong(0) + 1000L))
+    assert(pairs.exists(r => r.getLong(1) == r.getLong(0) + 2000L))
+    import scala.jdk.CollectionConverters._
+    val verify = plans.asScala.filter(_._1.toLowerCase.contains("checkpoint"))
+      .lastOption.map(_._2)
+    assert(verify.nonEmpty, plans.asScala.map(_._1).mkString(", "))
+    object H extends AdaptiveSparkPlanHelper
+    val shuffles = H.collect(verify.get) { case e: ShuffleExchangeExec => e }
+    val broadcasts = H.collect(verify.get) { case e: BroadcastExchangeExec => e }
+    // the groupBy + min_by clusters, their join back to the keyed frame and
+    // the bucket-count join ran 4 shuffles and 6 broadcasts here; the
+    // cached signature-group and bucket-count windows leave the pair dedup
+    // and the three small joins
+    assert(shuffles.size <= 1 && broadcasts.size <= 3,
+      s"${shuffles.size} shuffles, ${broadcasts.size} broadcasts:\n${verify.get}")
+  }
 }

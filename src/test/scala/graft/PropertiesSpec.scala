@@ -434,6 +434,80 @@ class PropertiesSpec extends SparkSpec {
     assert(nullRow.isNullAt(0))
   }
 
+  test("normalize_text and text_quality equal their Column forms") {
+    // every case the kernels special-case: the six Java \s characters,
+    // ASCII punctuation, digits and upper case, code points that lowercase
+    // to ASCII (U+0130 -> "i" + U+0307, U+212A -> "k"), non-ASCII letters
+    // that stay non-ASCII (ß, the fi ligature, é), a surrogate-pair emoji,
+    // a Unicode-only space (U+2003) and non-ASCII digits (U+0663, U+FF17)
+    val ws = Seq(" ", "\t", "\n", "\u000B", "\f", "\r")
+    val punct = "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~".map(_.toString)
+    val special = Seq("\u0130", "\u212A", "\u00DF", "\uFB01", "\u00E9",
+      "\uD83D\uDE00", "\u2003", "\u0663", "\uFF17")
+    val piece: Gen[String] = Gen.frequency(
+      8 -> Gen.alphaLowerChar.map(_.toString),
+      3 -> Gen.alphaUpperChar.map(_.toString),
+      3 -> Gen.numChar.map(_.toString),
+      4 -> Gen.oneOf(ws),
+      2 -> Gen.oneOf(punct),
+      2 -> Gen.oneOf(special))
+    val textGen: Gen[Option[String]] = Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.oneOf("", " ", "\t\n\u000B\f\r ").map(Some(_)),
+      12 -> Gen.chooseNum(0, 240).flatMap(n =>
+        Gen.listOfN(n, piece).map(ps => Some(ps.mkString))))
+    // an RDD-backed frame: a local one would be folded by the optimizer's
+    // interpreted local-relation projection and never reach codegen
+    def mismatches(texts: Seq[Option[String]]): Long = {
+      val t = col("t")
+      spark.sparkContext.parallelize(texts, 2).toDF("t")
+        .select(
+          graft.ext.TextStats.normalizeText(t).as("n"),
+          TextStatsReference.normalizeText(t).as("n0"),
+          graft.ext.TextStats.nWords(t).as("w"),
+          TextStatsReference.nWords(t).as("w0"),
+          graft.ext.TextStats.qualityScore(t).as("q"),
+          TextStatsReference.qualityScore(t).as("q0"))
+        .filter(!col("n").eqNullSafe(col("n0")) ||
+          !col("w").eqNullSafe(col("w0")) || !col("q").eqNullSafe(col("q0")))
+        .count()
+    }
+    def bothModes(texts: Seq[Option[String]]): Boolean =
+      mismatches(texts) == 0 && {
+        val keys = Seq("spark.sql.codegen.wholeStage",
+          "spark.sql.codegen.factoryMode")
+        val prev = keys.map(spark.conf.getOption)
+        spark.conf.set(keys(0), "false")
+        spark.conf.set(keys(1), "NO_CODEGEN")
+        try mismatches(texts) == 0
+        finally keys.zip(prev).foreach {
+          case (key, Some(v)) => spark.conf.set(key, v)
+          case (key, None) => spark.conf.unset(key)
+        }
+      }
+    check("text kernels parity", Prop.forAll(Gen.listOfN(16, textGen)) {
+      texts => bothModes(texts)
+    })
+    // each named case on its own: a Unicode space that is not \s, the two
+    // lowercasings that yield ASCII, non-ASCII digits, a 100+-character
+    // text of 20+ words, NULL, empty and blank
+    val twenty = Seq.fill(20)("w\u0663rd").mkString(" ") + " " + "x" * 20
+    val edges: Seq[Option[String]] = Seq(
+      Some("ab\u2003cd ef"), Some("\u0130STANBUL \u212Aelvin"),
+      Some("\u0663\u0663\u0663\uFF17 x"), Some(twenty),
+      Some("a\u000Bb\fc\rd\te\nf"), Some("\uD83D\uDE00A1!b"),
+      None, Some(""), Some("   "))
+    assert(bothModes(edges))
+    val got = spark.sparkContext.parallelize(edges, 1).toDF("t").select(
+      graft.ext.TextStats.normalizeText(col("t")),
+      graft.ext.TextStats.nWords(col("t")),
+      graft.ext.TextStats.qualityScore(col("t"))).collect()
+    assert(got(1).getString(0) == "i stanbul kelvin")
+    assert(got(6).isNullAt(0) && got(6).getLong(1) == 0L &&
+      got(6).getDouble(2) == 0.0)
+    assert(got(0).getLong(1) == 2L && got(3).getDouble(2) == 1.0)
+  }
+
   test("word_shingles equals the HOF slice/concat_ws formulation") {
     // the r19 native rewrite must emit BYTE-identical shingle strings:
     // same lowercasing (it reuses UTF8String.toLowerCase), same \S+
