@@ -1,17 +1,31 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Dev tool: dump formatted physical plans for plan-quality review.
   *
-  * `runMain graft.Plans [sfDir] [query...]` prints each query's
+  * `runMain graft.Plans [sfDir] [name...]` prints each named frame's
   * `.explain("formatted")` between `========== <name> ==========`
-  * markers. Uses the same [[GraftSession]] configuration as
-  * Verify/Bench so the dumped plans are the plans the engine actually
-  * runs (AQE + coalescing flags, graft extensions, 8 local threads —
-  * plan SHAPE is thread-count-independent).
-  *
-  * Compositions that materialize eagerly (snapshot/persist+count
-  * internals) show the final frame's plan; their interior shape is
-  * covered by the `graft.bench.stages` breakdown lines instead. */
+  * markers. A name is a [[SparkEntry]] query, or one of the INTERNAL
+  * operator frames in [[ops]] (names starting with `op_`): the heavy
+  * compositions materialize eagerly (snapshot/persist+count), so their
+  * returned frames' plans are stub scans and the load-bearing plan
+  * shapes live one level down. Uses the same [[GraftSession]]
+  * configuration as Verify/Bench so the dumped plans are the plans the
+  * engine actually runs (AQE + coalescing flags, graft extensions, 8
+  * local threads — plan SHAPE is thread-count-independent). Timing of
+  * those eager interiors is in the `graft.util.Stages` lines instead. */
 object Plans {
+  private val ops: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // the per-doc MinHash signature pipeline feeding every near-dup
+    // operator (minHashLsh / buildNearDupIndex / incremental matches)
+    "op_minhash_signatures" -> ((s, dir) => graft.ext.Dedup
+      .minHashSignatures(Tables.load(s, dir, "documents"), "doc_id", "text",
+        3, 32)),
+    // the per-doc SimHash signature pipeline feeding simHashPairs
+    "op_simhash_signatures" -> ((s, dir) => graft.ext.Dedup
+      .simHash(Tables.load(s, dir, "documents"), "doc_id", "text")))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
@@ -19,8 +33,9 @@ object Plans {
     val spark = GraftSession.local("graft-plans", 8)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
+      val frame = if (n.startsWith("op_")) ops(n) else SparkEntry.queries(n)
       println(s"========== $n ==========")
-      println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
+      println(frame(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()

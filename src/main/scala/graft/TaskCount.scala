@@ -5,17 +5,23 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler._
 
-/** Dev-only scheduling-overhead profiler: `runMain graft.TaskCount q29...`
-  * times each named SparkEntry query like [[TimeQ]] but also reports how
-  * many jobs / stages / tasks it launched and the aggregate task run time
-  * — the numbers that separate "the work got slower" from "we paid
-  * per-task scheduling overhead on near-empty tasks" (guide §1.1/§2.2).
-  * Honors SPARK_GRAFT_CPUS / SPARK_GRAFT_SUBLINEAR / SPARK_GRAFT_TIMEQ_CONF
-  * exactly like TimeQ. */
+/** The dev profiler: `runMain graft.TaskCount q29 fx5_... ...` runs each
+  * named SparkEntry query (or Bench fixture key) on SPARK_GRAFT_SF_DIR
+  * (default sf0.1) in one warmed session and prints its wall time and row
+  * count, the `bench-stage` lines of [[graft.util.Stages]], how many jobs
+  * / stages / tasks it launched and the aggregate task run time — the
+  * numbers that separate "the work got slower" from "we paid per-task
+  * scheduling overhead on near-empty tasks" (guide §1.1/§2.2).
+  *
+  * Environment: SPARK_GRAFT_CPUS (local threads, default 32),
+  * SPARK_GRAFT_SUBLINEAR=true (time the ANN queries at Bench's sub-linear
+  * operating point) and SPARK_GRAFT_TIMEQ_CONF="k=v,k=v" (runtime SQL
+  * confs applied to the session before the timed runs). */
 object TaskCount {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    System.setProperty("graft.bench.stages", "false")
+    // set here, not by -D: that route dies at sbt's fork boundary
+    System.setProperty("graft.bench.stages", "true")
     if (sys.env.get("SPARK_GRAFT_SUBLINEAR").exists(_ == "true"))
       System.setProperty("graft.ann.sublinear", "true")
     val spark = GraftSession.local("graft-taskcount",

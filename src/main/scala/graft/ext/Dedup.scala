@@ -19,13 +19,14 @@ object Shingles {
   def wordShingles(text: Column, n: Int): Column =
     // native one-pass form (r19): the HOF formulation interpreted a
     // lambda and allocated a token slice per WINDOW. Output strings are
-    // byte-identical (WordShingleStrings lowercases through the same
-    // UTF8String.toLowerCase the Column lower() evaluates; ZERO tokens →
-    // ZERO shingles — a blank doc must not mint the "" shingle, which
-    // every blank doc at web scale would share as a straggler hot key)
+    // byte-identical (the kernel gets `lower(text)`, so Spark's own case
+    // mapping, ICU by default, applies as in the Column form; ZERO
+    // tokens → ZERO shingles — a blank doc must not mint the "" shingle,
+    // which every blank doc at web scale would share as a straggler hot
+    // key)
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.WordShingleStrings(
-        org.apache.spark.sql.graftbridge.Bridge.expression(text), n))
+        org.apache.spark.sql.graftbridge.Bridge.expression(lower(text)), n))
 
   /** Distinct 64-bit hashes of a doc's word shingles — the compact set
     * representation all near-dup math runs on (8-byte longs instead of

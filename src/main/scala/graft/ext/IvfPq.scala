@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
+import graft.util.Stages
+
 /** IVF-PQ — the composition FAISS ships for billion-vector search, and
   * the honest 100 TB ANN design: the [[Ivf]] coarse quantizer prunes the
   * SEARCH (probe nprobe of k cells ⇒ touch ~nprobe/k of the corpus) and
@@ -29,45 +31,27 @@ object IvfPq {
 
   /** Train both quantizers and encode the corpus: (Index, encoded
     * (idCol, cell, codes)). The PQ codebooks train on residuals — the
-    * distribution they will encode.
-    *
-    * `onStage(name, seconds)` fires after each eager stage (ivf-train /
-    * residuals / pq-train / encode) — a timing hook for benchmarks; the
-    * default is free. */
+    * distribution they will encode. Each eager stage prints through
+    * [[graft.util.Stages]] as `ivfpq ivf-train / residuals / pq-train /
+    * encode`. */
   def build(corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
       kCells: Int = 16, m: Int = 8, kCodes: Int = 16,
-      iters: Int = 3,
-      onStage: (String, Double) => Unit = (_, _) => ()): (Index, DataFrame) = {
-    def staged[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      onStage(name, (System.nanoTime() - t0) / 1e9)
-      r
+      iters: Int = 3): (Index, DataFrame) =
+    trained(corpus, idCol, vecCol, dim, kCells, m, kCodes, iters) {
+      (index, withRes) =>
+        // drop rows whose codes came back null (wrong-dimension vectors
+        // fail Pq.encodeColumn's guard) — a null-codes row would score
+        // NULL adist at search time and, under NULLS FIRST ascending,
+        // hijack the top of every shortlist
+        val encoded = withRes.select(col(idCol), col("__cell").as("cell"),
+          Pq.encodeColumn(col("__res"), index.pq).as("codes"))
+          .filter(col("codes").isNotNull)
+        // eager snapshot (Caches contract): the encoded index is queried
+        // repeatedly — its blocks live exactly as long as the caller
+        // holds the frame, with no CacheManager entry to leak
+        (index, Stages.time("ivfpq", "encode")(
+          graft.util.Caches.snapshot(encoded)))
     }
-    val ivf = staged("ivf-train")(
-      Ivf.train(corpus, idCol, vecCol, kCells, iters))
-    val cv = col(vecCol).cast("array<double>")
-    val withRes = corpus.filter(col(vecCol).isNotNull)
-      .withColumn("__cell", Ivf.cellId(cv, ivf))
-      .withColumn("__res", residual(cv, ivf, col("__cell")))
-      .persist()
-    staged("residuals")(withRes.count())
-    val pq = staged("pq-train")(
-      Pq.train(withRes, idCol, "__res", dim, m, kCodes, iters))
-    // drop rows whose codes came back null (wrong-dimension vectors fail
-    // Pq.encodeColumn's guard) — a null-codes row would score NULL adist
-    // at search time and, under NULLS FIRST ascending, hijack the top of
-    // every shortlist
-    val encoded = withRes.select(col(idCol), col("__cell").as("cell"),
-      Pq.encodeColumn(col("__res"), pq).as("codes"))
-      .filter(col("codes").isNotNull)
-    // eager snapshot (Caches contract): the encoded index is queried
-    // repeatedly — its blocks live exactly as long as the caller holds
-    // the frame, with no CacheManager entry to leak
-    val out = staged("encode")(graft.util.Caches.snapshot(encoded))
-    withRes.unpersist()
-    (Index(ivf, pq), out)
-  }
 
   /** Train both quantizers WITHOUT encoding — the driver-side half of
     * [[build]], returning only the (small, serializable) codebooks. A
@@ -77,27 +61,30 @@ object IvfPq {
     * time the search path separately from training. */
   def trainIndex(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, kCells: Int = 16, m: Int = 8, kCodes: Int = 16,
-      iters: Int = 3,
-      onStage: (String, Double) => Unit = (_, _) => ()): Index = {
-    def staged[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      onStage(name, (System.nanoTime() - t0) / 1e9)
-      r
-    }
-    val ivf = staged("ivf-train")(
+      iters: Int = 3): Index =
+    trained(corpus, idCol, vecCol, dim, kCells, m, kCodes, iters)(
+      (index, _) => index)
+
+  /** The training half both [[build]] and [[trainIndex]] run: IVF on the
+    * corpus, then PQ on the persisted residual frame (idCol, `__cell`,
+    * `__res`) of its non-null rows, which `use` may read (build encodes
+    * from it, so encoding adds no pass) and which is unpersisted after. */
+  private def trained[T](corpus: DataFrame, idCol: String, vecCol: String,
+      dim: Int, kCells: Int, m: Int, kCodes: Int, iters: Int)(
+      use: (Index, DataFrame) => T): T = {
+    val ivf = Stages.time("ivfpq", "ivf-train")(
       Ivf.train(corpus, idCol, vecCol, kCells, iters))
     val cv = col(vecCol).cast("array<double>")
     val withRes = corpus.filter(col(vecCol).isNotNull)
       .withColumn("__cell", Ivf.cellId(cv, ivf))
       .withColumn("__res", residual(cv, ivf, col("__cell")))
       .persist()
-    staged("residuals")(withRes.count())
-    val pq =
-      try staged("pq-train")(
+    try {
+      Stages.time("ivfpq", "residuals")(withRes.count())
+      val pq = Stages.time("ivfpq", "pq-train")(
         Pq.train(withRes, idCol, "__res", dim, m, kCodes, iters))
-      finally withRes.unpersist()
-    Index(ivf, pq)
+      use(Index(ivf, pq), withRes)
+    } finally withRes.unpersist()
   }
 
   /** Encode `corpus` against an already-trained [[Index]] — one narrow

@@ -149,9 +149,10 @@ case class GramMixHashes(child: Expression, n: Int)
   * Column formulation, which interprets a lambda and allocates a token
   * slice per WINDOW (the [[GramMixHashes]] overhead, here on the paths
   * that need the actual shingle strings: the portable/oracle-checkable
-  * dedup and novelty pipelines). BYTE-IDENTICAL output by construction:
-  * lowercasing goes through `UTF8String.toLowerCase` — the exact
-  * function the Column form's `lower()` evaluates — and tokens are the
+  * dedup and novelty pipelines). The kernel does NOT lowercase: callers
+  * pass `lower(text)` (as [[graft.ext.Shingles.wordShingles]] does), so
+  * case mapping is Spark's own, ICU or not, and the output is
+  * BYTE-IDENTICAL to the Column form by construction. Tokens are the
   * maximal runs of non-`\s` chars (the Java regex class `\S+` matches).
   * ≤ n tokens yield ONE whole-text gram; zero tokens yield an empty
   * array; null text stays null. Duplicates kept (callers apply
@@ -173,9 +174,7 @@ case class WordShingleStrings(child: Expression, n: Int)
       c == '\r'
 
   override def nullSafeEval(input: Any): Any = {
-    // lowercase through the SAME code path the Column form's lower()
-    // takes — any locale/unicode quirk then lands identically on both
-    val s = input.asInstanceOf[UTF8String].toLowerCase.toString
+    val s = input.asInstanceOf[UTF8String].toString
     val len = s.length
     val starts = new scala.collection.mutable.ArrayBuilder.ofInt
     val ends = new scala.collection.mutable.ArrayBuilder.ofInt

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
-import graft.util.Fmt
+import graft.util.{Fmt, Stages}
 
 /** Log-mediated versioned parquet table: the Delta-lake surface the plain
   * directory-swap [[Upsert]] cannot provide (reference
@@ -128,18 +128,6 @@ object VersionedTable {
       cdcAdd: Seq[String] = Nil)
 
   // ---------------------------------------------------------------- log IO
-
-  /** Prop-gated (graft.bench.stages) micro-timer for the write ops'
-    * internal segments: prints `bench-stage vt <op>.<seg> <sec>` so a
-    * per-commit cost regression names its segment (hit-scan vs write vs
-    * CDF capture vs stats vs commit), not just the op total. Zero cost
-    * when the property is unset. */
-  private def opStage[T](op: String, seg: String)(body: => T): T =
-    if (sys.props.get("graft.bench.stages").contains("true")) {
-      val t0 = System.nanoTime()
-      try body finally println("bench-stage vt " + op + "." + seg + " " +
-        Fmt.fmt("%.3f", (System.nanoTime() - t0) / 1e9))
-    } else body
 
   private def logPath(table: String): Path = Paths.get(table, LogDir)
 
@@ -2134,7 +2122,7 @@ object VersionedTable {
     // the caller's source plan (arbitrary — often itself a join) would
     // re-evaluate per consumer, five times per MERGE (r18 opt)
     val srcKeys = source.select(keys.map(col): _*).distinct().persist()
-    val hitPaths = opStage("merge", "hit-scan") {
+    val hitPaths = Stages.time("vt", "merge.hit-scan") {
       hitFilePaths(spark, table, st, schema, srcKeys, keys) }
     // conform hit rows to the LOG schema, not the hit files' physical
     // one: under schema evolution an old file lacks newer columns, and
@@ -2182,7 +2170,7 @@ object VersionedTable {
     // file-count discipline: a surgical update is sized to the files it
     // touched (no per-merge fragmentation by shuffle-partition count); a
     // pure-insert merge (no hits) keeps its natural write parallelism
-    val added = opStage("merge", "write") { writeDataFiles(
+    val added = Stages.time("vt", "merge.write") { writeDataFiles(
       if (hitNames.nonEmpty) merged.coalesce(math.max(1, hitNames.size))
       else merged, table) }
     // change capture (CDF): pre-images come from the hit rows whose key
@@ -2193,7 +2181,7 @@ object VersionedTable {
       // an empty source writes nothing (added = Nil) and changes
       // nothing — skip capture rather than read zero parquet paths
       if (!cdfEnabled(st.props) || added.isEmpty) Nil
-      else opStage("merge", "cdf-capture") {
+      else Stages.time("vt", "merge.cdf-capture") {
         val landed = spark.read.option("mergeSchema", "true").parquet(
           added.map(f => Paths.get(table, f).toString): _*)
         // keyJoin (null-safe <=>), like applyChanges' capture: NULL is
@@ -2230,11 +2218,11 @@ object VersionedTable {
       }
     // record the MERGED schema (a source can itself evolve the table —
     // the overwrite-based merge recorded the post-merge shape too)
-    val mergeStats = opStage("merge", "stats") { withSizes(table, added,
+    val mergeStats = Stages.time("vt", "merge.stats") { withSizes(table, added,
       computeStats(spark, table, added, trackedStatColumns(st))) }
-    val mergeBlooms = opStage("merge", "blooms") { computeBlooms(spark,
+    val mergeBlooms = Stages.time("vt", "merge.blooms") { computeBlooms(spark,
       table, added, trackedBloomColumns(table, st), 0.03) }
-    try opStage("merge", "commit") {
+    try Stages.time("vt", "merge.commit") {
       commitLoop(table, "merge", added, _ => hitNames, merged.schema.json,
         readVersion = Some(rv),
         // sticky indexing: the rewrite re-records whatever the table

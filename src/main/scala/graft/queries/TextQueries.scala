@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Similarity, TextStats}
+import graft.util.Stages
 import Q._
 
 /** Text-analysis + near-dup operator coverage over `documents`
@@ -545,14 +546,8 @@ object TextQueries {
     // AUC ≥ 0.9 (threshold-calibration-free; measured 0.985 at sf0.01).
     // A broken featurizer, trainer, or scorer flips the flag red.
     "q83_quality_classifier" -> ((s, dir) => {
-      // stage timing (Bench sets graft.bench.stages): splits the fit
-      // (featurize + L-BFGS) from the score+AUC pass, so a regression
-      // shows WHICH half moved
-      val onStage: (String, Double) => Unit =
-        if (sys.props.get("graft.bench.stages").exists(_ == "true"))
-          (n, sec) => println(
-            "bench-stage q83 " + n + " " + graft.util.Fmt.fmt("%.3f", sec))
-        else (_, _) => ()
+      // stage lines split the fit (featurize + L-BFGS) from the
+      // score+AUC pass, so a regression shows WHICH half moved
       val docs = t(s, dir, "documents").filter(col("text").isNotNull)
       val toks = regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0))
       val rate = size(filter(toks, x => x === lit("spark"))).cast("double") /
@@ -562,19 +557,18 @@ object TextQueries {
       // and the featurize + L-BFGS cost halves (fit ~2.4 s -> ~1.2 s
       // warm). The checked output (n_pos/n_neg/auc_ok) is insensitive
       // to both knobs long before these values.
-      val t0 = System.nanoTime()
-      val model = graft.ext.QualityClassifier.distill(
-        docs, "text", rate, threshold = 0.03, dim = 128, maxIter = 5)
-      onStage("fit", (System.nanoTime() - t0) / 1e9)
-      val t1 = System.nanoTime()
-      val scored = docs.select(
-        (rate >= 0.03).cast("int").as("lab"),
-        graft.ext.QualityClassifier.scoreColumn(col("text"), model).as("p"))
-      val out = graft.util.Caches.snapshot(
-        graft.ext.Eval.binaryAuc(scored, "p", "lab")
-          .select(col("n_pos"), col("n_neg"), (col("auc") >= 0.9).as("auc_ok")))
-      onStage("score-auc", (System.nanoTime() - t1) / 1e9)
-      out
+      val model = Stages.time("q83", "fit")(
+        graft.ext.QualityClassifier.distill(
+          docs, "text", rate, threshold = 0.03, dim = 128, maxIter = 5))
+      Stages.time("q83", "score-auc") {
+        val scored = docs.select(
+          (rate >= 0.03).cast("int").as("lab"),
+          graft.ext.QualityClassifier.scoreColumn(col("text"), model).as("p"))
+        graft.util.Caches.snapshot(
+          graft.ext.Eval.binaryAuc(scored, "p", "lab")
+            .select(col("n_pos"), col("n_neg"),
+              (col("auc") >= 0.9).as("auc_ok")))
+      }
     }),
 
     // Okapi BM25 lexical scoring against a fixed query; fixed-order term

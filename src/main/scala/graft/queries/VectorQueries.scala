@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
+import graft.util.Stages
 import Q._
 
 /** Embedding similarity search over `embeddings` (north-star ops).
@@ -30,15 +31,6 @@ object VectorQueries {
   private def annNprobe: Int = if (annSublinear) 4 else 16
   private def annShortlist: Int = if (annSublinear) 50 else 1000000
 
-  /** Per-query stage-timing hook ("bench-stage <label> <stage> <sec>"
-    * plain-text lines when Bench sets graft.bench.stages; free
-    * otherwise). Plain text above the machine line, never in the JSON. */
-  private def stageHook(label: String): (String, Double) => Unit =
-    if (sys.props.get("graft.bench.stages").exists(_ == "true"))
-      (n, sec) => println(
-        s"bench-stage $label $n " + graft.util.Fmt.fmt("%.3f", sec))
-    else (_, _) => ()
-
   /** Shared trained-codebook memos, keyed by data dir (VERDICT r14 #3):
     * PQ/IVF-PQ training is deterministic (hash-seeded inits, fixed
     * iteration counts), so a trained model is a pure function of
@@ -58,12 +50,11 @@ object VectorQueries {
     pqModels.computeIfAbsent(dir, _ =>
       graft.ext.Pq.train(t(s, dir, "embeddings"), "vec_id", "embedding",
         dim = 64, m = 8, k = 16, iters = 3))
-  private[graft] def ivfpqIndex(s: SparkSession, dir: String,
-      label: String): graft.ext.IvfPq.Index =
+  private[graft] def ivfpqIndex(s: SparkSession,
+      dir: String): graft.ext.IvfPq.Index =
     ivfpqIndexes.computeIfAbsent(dir, _ =>
       graft.ext.IvfPq.trainIndex(t(s, dir, "embeddings"), "vec_id",
-        "embedding", dim = 64, kCells = 16, m = 8, kCodes = 16, iters = 2,
-        onStage = stageHook(label)))
+        "embedding", dim = 64, kCells = 16, m = 8, kCodes = 16, iters = 2))
 
   /** Bench hook (same contract as VersionedQueries.fixtureGroups): force
     * the trained-codebook memos under their own timed keys, so the gate
@@ -74,7 +65,7 @@ object VectorQueries {
       pqModel(s, dir); ()
     }),
     "fx5_ivfpq_index_fixture" -> ((s: SparkSession, dir: String) => {
-      ivfpqIndex(s, dir, "fx5"); ()
+      ivfpqIndex(s, dir); ()
     }))
 
   val queries: Map[String, QFn] = Map(
@@ -150,28 +141,22 @@ object VectorQueries {
     // nprobe=4/shortlist=50 point (annSublinear above), whose recall is
     // the PqSpec assertion.
     "q95_ivfpq_topk" -> ((s, dir) => {
-      // stage timing (Bench sets graft.bench.stages): per-stage wall
-      // clock shows WHICH stage (encode / probe+rerank) carries any
-      // swing. Training comes from the fx5 memo — in a Bench sweep the
-      // fixture already paid for it under its own key; in Verify the
+      // stage lines (encode / probe+rerank) show WHICH stage carries
+      // any swing. Training comes from the fx5 memo — in a Bench sweep
+      // the fixture already paid for it under its own key; in Verify the
       // first call trains once (same deterministic model, same hashes).
-      val onStage = stageHook("q95")
       val emb = t(s, dir, "embeddings")
-      val index = ivfpqIndex(s, dir, "q95")
-      val t0 = System.nanoTime()
-      val encoded = graft.ext.IvfPq.encode(emb, "vec_id", "embedding", index)
-      onStage("encode", (System.nanoTime() - t0) / 1e9)
-      val t1 = System.nanoTime()
-      val out = graft.ext.IvfPq.topK(encoded, emb,
-          emb.filter(col("vec_id") < 8), index,
-          "vec_id", "embedding", k = 5, nprobe = annNprobe,
-          shortlist = annShortlist)
-        .orderBy(col("query_id"), col("rnk"))
+      val index = ivfpqIndex(s, dir)
+      val encoded = Stages.time("q95", "encode")(
+        graft.ext.IvfPq.encode(emb, "vec_id", "embedding", index))
       // the probe+rerank stage is lazy — snapshot it here so its stage
       // line is real (the gate result is tiny: 40 rows)
-      val pinned = graft.util.Caches.snapshot(out)
-      onStage("probe-rerank", (System.nanoTime() - t1) / 1e9)
-      pinned
+      Stages.time("q95", "probe-rerank")(graft.util.Caches.snapshot(
+        graft.ext.IvfPq.topK(encoded, emb,
+            emb.filter(col("vec_id") < 8), index,
+            "vec_id", "embedding", k = 5, nprobe = annNprobe,
+            shortlist = annShortlist)
+          .orderBy(col("query_id"), col("rnk"))))
     }),
 
     // Product-quantized ANN: 8 codebooks × 16 centroids over 64 dims

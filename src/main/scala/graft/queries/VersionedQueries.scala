@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.{VersionedTable => VT}
 import graft.queries.Q.t
+import graft.util.Stages
 
 /** Driver-gate queries for the versioned-table layer (the Delta-equivalent
   * log surface: time travel, RESTORE, MERGE-through-the-log, file-granular
@@ -37,17 +38,6 @@ object VersionedQueries {
     t(s, dir, "orders").filter(col("o_orderkey") < 20000)
   private def customerSlice(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "customer").filter(col("c_custkey") < 5000)
-
-  /** Stage timer for the fixture choreographies (Bench/TimeQ set
-    * graft.bench.stages): prints `bench-stage <fx> <name> <sec>` so a
-    * fixture regression names its SEGMENT (commit vs stream-fold vs
-    * consumer cycle), not just its total. Zero cost when unset. */
-  private def stage[T](fx: String, name: String)(body: => T): T =
-    if (sys.props.get("graft.bench.stages").contains("true")) {
-      val t0 = System.nanoTime()
-      try body finally println("bench-stage " + fx + " " + name + " " +
-        graft.util.Fmt.fmt("%.3f", (System.nanoTime() - t0) / 1e9))
-    } else body
 
   /** Run a fixture choreography under a small shuffle-partition count,
     * restoring the session value after. The scratch tables are a few
@@ -204,7 +194,7 @@ object VersionedQueries {
     val cust = customerSlice(s, dir)
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
         col("c_acctbal"))
-    stage("fx1", "v0-append") {
+    Stages.time("fx1", "v0-append") {
       VT.append(s, cust.filter(col("c_custkey") % 2 === 0), tbl) }  // v0
     val root = java.nio.file.Paths.get(tbl).getParent
     val dst = root.resolve("dst").toString
@@ -218,7 +208,7 @@ object VersionedQueries {
       () => graft.io.ChangeConsumer.maintainSumState(s, tbl, state,
         Seq("c_custkey"), Seq("c_mktsegment"), "c_acctbal", ckS))
     // both consumers bootstrap from the v0 snapshot
-    stage("fx1", "consumers-bootstrap") { consumeCycle() }
+    Stages.time("fx1", "consumers-bootstrap") { consumeCycle() }
     VT.setProperties(tbl, Map(VT.CdfProp -> "true"))              // v1
     val dim = s"$tbl.dim"
     // the SCD2 sink runs as checkpoint-resumed AvailableNow batches
@@ -237,12 +227,12 @@ object VersionedQueries {
       require(finished, "fx1 scd2 AvailableNow run did not finish in 120 s")
     }
     // bootstrap: every snapshot key opens
-    stage("fx1", "scd2-bootstrap") { runScd2() }
+    Stages.time("fx1", "scd2-bootstrap") { runScd2() }
     val src = cust.filter(col("c_custkey") % 3 === 0)
       .withColumn("c_acctbal", col("c_acctbal") + 50.0)
-    stage("fx1", "merge-v2") {
+    Stages.time("fx1", "merge-v2") {
       VT.merge(s, src, tbl, Seq("c_custkey")) }                   // v2
-    stage("fx1", "delete-v3") {
+    Stages.time("fx1", "delete-v3") {
       VT.deleteWhereDeferred(s, tbl, col("c_custkey") % 10 === 4) } // v3
     // both commits fold before this returns — as one batch or two
     // depending on source grouping; the dim is batch-boundary-independent.
@@ -250,7 +240,7 @@ object VersionedQueries {
     // landed commits into separate outputs, so it overlaps the fold —
     // the two halves were the fixture's two largest stages (r15: 3.5 s
     // + 4.5 s in-sweep) and share no state beyond the read-only log
-    stage("fx1", "scd2-fold+consumers-incr") {
+    Stages.time("fx1", "scd2-fold+consumers-incr") {
       inParallel(() => runScd2(), () => consumeCycle())
     }
     val fromMirror = VT.snapshot(s, dst)
@@ -308,7 +298,7 @@ object VersionedQueries {
     val base = ordersSlice(s, dir)
       .select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice"), col("o_custkey"))
-    stage("fx2", "v0-append") {
+    Stages.time("fx2", "v0-append") {
       VT.append(s, base.filter(col("o_orderkey") % 3 === 0), tbl) } // v0
     VT.setProperties(tbl, Map(VT.CdfProp -> "true"))              // v1
     val state = s"$tbl.state"
@@ -324,7 +314,7 @@ object VersionedQueries {
       require(finished, "fx2 MV AvailableNow run did not finish in 120 s")
     }
     val name = s"q166_stream_${System.nanoTime()}"
-    val q = stage("fx2", "cdf-stream-start") {
+    val q = Stages.time("fx2", "cdf-stream-start") {
       s.readStream.format("graft-versioned")
         .option("readChangeFeed", "true").load(tbl)
         .writeStream.format("memory").queryName(name).outputMode("append")
@@ -333,20 +323,20 @@ object VersionedQueries {
     try {
       // snapshot batches: v0 state as inserts into BOTH streams — separate
       // sinks/checkpoints over the same read-only snapshot, so concurrent
-      stage("fx2", "bootstrap-both") {
+      Stages.time("fx2", "bootstrap-both") {
         inParallel(() => q.processAllAvailable(), () => runMv())
       }
       val src = base.filter(col("o_orderkey") % 5 === 0)
         .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
         .withColumn("o_orderstatus", lit("U"))
-      stage("fx2", "merge-v2") {
+      Stages.time("fx2", "merge-v2") {
         VT.merge(s, src, tbl, Seq("o_orderkey")) }                // v2
-      stage("fx2", "delete-v3") {
+      Stages.time("fx2", "delete-v3") {
         VT.deleteWhereDeferred(s, tbl,
           col("o_orderstatus") === "F" && col("o_orderkey") % 7 === 0) } // v3
       // change tail (v2 + v3 envelopes) and the MV's O(changes)
       // incremental refresh fold the same landed commits concurrently
-      stage("fx2", "fold-both") {
+      Stages.time("fx2", "fold-both") {
         inParallel(() => q.processAllAvailable(), () => runMv())
       }
     } finally q.stop()

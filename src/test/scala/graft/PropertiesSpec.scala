@@ -295,7 +295,10 @@ class PropertiesSpec extends SparkSpec {
     def mismatches(cents: Seq[Seq[Double]],
         vecs: Seq[Option[Seq[Option[Double]]]]): Long = {
       val m = graft.ext.Ivf.Model(cents)
-      val df = vecs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("i", "vd")
+      // RDD-backed, so whole-stage codegen really runs (a local toDF is
+      // folded through the interpreted local-relation projection)
+      val df = spark.sparkContext.parallelize(
+          vecs.zipWithIndex.map { case (v, i) => (i, v) }, 1).toDF("i", "vd")
         .withColumn("vf", col("vd").cast("array<float>"))
       Seq("vd", "vf").map { c =>
         df.select(
@@ -510,12 +513,15 @@ class PropertiesSpec extends SparkSpec {
 
   test("word_shingles equals the HOF slice/concat_ws formulation") {
     // the r19 native rewrite must emit BYTE-identical shingle strings:
-    // same lowercasing (it reuses UTF8String.toLowerCase), same \S+
+    // same lowercasing (Spark's lower() on both sides), same \S+
     // tokenization, same windowing (<= n tokens -> one whole-text gram,
     // zero tokens -> zero grams), duplicates kept in position order.
-    // Exercise unicode, mixed whitespace and blank/short docs.
+    // Exercise unicode, mixed whitespace and blank/short docs. U+1C89,
+    // U+2C2F and U+A7C0 lowercase differently under ICU (Spark's default
+    // lower()) and the JVM's UTF8String.toLowerCase.
     val piece = Gen.oneOf("The", "ÄÖÜ", "İstanbul", "ß", "𝒜𝓑", "a-b",
-      "x", "1 2", "", " ", "\t", "\n", "tok tok")
+      "x", "1 2", "", " ", "\t", "\n", "tok tok", "\u1C89x",
+      "\u2C2F", "A\uA7C0")
     val docGen = Gen.listOf(piece).map(_.mkString(" "))
     def hof(text: org.apache.spark.sql.Column, n: Int) = {
       val tokens = regexp_extract_all(lower(text), lit("\\S+"), lit(0))
