@@ -7,23 +7,16 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 /** Shared shingling helpers. */
 object Shingles {
-  /** Word n-grams as space-joined strings; docs shorter than n words yield
-    * a single shingle of the whole text. Pure higher-order-function Column
-    * algebra — no UDF.
-    *
-    * The `transform(array(tokens), ts => ...)` wrapper is a LET-BINDING:
-    * lambda bodies re-evaluate every captured subtree per element, so
-    * referencing the raw `split(...)` inside the per-shingle lambda would
-    * re-run the regex split once PER SHINGLE — O(tokens²) per doc. Binding
-    * the split result to a lambda variable evaluates it once per row. */
+  /** Word n-grams of `lower(text)` as space-joined strings, one per token
+    * window (duplicates kept); docs shorter than n words yield a single
+    * shingle of the whole text. Tokens are the `\S+` runs (Java regex
+    * whitespace), found in one pass by the native
+    * [[graft.functions.WordShingleStrings]] kernel. The kernel gets
+    * `lower(text)`, so Spark's own case mapping (ICU by default) applies.
+    * NULL text gives NULL; a doc with ZERO tokens gives ZERO shingles —
+    * a blank doc must not mint the "" shingle, which every blank doc at
+    * web scale would share as a straggler hot key. */
   def wordShingles(text: Column, n: Int): Column =
-    // native one-pass form (r19): the HOF formulation interpreted a
-    // lambda and allocated a token slice per WINDOW. Output strings are
-    // byte-identical (the kernel gets `lower(text)`, so Spark's own case
-    // mapping, ICU by default, applies as in the Column form; ZERO
-    // tokens → ZERO shingles — a blank doc must not mint the "" shingle,
-    // which every blank doc at web scale would share as a straggler hot
-    // key)
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.WordShingleStrings(
         org.apache.spark.sql.graftbridge.Bridge.expression(lower(text)), n))
@@ -79,11 +72,14 @@ object Shingles {
   * groups (tunable via bands/rows). This is the standard web-scale dedup
   * shape (the C4/GPT-3-style dedup pipelines from public papers).
   *
-  * Performance: the k seeded MinHash functions are derived from ONE
-  * xxhash64 per shingle via a splitmix64-style integer mix — plain
-  * arithmetic that stays in whole-stage codegen — and reduced with
-  * `min` aggregates after an explode (map-side partial aggregation), not
-  * per-row lambda re-hashing.
+  * The LSH operators ([[minHashLsh]], [[minHashLshPortable]],
+  * [[hammingPairs64]], the near-dup index and its incremental matches)
+  * share one candidate core: identical signatures cluster to a min-id
+  * representative over one window ([[withRep]]), only reps are banded
+  * ([[bandRows]]), hot buckets are capped ([[boundBuckets]]) and the
+  * buckets self-join into rep pairs ([[bandPairs]]). Each caller
+  * supplies only its hash family (sets, signature, signature key,
+  * band-key expression) and its verify step.
   */
 object Dedup {
 
@@ -163,12 +159,110 @@ object Dedup {
     * Returns (id, sig: array<long>[numHashes]). */
   def minHashSignatures(docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 32): DataFrame =
-    sigsFromSets(shingleSets(docs, idCol, textCol, shingleSize), numHashes)
+    keyedSigs(shingleSets(docs, idCol, textCol, shingleSize), numHashes)
+      .select(col("id"), col("sig"))
 
-  private def sigsFromSets(sets: DataFrame, numHashes: Int): DataFrame =
-    sets.select(col("id"),
-      graft.functions.MinHashArray.minhash(col("shset"), numHashes)
-        .as("sig"))
+  /** (id, shset) → (id, shset, sig, __sk1, __sk2): the row-local MinHash
+    * signature and its 128-bit signature key [[minHashKey]].
+    *
+    * Signature grouping rides a 128-bit hash of the signature (two
+    * independent xxhash64 streams), not the array itself: the 32-long
+    * array key is ~16× the bytes and element-wise to compare on the
+    * hottest dedup shuffle, while a 128-bit collision needs ~2^64 DISTINCT
+    * signatures before the birthday bound bites (at 10^9 distinct sigs
+    * the any-collision probability is ~10^-21). A single 64-bit key would
+    * NOT be safe here (birthday-collides at ~10^9 with real probability,
+    * silently merging unrelated groups). */
+  private def keyedSigs(sets: DataFrame, numHashes: Int): DataFrame =
+    sets.select(col("id"), col("shset"),
+        graft.functions.MinHashArray.minhash(col("shset"), numHashes)
+          .as("sig"))
+      .select(col("id"), col("shset"), col("sig"),
+        xxhash64(col("sig")).as("__sk1"),
+        xxhash64(col("sig"), lit(1L)).as("__sk2"))
+
+  private def minHashKey: Seq[Column] = Seq(col("__sk1"), col("__sk2"))
+
+  /** The MinHash band keys over `sig`: band b is the 64-bit xxhash64 of
+    * its `rowsPerBand` signature slice, seeded with b. The batch LSH and
+    * the incremental index (whose `band_hash` streaming ingest keeps on
+    * disk) both band with it, so an index is interchangeable with a
+    * re-dedup. */
+  private def minHashBands(bands: Int, rowsPerBand: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
+        b))
+
+  /** Identical-signature clusters: next to each row's (id, sig), its
+    * `rep` = min(id) over ONE window on the signature key `key`. The one
+    * frame yields the member → rep pairs ([[memberPairs]]) and the reps
+    * with their own sig ([[reps]]) — no aggregate, and no join back to
+    * re-attach the rep to each member. This is the duplicate-heavy-corpus
+    * guard: banding members individually would push every bucket of
+    * heavily-duplicated content over the cap and silently lose it from
+    * candidate generation.
+    * Skew bound: a window has no partial aggregation, so one task holds a
+    * whole signature group (every exact copy of a document); the rows are
+    * ids and one sig each, and the task only takes a running min. */
+  private def withRep(keyed: DataFrame, key: Seq[Column]): DataFrame =
+    keyed.select(col("id"), col("sig"),
+      min(col("id")).over(Window.partitionBy(key: _*)).as("rep"))
+
+  /** (a = rep, b = member) for every non-rep member: linear in the group,
+    * not all-pairs. Unique by construction (one group per id) and
+    * DISJOINT from [[bandPairs]] (whose ids are reps only), so a union
+    * with band pairs needs no dedup of this side. */
+  private def memberPairs(grouped: DataFrame): DataFrame =
+    grouped.filter(col("id") =!= col("rep"))
+      .select(col("rep").as("a"), col("id").as("b"))
+
+  private def reps(grouped: DataFrame): DataFrame =
+    grouped.filter(col("id") === col("rep")).select(col("id"), col("sig"))
+
+  /** Reps → one row per (band, band_hash) of the band-key array `keys`
+    * (an expression over `sig`), with the `carry` columns alongside. */
+  private def bandRows(reps: DataFrame, keys: Column,
+      carry: String*): DataFrame =
+    reps.select(col("id") +: carry.map(col(_)) :+
+      posexplode(keys).as(Seq("band", "band_hash")): _*)
+
+  /** Drop band buckets hotter than `cap`: they carry no discriminating
+    * information and their members remain reachable via other bands.
+    * One count over a window on the bucket key instead of an aggregate
+    * joined back: the frame is read once, and no join.
+    * Skew bound: a window has no partial aggregation, so one task holds a
+    * whole bucket, hot ones included, as the bucket join of the aggregate
+    * form already did; its rows are (band, band hash, id) and the task
+    * only counts them. */
+  private def boundBuckets(banded: DataFrame, cap: Int): DataFrame =
+    banded
+      .withColumn("__n", count(lit(1)).over(
+        Window.partitionBy(col("band"), col("band_hash"))))
+      .filter(col("__n") <= cap).drop("__n")
+
+  /** The band self-join: (a, b) with a < b for every two rows sharing a
+    * (band, band_hash) bucket, each `carry` column as `<c>_a` / `<c>_b`.
+    * A pair repeats once per shared band. */
+  private def bandPairs(banded: DataFrame, carry: String*): DataFrame = {
+    def side(id: String) = banded.select(Seq(col("band"), col("band_hash"),
+      col("id").as(id)) ++ carry.map(c => col(c).as(s"${c}_$id")): _*)
+    side("a").join(side("b"), Seq("band", "band_hash"))
+      .filter(col("a") < col("b"))
+  }
+
+  /** The candidate pairs — member pairs plus the distinct pairs of the
+    * `banded` self-join — with both sides' shingle sets attached from
+    * `keyed` as sh_a / sh_b. Only the band side needs the pair dedup: a
+    * band pair repeats once per shared band, while member pairs are
+    * unique and disjoint from it. */
+  private def candidateSets(grouped: DataFrame, banded: DataFrame,
+      keyed: DataFrame): DataFrame =
+    memberPairs(grouped)
+      .unionByName(bandPairs(banded).select("a", "b").dropDuplicates("a", "b"))
+      .join(keyed.select(col("id").as("a"), col("shset").as("sh_a")),
+        Seq("a"))
+      .join(keyed.select(col("id").as("b"), col("shset").as("sh_b")),
+        Seq("b"))
 
   /** MinHash + LSH banding near-dup candidates, verified with exact
     * Jaccard over shingle-hash sets. `numHashes = bands * rowsPerBand`.
@@ -195,170 +289,93 @@ object Dedup {
       shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
       minJaccard: Double = 0.5, maxBucketSize: Int = 1000): DataFrame = {
     import graft.util.Stages.{time => stageT}
-    val numHashes = bands * rowsPerBand
     // ONE narrow cached projection carries the shingle sets, the
-    // row-local MinHash signatures AND the 128-bit signature keys
-    // (r19: MinHashArray removed the explode+aggregate shuffle, which
-    // also collapses the former sets/withSigKey cache pair into one
-    // frame and one fill action). It feeds the cluster aggregate, the
-    // member join and (twice) the exact verification join. Tokenless
-    // docs are dropped inside shingleSets, exactly as the exploded
-    // aggregation dropped them; such docs never joined a candidate pair.
-    //
-    // Signature grouping/joining rides a 128-bit hash of the signature
-    // (two independent xxhash64 streams), not the array itself: the
-    // 32-long array key is ~16× the bytes and element-wise to compare
-    // on the hottest dedup shuffle, while a 128-bit collision needs
-    // ~2^64 DISTINCT signatures before the birthday bound bites (at
-    // 10^9 distinct sigs the any-collision probability is ~10^-21). A
-    // single 64-bit key would NOT be safe here (birthday-collides at
-    // ~10^9 with real probability, silently merging unrelated groups).
-    val keyed = shingleSets(docs, idCol, textCol, shingleSize)
-      .select(col("id"), col("shset"),
-        graft.functions.MinHashArray.minhash(col("shset"), numHashes)
-          .as("sig"))
-      .select(col("id"), col("shset"), col("sig"),
-        xxhash64(col("sig")).as("__sk1"),
-        xxhash64(col("sig"), lit(1L)).as("__sk2"))
-      .persist()
+    // row-local MinHash signatures AND the 128-bit signature keys. It
+    // feeds the signature-group window and (twice) the exact
+    // verification join. Tokenless docs are dropped inside shingleSets;
+    // such docs never joined a candidate pair.
+    val keyed = keyedSigs(shingleSets(docs, idCol, textCol, shingleSize),
+      bands * rowsPerBand).persist()
     // force the cache ONCE before fan-out: the final action would
     // otherwise launch its branch stages concurrently and they'd race to
     // fill the cache, recomputing the shingle pipeline per branch
     stageT("lsh", "sets+signatures") { keyed.count() }
-    // rep = min(id) over ONE window on the signature key: the same frame
-    // yields the member→rep pairs (id ≠ rep) and the representatives with
-    // their own sig arrays (id = rep) — no aggregate, and no join back
-    // against keyed to re-attach the rep to each member.
-    // Skew bound: a window has no partial aggregation, so one task holds a
-    // whole signature group (every exact copy of a document), as the
-    // member join of the aggregate form already did; the rows are ids and
-    // one sig array each, and the task only takes a running min.
-    val withRep = keyed.select(col("id"), col("sig"),
-      min(col("id")).over(Window.partitionBy(col("__sk1"), col("__sk2")))
-        .as("rep"))
-      .persist()
-    val dupCand = withRep.filter(col("id") =!= col("rep"))
-      .select(col("rep").as("a"), col("id").as("b"))
-
+    val grouped = withRep(keyed, minHashKey).persist()
     // band-block only distinct signatures, skipping non-discriminating
-    // (over-full) buckets — their members remain reachable via other bands.
-    // The ONE banding action fills both caches (bounded's plan reads
-    // withRep's), so neither window runs again for the candidates below.
-    val reps = withRep.filter(col("id") === col("rep"))
-      .select(col("id"), col("sig"))
-    val bounded = boundBuckets(bandify(reps, bands, rowsPerBand),
-      maxBucketSize).persist()
+    // (over-full) buckets. The ONE banding action fills both caches
+    // (bounded's plan reads grouped's), so neither window runs again for
+    // the candidates below.
+    val bounded = boundBuckets(bandRows(reps(grouped),
+      minHashBands(bands, rowsPerBand)), maxBucketSize).persist()
     stageT("lsh", "banding") { bounded.count() }
-    val bandCand = bounded
-      .select(col("band"), col("band_hash"), col("id").as("a"))
-      .join(bounded.select(col("band"), col("band_hash"), col("id").as("b")),
-        Seq("band", "band_hash"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
 
     // eager snapshot: materialize the (small) verified pair set, then
     // release the intermediate caches — repeated calls in a long-lived
     // session must not accumulate cached blocks (util.Caches contract).
-    // Only the band side needs the pair dedup: a band pair can repeat
-    // across bands, while dupCand pairs are unique by construction (one
-    // signature group per id) and DISJOINT from band pairs (a dupCand
-    // `b` is a non-rep member; band pairs join reps only) — so dupCand
-    // rows skip the dropDuplicates exchange entirely (guide §2.4).
     val result = stageT("lsh", "candidates+verify") {
-      graft.util.Caches.snapshot(
-        dupCand.unionByName(bandCand.dropDuplicates("a", "b"))
-          .join(keyed.select(col("id").as("a"), col("shset").as("sh_a")),
-            Seq("a"))
-          .join(keyed.select(col("id").as("b"), col("shset").as("sh_b")),
-            Seq("b"))
+      graft.util.Caches.snapshot(candidateSets(grouped, bounded, keyed)
           .withColumn("jaccard", Shingles.jaccard(col("sh_a"), col("sh_b")))
           .filter(col("jaccard") >= minJaccard)
           .select(col("a"), col("b"), col("jaccard"))) }
-    keyed.unpersist(); withRep.unpersist(); bounded.unpersist()
+    keyed.unpersist(); grouped.unpersist(); bounded.unpersist()
     result
   }
 
-  /** Cross-engine-REPRODUCIBLE MinHash+LSH near-dup pairs: the same
-    * cluster-then-band pipeline as [[minHashLsh]], but every hash in it —
-    * shingle identity, the k MinHash functions, the band keys — is
-    * Column algebra a reference SQL engine can reproduce exactly: ONE
-    * md5 per shingle (h = first 60 bits, reduced mod p = 2^31−1), then
-    * h_i = ((2i+3)·h + i) mod p — multiply-mod-prime permutations whose
-    * products stay under 2^38, so they compute identically in engines
-    * that ERROR on 64-bit overflow instead of wrapping (the reason a
-    * splitmix/xxhash mix can't be the portable family). Verification
-    * emits the INTEGER sufficient statistics (n_inter, n_union of the
-    * distinct-shingle sets) with the threshold as an integer predicate
+  /** Cross-engine-REPRODUCIBLE MinHash+LSH near-dup pairs: the shared
+    * candidate core of [[minHashLsh]] (min-id rep per identical
+    * signature, banding over reps only, band self-join), but every hash
+    * in it — shingle identity, the k MinHash functions, the signature
+    * key, the band keys — is Column algebra a reference SQL engine can
+    * reproduce exactly: ONE md5 per distinct shingle string (h = first 60
+    * bits, reduced mod p = 2^31−1), then per row
+    * m_i = min over h of ((2i+3)·h + i) mod p — multiply-mod-prime
+    * permutations whose products stay under 2^38, so they compute
+    * identically in engines that ERROR on 64-bit overflow instead of
+    * wrapping (the reason a splitmix/xxhash mix can't be the portable
+    * family). The signature key and band keys are canonical strings
+    * (comma-joined decimals), so no 64-bit collision argument enters the
+    * replay. Buckets are not capped. Verification emits the INTEGER
+    * sufficient statistics (n_inter, n_union of the distinct-shingle
+    * sets) with the threshold as an integer predicate
     * (2·n_inter ≥ n_union ⟺ J ≥ 0.5) — no float ever crosses the
     * comparison boundary. This is the variant external hash gates check
-    * ([[minHashLsh]]'s xxhash64/OPH-aggregate internals are
-    * engine-specific, so its candidate set can't be replayed elsewhere);
-    * production pipelines keep [[minHashLsh]].
+    * ([[minHashLsh]]'s xxhash64/OPH internals are engine-specific, so its
+    * candidate set can't be replayed elsewhere); production pipelines
+    * keep [[minHashLsh]].
     *
-    * Same scale shape as [[minHashLsh]]: identical-signature clustering
-    * first (linear rep→member links), banding over reps only, shuffles
-    * keyed on signature/band/id — no all-pairs stage. */
+    * Tokenless docs (NULL, empty, whitespace-only) are dropped by the
+    * same `rlike("\\S")` guard as [[shingleSets]]: an empty shingle set
+    * would give an all-NULL signature shared by every such doc. */
   def minHashLshPortable(docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val base = docs
-      .filter(col(textCol).isNotNull && trim(col(textCol)) =!= "")
+    val p = 2147483647L // 2^31 − 1; (2k+3)·h + k < 2^38 — overflow-free
+    val keyed = docs.filter(col(textCol).rlike("\\S"))
       .select(col(idCol).as("id"),
         array_distinct(Shingles.wordShingles(col(textCol), shingleSize))
           .as("shset"))
+      // `transform(array(hbs), hb => ...)` binds the md5 array to a lambda
+      // variable: a lambda re-evaluates every captured subtree per
+      // element, so a projected column would be inlined and rehashed once
+      // per MinHash function
+      .select(col("id"), col("shset"),
+        element_at(transform(array(transform(col("shset"),
+          sh => conv(substring(md5(sh), 1, 15), 16, 10).cast(LongType) % p)),
+          hb => transform(sequence(lit(0), lit(bands * rowsPerBand - 1)),
+            i => array_min(transform(hb,
+              h => ((i * 2 + 3).cast(LongType) * h + i) % p)))), 1)
+          .as("sig"))
+      .withColumn("__sigstr",
+        concat_ws(",", transform(col("sig"), _.cast(StringType))))
       .persist()
-    base.count() // fill once before the fan-out (minHashLsh discipline)
-    val p = 2147483647L // 2^31 − 1; (2k+3)·h + k < 2^38 — overflow-free
-    val minCols = (0 until numHashes).map { i =>
-      min((lit(2L * i + 3) * col("__hb") + lit(i.toLong)) % p)
-        .as(s"__m$i")
-    }
-    val sigs = base.select(col("id"), explode(col("shset")).as("sh"))
-      .select(col("id"),
-        (conv(substring(md5(col("sh")), 1, 15), 16, 10).cast(LongType)
-          % p).as("__hb"))
-      .groupBy(col("id"))
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(i => col(s"__m$i")): _*).as("sig"))
-    // signature as a canonical string — the portable stand-in for the
-    // 128-bit xxhash64 key (cluster and join keys must be reproducible
-    // too; at gate scale the byte weight is irrelevant)
-    val withKey = sigs.select(col("id"), col("sig"),
-      concat_ws(",", transform(col("sig"), _.cast(StringType)))
-        .as("__sigstr")).persist()
-    withKey.count()
-    // min_by carries the rep's own sig array out of the SAME aggregate
-    // (the minHashLsh cluster shape): all rows of a __sigstr group share
-    // one sig array (the string is the canonical rendering), so the old
-    // left_semi join back against withKey re-shuffled the whole keyed
-    // signature set only to recover a value the aggregate already held
-    // (r18 opt — one corpus-keyed shuffle removed from the gate path)
-    val clusters = withKey.groupBy(col("__sigstr"))
-      .agg(min(col("id")).as("rep"),
-        min_by(col("sig"), col("id")).as("__repsig"))
-    val dup = withKey
-      .join(clusters.select(col("__sigstr"), col("rep")), Seq("__sigstr"))
-      .filter(col("id") =!= col("rep"))
-      .select(col("rep").as("a"), col("id").as("b"))
-    val reps = clusters.select(col("rep").as("id"),
-      col("__repsig").as("sig"))
-    val banded = reps.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
+    keyed.count() // fill once before the fan-out (minHashLsh discipline)
+    val grouped = withRep(keyed, Seq(col("__sigstr")))
+    val banded = bandRows(reps(grouped),
+      transform(sequence(lit(0), lit(bands - 1)), b =>
         concat_ws(",", transform(
           slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
           _.cast(StringType)))))
-        .as(Seq("band", "bkey")))
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
     val result = graft.util.Caches.snapshot(
-      dup.unionByName(cand).dropDuplicates("a", "b")
-        .join(base.select(col("id").as("a"), col("shset").as("sh_a")),
-          Seq("a"))
-        .join(base.select(col("id").as("b"), col("shset").as("sh_b")),
-          Seq("b"))
+      candidateSets(grouped, banded, keyed)
         .withColumn("n_inter",
           size(array_intersect(col("sh_a"), col("sh_b"))).cast(LongType))
         .withColumn("n_union",
@@ -366,7 +383,7 @@ object Dedup {
             - col("n_inter"))
         .filter(col("n_inter") * 2 >= col("n_union"))
         .select(col("a"), col("b"), col("n_inter"), col("n_union")))
-    base.unpersist(); withKey.unpersist()
+    keyed.unpersist()
     result
   }
 
@@ -398,9 +415,9 @@ object Dedup {
     * members → representative at Hamming 0, near pairs between
     * representatives), not the exhaustive member×member pair list.
     *
-    * Scale shape (found by ScaleSmoke at 100k docs): naive banding is
-    * quadratic in identical/near-identical signature mass — a corpus with
-    * heavy duplication explodes the band self-join. So:
+    * Scale shape (seen on a heavily duplicated 100k-doc corpus): naive
+    * banding is quadratic in identical/near-identical signature mass — a
+    * corpus with heavy duplication explodes the band self-join. So:
     *   1. identical signatures are clustered FIRST; each cluster emits
     *      linear (representative → member) pairs at Hamming 0, and only
     *      the representative enters banding;
@@ -418,53 +435,38 @@ object Dedup {
       maxHamming, maxBucketSize)
 
   /** Near-dup pairs within `maxHamming` over ANY 64-bit signature column
-    * (SimHash over tokens, dHash over image pixels, …): candidates via
-    * 4×16-bit band blocking (pigeonhole: Hamming ≤ 3 shares ≥ 1 exact
-    * band), verified with `bit_count(xor)`. Input schema: (id, sig).
-    * Output/scale contract is [[simHashPairs]]'s — identical signatures
-    * cluster to a representative first, only distinct signatures enter
-    * banding, and band buckets over `maxBucketSize` are dropped. */
+    * (SimHash over tokens, dHash over image pixels, …), on the shared
+    * candidate core of [[minHashLsh]]: identical signatures cluster to a
+    * min-id representative (members pair to it at Hamming 0), only reps
+    * enter banding on the four 16-bit slices of `sig` (pigeonhole:
+    * Hamming ≤ 3 shares ≥ 1 exact band), band buckets over
+    * `maxBucketSize` are dropped, and band pairs are verified with
+    * `bit_count(xor)`. Input schema: (id, sig); a NULL sig pairs with
+    * nothing. Output: (a, b, hamming). */
   def hammingPairs64(sigsIn: DataFrame, maxHamming: Int = 3,
       maxBucketSize: Int = 1000): DataFrame = {
-    val sigs = sigsIn.select(col("id"), col("sig")).persist()
-    sigs.count() // materialize once before the branches race for the cache
-
-    // identical-signature clusters: rep = min id, members pair to the rep
-    val clustered = sigs.groupBy(col("sig"))
-      .agg(min(col("id")).as("rep"))
-    val dupPairs = sigs.join(clustered, Seq("sig"))
-      .filter(col("id") =!= col("rep"))
-      .select(col("rep").as("a"), col("id").as("b"),
-        lit(0L).as("hamming"))
-
-    // band-block only distinct signatures (one rep per signature)
-    val reps = clustered.select(col("rep").as("id"), col("sig"))
-    val banded = reps.select(col("id"), col("sig"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)): _*))
-        .as(Seq("band", "band_val")))
-    val bucketSizes = banded.groupBy(col("band"), col("band_val"))
-      .agg(count(lit(1)).as("__bucket_n"))
-    val bounded = banded.join(
-      bucketSizes.filter(col("__bucket_n") <= maxBucketSize),
-      Seq("band", "band_val"))
-    val l = bounded.select(col("band"), col("band_val"),
-      col("id").as("a"), col("sig").as("sig_a"))
-    val r = bounded.select(col("band"), col("band_val"),
-      col("id").as("b"), col("sig").as("sig_b"))
+    // a NULL signature pairs with nothing (a window would group the
+    // NULLs as one signature); cached and filled once before the member
+    // and band branches read it
+    val grouped = withRep(sigsIn.select(col("id"), col("sig"))
+      .filter(col("sig").isNotNull), Seq(col("sig"))).persist()
+    grouped.count()
+    val bounded = boundBuckets(bandRows(reps(grouped),
+      array((0 until 4).map(b =>
+        shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)): _*), "sig"),
+      maxBucketSize)
     // hamming is a cheap bit_count — filter BEFORE the dedup shuffle so
     // only surviving pairs (not every multi-band candidate) get shuffled
-    val nearPairs = l.join(r, Seq("band", "band_val"))
-      .filter(col("a") < col("b"))
+    val nearPairs = bandPairs(bounded, "sig")
       .select(col("a"), col("b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast(LongType)
           .as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("a", "b")
-
     // eager snapshot, then release the signature cache (Caches contract)
-    val result = graft.util.Caches.snapshot(dupPairs.unionByName(nearPairs))
-    sigs.unpersist()
+    val result = graft.util.Caches.snapshot(memberPairs(grouped)
+      .withColumn("hamming", lit(0L)).unionByName(nearPairs))
+    grouped.unpersist()
     result
   }
 
@@ -625,22 +627,6 @@ object Dedup {
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Incremental near-dup matches: NEW docs against an existing KEPT
-    * corpus and against each other — the daily-increment shape. A crawl
-    * delta is a sliver of the accumulated corpus, so candidate generation
-    * must scale with |new|: the kept side is banded and bucket-counted
-    * but NEVER self-joined — kept×kept pairs (the quadratic mass a full
-    * re-dedup would pay every day) are simply never generated.
-    *
-    * Output: exact-verified matches (new_id, matched_id, jaccard,
-    * matched_kept) where jaccard ≥ `minJaccard`; new×new matches appear
-    * once with new_id > matched_id (smaller-id doc is the "original").
-    * Requires globally unique ids across both frames.
-    *
-    * At true scale the kept side's band table is a precomputed dedup
-    * INDEX maintained incrementally (append each day's survivors);
-    * banding it per call — as here — is still one narrow pass, never a
-    * join. */
   /** Precomputed kept-side near-dup index: per-doc shingle-hash sets and
     * the bounded banded-signature table (buckets hotter than
     * `maxBucketSize` are already dropped — they carry no discriminating
@@ -649,45 +635,6 @@ object Dedup {
     * (survivors' rows), so no call ever re-scans the accumulated corpus. */
   final case class NearDupIndex(sets: DataFrame, banded: DataFrame,
       bands: Int, rowsPerBand: Int, shingleSize: Int)
-
-  /** (id, sig) → one row per (band, 64-bit band hash). Shared by the
-    * batch LSH and the incremental index — the two paths must band
-    * identically or an index is not interchangeable with a re-dedup. */
-  private def bandify(sigs: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame =
-    sigs.select(col("id"),
-      posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rowsPerBand + 1,
-          lit(rowsPerBand)), b)))
-        .as(Seq("band", "band_hash")))
-
-  /** Drop band buckets hotter than `cap`: they carry no discriminating
-    * information and their members remain reachable via other bands.
-    * One count over a window on the bucket key instead of an aggregate
-    * joined back: the frame is read once, and no join.
-    * Skew bound: a window has no partial aggregation, so one task holds a
-    * whole bucket, hot ones included, as the bucket join of the aggregate
-    * form already did; its rows are (band, band hash, id) and the task
-    * only counts them. */
-  private def boundBuckets(banded: DataFrame, cap: Int): DataFrame =
-    banded
-      .withColumn("__n", count(lit(1)).over(
-        Window.partitionBy(col("band"), col("band_hash"))))
-      .filter(col("__n") <= cap).drop("__n")
-
-  /** One representative (min id) per distinct signature — the
-    * duplicate-heavy-corpus guard: banding members individually would
-    * push every bucket of heavily-duplicated content over the cap and
-    * silently lose it from candidate generation. Grouped on the compact
-    * 128-bit signature hash (see minHashLsh's cluster step for the
-    * collision/shuffle-weight arithmetic); the surviving row's own sig
-    * array rides along via min_by. */
-  private def sigReps(sigs: DataFrame): DataFrame =
-    sigs.groupBy(xxhash64(col("sig")).as("__sk1"),
-        xxhash64(col("sig"), lit(1L)).as("__sk2"))
-      .agg(min(col("id")).as("id"), min_by(col("sig"), col("id")).as("sig"))
-      .select(col("id"), col("sig"))
 
   def buildNearDupIndex(kept: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
@@ -705,20 +652,30 @@ object Dedup {
     // band one rep per distinct signature (duplicate-heavy guard, same as
     // minHashLsh): a new copy of kept boilerplate matches the rep — and
     // rep verification (exact Jaccard vs the rep's shingle set) decides
-    val reps = sigReps(sigsFromSets(sets, bands * rowsPerBand))
+    val grouped = withRep(keyedSigs(sets, bands * rowsPerBand), minHashKey)
     // snapshot before boundBuckets: unsnapshotted, every read of
     // index.banded (one per increment) would re-run the whole kept
     // shingle/MinHash pipeline
     val banded = graft.util.Caches.snapshot(
-      bandify(reps, bands, rowsPerBand))
+      bandRows(reps(grouped), minHashBands(bands, rowsPerBand)))
     val bounded = boundBuckets(banded, maxBucketSize)
     NearDupIndex(sets, bounded, bands, rowsPerBand, shingleSize)
   }
 
-  /** Match a delta against a prebuilt [[NearDupIndex]] — the per-call
-    * cost scales with the DELTA (new-side shingles/signatures plus joins
-    * that stream the index), never re-scanning the kept corpus. Callers
-    * should persist (or store) the index frames across increments.
+  /** Incremental near-dup matches: NEW docs against an existing KEPT
+    * corpus (a prebuilt [[NearDupIndex]]) and against each other — the
+    * daily-increment shape. A crawl delta is a sliver of the accumulated
+    * corpus, so candidate generation scales with |new|: the kept side is
+    * only streamed through joins against the delta's buckets and is NEVER
+    * self-joined — kept×kept pairs (the quadratic mass a full re-dedup
+    * would pay every day) are simply never generated, and the kept
+    * corpus is never re-scanned. Callers should persist (or store) the
+    * index frames across increments.
+    *
+    * Output: exact-verified matches (new_id, matched_id, jaccard,
+    * matched_kept) where jaccard ≥ `minJaccard`; new×new matches appear
+    * once with new_id > matched_id (smaller-id doc is the "original").
+    * Requires globally unique ids across both frames.
     *
     * Recall caveat: candidates are generated at the REPRESENTATIVE level
     * (one rep per distinct MinHash signature, both in the index and in
@@ -734,50 +691,30 @@ object Dedup {
       maxBucketSize: Int): DataFrame = {
     import graft.util.Stages.{time => stageT}
     // ONE narrow cached projection carries the delta's shingle sets,
-    // row-local MinHash signatures and 128-bit signature keys (r19: the
-    // explode+aggregate signature shuffle is gone — MinHashArray — and
-    // with it the separate newSets/newSigs cache pair and one fill
-    // action per call). Feeds reps, memberOf and the verify attach.
-    val newKeyed = shingleSets(newDocs, idCol, textCol, index.shingleSize)
-      .select(col("id"), col("shset"),
-        graft.functions.MinHashArray.minhash(col("shset"),
-          index.bands * index.rowsPerBand).as("sig"))
-      .select(col("id"), col("shset"), col("sig"),
-        xxhash64(col("sig")).as("__sk1"),
-        xxhash64(col("sig"), lit(1L)).as("__sk2"))
-      .persist()
+    // row-local MinHash signatures and 128-bit signature keys. Feeds the
+    // signature groups and the verify attach.
+    val newKeyed = keyedSigs(
+      shingleSets(newDocs, idCol, textCol, index.shingleSize),
+      index.bands * index.rowsPerBand).persist()
     stageT("incdup", "new-sets+sigs") { newKeyed.count() }
-    // duplicate-heavy DELTA guard (mirrors the batch path's sigReps): band
-    // ONE representative per distinct signature. Banding members
-    // individually means a delta carrying >maxBucketSize copies of the
-    // same boilerplate overflows every one of its band buckets, the cap
-    // drops them all, and every copy silently survives. Non-rep members
-    // inherit their rep's candidates (plus a member→rep candidate), all
-    // exact-Jaccard verified against each member's own shingle set.
-    // Signature grouping/joining is on the compact 128-bit hash key (see
-    // minHashLsh's cluster step), with the rep's own sig array riding
-    // along via min_by for banding.
-    val reps = newKeyed.groupBy(col("__sk1"), col("__sk2"))
-      .agg(min(col("id")).as("rep_id"),
-        min_by(col("sig"), col("id")).as("sig"))
-      .persist()
-    stageT("incdup", "new-reps") { reps.count() }
-    // NOT persisted (r19): both consumers (candidate expansion and the
-    // member→rep intra pairs) join two already-cached inputs — letting
-    // the tiny join evaluate twice is cheaper than a fill action per call
-    val memberOf = newKeyed
-      .join(reps.select(col("__sk1"), col("__sk2"), col("rep_id")),
-        Seq("__sk1", "__sk2"))
-      .select(col("id"), col("rep_id"))
-    val newBand = bandify(reps.select(col("rep_id").as("id"), col("sig")),
-      index.bands, index.rowsPerBand).persist()
+    // duplicate-heavy DELTA guard: band ONE representative per distinct
+    // signature. Banding members individually means a delta carrying
+    // >maxBucketSize copies of the same boilerplate overflows every one
+    // of its band buckets, the cap drops them all, and every copy
+    // silently survives. Non-rep members inherit their rep's candidates
+    // (plus a member→rep candidate), all exact-Jaccard verified against
+    // each member's own shingle set.
+    val grouped = withRep(newKeyed, minHashKey).persist()
+    stageT("incdup", "new-reps") { grouped.count() }
+    val newBand = bandRows(reps(grouped),
+      minHashBands(index.bands, index.rowsPerBand)).persist()
     stageT("incdup", "new-banding") { newBand.count() }
     // cap hot NEW buckets too (a hot bucket × every kept member is the
     // incremental analogue of the self-join blow-up); reps-only banding
     // means identical-content floods no longer trip this cap. SAME
     // helper as the batch path — a drifted copy of the cap rule would
     // make the incremental index stop being interchangeable with a
-    // re-dedup (the invariant the shared helpers protect)
+    // re-dedup
     val nb = boundBuckets(newBand, maxBucketSize)
     // the DELTA side broadcasts (it's small by contract): the index
     // streams map-side through the join — no corpus-sized shuffle per
@@ -787,41 +724,28 @@ object Dedup {
     // bucket far past maxBucketSize, and pairing every delta rep with
     // that bucket's whole population is exactly the hot-bucket blow-up
     // the cap exists to stop. Touched membership is delta-confined, so
-    // the re-cap is one aggregate over the pruned join output — never an
-    // index-wide shuffle; over-cap buckets drop entirely (their members
-    // stay reachable via other bands — the batch boundBuckets rule).
+    // the re-cap is one window over the pruned join output — never an
+    // index-wide shuffle.
     val keptTouched = index.banded
       .select(col("band"), col("band_hash"), col("id").as("matched_id"))
       .join(broadcast(nb.select(col("band"), col("band_hash")).distinct()),
         Seq("band", "band_hash"))
-      .persist()
-    // force the cache ONCE before the fan-out (okBuckets + candKept both
-    // scan it) — the same discipline as every other persist in this
-    // function; racing an unfilled cache runs the index join twice
-    stageT("incdup", "kept-touched") { keptTouched.count() }
-    val okBuckets = keptTouched.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__kn")).filter(col("__kn") <= maxBucketSize)
-      .select(col("band"), col("band_hash"))
-    val candKept = keptTouched
-      .join(broadcast(okBuckets), Seq("band", "band_hash"))
+    val candKept = boundBuckets(keptTouched, maxBucketSize)
       .join(broadcast(nb.select(col("band"), col("band_hash"),
         col("id").as("rep_id"))), Seq("band", "band_hash"))
       .select(col("rep_id"), col("matched_id"))
       .withColumn("matched_kept", lit(true))
-    val candNew = nb.select(col("band"), col("band_hash"),
-        col("id").as("rep_id"))
-      .join(nb.select(col("band"), col("band_hash"),
-        col("id").as("matched_id")), Seq("band", "band_hash"))
-      .filter(col("rep_id") > col("matched_id"))
-      .select(col("rep_id"), col("matched_id"))
+    val candNew = bandPairs(nb)
+      .select(col("b").as("rep_id"), col("a").as("matched_id"))
       .withColumn("matched_kept", lit(false))
     // expand rep-level candidates to every member of the rep's signature
     // group (a member is ≥ its rep, so the new-vs-new smaller-id ordering
     // is preserved), and pair each non-rep member with its own rep
-    val expanded = memberOf.join(candKept.unionByName(candNew), Seq("rep_id"))
+    val expanded = grouped.select(col("id"), col("rep").as("rep_id"))
+      .join(candKept.unionByName(candNew), Seq("rep_id"))
       .select(col("id").as("new_id"), col("matched_id"), col("matched_kept"))
-    val intraGroup = memberOf.filter(col("id") =!= col("rep_id"))
-      .select(col("id").as("new_id"), col("rep_id").as("matched_id"),
+    val intraGroup = memberPairs(grouped)
+      .select(col("b").as("new_id"), col("a").as("matched_id"),
         lit(false).as("matched_kept"))
     val allSets = index.sets
       .unionByName(newKeyed.select(col("id"), col("shset")))
@@ -843,8 +767,7 @@ object Dedup {
         .filter(col("jaccard") >= minJaccard)
         .select(col("new_id"), col("matched_id"), col("jaccard"),
           col("matched_kept"))) }
-    newKeyed.unpersist(); newBand.unpersist(); reps.unpersist()
-    keptTouched.unpersist()
+    newKeyed.unpersist(); grouped.unpersist(); newBand.unpersist()
     result
   }
 

@@ -59,6 +59,12 @@ class CacheLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("minHashLshPortable leaves no CacheManager entry") {
+    assertNoCacheEntry("minHashLshPortable") {
+      Dedup.minHashLshPortable(docs(300), "doc_id", "text", 3, 4, 4)
+    }
+  }
+
   test("simHashPairs (hammingPairs64) leaves no CacheManager entry") {
     assertNoCacheEntry("simHashPairs") {
       Dedup.simHashPairs(docs(300), "doc_id", "text")

@@ -647,4 +647,59 @@ class PlanQualitySpec extends SparkSpec {
     assert(shuffles.size <= 1 && broadcasts.size <= 3,
       s"${shuffles.size} shuffles, ${broadcasts.size} broadcasts:\n${verify.get}")
   }
+
+  test("q29's portable LSH runs at least one keyed exchange fewer than " +
+    "the explode + groupBy form") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // the distinct hash-partitioned shuffles of every plan the call runs:
+    // its cache fills, its snapshot and the final collect
+    def run(q: => DataFrame): (Int, Seq[String]) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit = plans.add(qe.executedPlan)
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val rows = try {
+        val out = q.collect().map(_.toString).toSeq
+        org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+        out
+      } finally spark.listenerManager.unregister(listener)
+      val seen = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+      def walk(p: SparkPlan): Unit = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case st: QueryStageExec => walk(st.plan)
+        case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+        case e: ShuffleExchangeExec =>
+          if (e.outputPartitioning.isInstanceOf[HashPartitioning]) seen.add(e)
+          walk(e.child)
+        case other => other.children.foreach(walk)
+      }
+      plans.asScala.foreach(walk)
+      (seen.size, rows)
+    }
+    val (got, rows) = run(SparkEntry.queries("q29_minhash_pairs")(spark, sfDir))
+    val (want, refRows) = run {
+      val docs = Tables.load(spark, sfDir, "documents")
+      DedupReference.minHashLshPortable(docs.unionByName(docs
+          .withColumn("doc_id", col("doc_id") + 1000000L)
+          .withColumn("text", concat(col("text"), lit(" zyxqj")))),
+          "doc_id", "text", shingleSize = 3, bands = 8, rowsPerBand = 4)
+        .orderBy(col("a"), col("b"))
+    }
+    assert(rows.nonEmpty && rows == refRows)
+    // row-local signatures drop the groupBy(id) over exploded shingles,
+    // and the rep window drops the clusters aggregate's join back
+    assert(got <= want - 1, s"$got keyed exchanges, reference $want")
+  }
 }

@@ -17,8 +17,8 @@ class PropertiesSpec extends SparkSpec {
   private val params = SCTest.Parameters.default
     .withMinSuccessfulTests(8).withWorkers(1)
 
-  private def check(name: String, prop: Prop): Unit = {
-    val res = SCTest.check(params, prop)
+  private def check(name: String, prop: Prop, cases: Int = 8): Unit = {
+    val res = SCTest.check(params.withMinSuccessfulTests(cases), prop)
     assert(res.passed, s"$name: ${res.status}")
   }
 
@@ -726,5 +726,96 @@ class PropertiesSpec extends SparkSpec {
     val f = graft.ext.TextStats.winnowingFingerprintNative(dup, "doc_id",
         "text", exact = false).collect().map(_.getSeq[Long](1).toSet)
     assert(f(0) == f(1) && f(0).nonEmpty)
+  }
+
+  test("the shared LSH candidate core returns the reference paths' rows") {
+    import graft.ext.Dedup
+    val cap = 2
+    val vocab = (0 until 16).map(i => s"w$i")
+    val words = Gen.choose(5, 12).flatMap(Gen.listOfN(_, Gen.oneOf(vocab)))
+    val blank: Gen[Option[String]] = Gen.oneOf(None, Some(""), Some("   "),
+      Some("\t"), Some("\t\n"), Some("\n \r\t"))
+    // originals (some NULL, empty or whitespace-only), exact copies (one
+    // signature group), the same tokens under other whitespace, near
+    // copies with one word appended, and six near variants of one long
+    // text, whose shared band buckets hold more than `cap` reps
+    val textsGen: Gen[Seq[Option[String]]] = for {
+      originals <- Gen.listOfN(8, Gen.frequency(
+        4 -> words.map(ws => Some(ws.mkString(" "))), 1 -> blank))
+      copies <- Gen.listOfN(8,
+        Gen.zip(Gen.choose(0, 7), Gen.choose(0, 2), Gen.oneOf(vocab)))
+      flood <- Gen.listOfN(16, Gen.oneOf(vocab))
+    } yield originals ++ copies.map { case (i, kind, w) =>
+      originals(i).map(t =>
+        if (kind == 0) t else if (kind == 1) t.replace(" ", "\t") else s"$t $w")
+    } ++ (0 until 6).map(j => Some((flood :+ s"f$j").mkString(" ")))
+    // 64-bit signatures: four bases, each copy with up to three bits
+    // flipped above its low 16-bit band (so that band's buckets run hot),
+    // exact copies among them, and NULL
+    val sigsGen: Gen[Seq[Option[Long]]] = Gen.listOfN(4, Gen.long)
+      .flatMap(bases => Gen.listOfN(24, Gen.frequency(1 -> Gen.const(None),
+        8 -> Gen.zip(Gen.oneOf(bases), Gen.listOfN(3, Gen.choose(0, 60)))
+          .map { case (b, bits) => Some(bits.filter(_ < 48)
+            .foldLeft(b)((x, k) => x ^ (1L << (16 + k)))) })))
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    // RDD-backed frames, so the plans run codegen'd over real partitions
+    def frame(texts: Seq[Option[String]], seed: Long): DataFrame =
+      spark.sparkContext.parallelize(new scala.util.Random(seed)
+        .shuffle(texts.indices.map(_ * 3L + 1)).zip(texts), 2)
+        .toDF("doc_id", "text")
+    def sigFrame(sigList: Seq[Option[Long]]): DataFrame =
+      spark.sparkContext.parallelize(
+        sigList.indices.map(_.toLong).zip(sigList), 2).toDF("id", "sig")
+    // (path, new rows, reference rows) for the five paths
+    def paths(texts: Seq[Option[String]], sigList: Seq[Option[Long]],
+        seed: Long, cap: Int): Map[String, (Seq[String], Seq[String])] = {
+      val docs = frame(texts, seed)
+      val sigs = sigFrame(sigList)
+      val kept = docs.filter(col("doc_id") % 2 === 1)
+      val fresh = docs.filter(col("doc_id") % 2 === 0)
+      val idx = Dedup.buildNearDupIndex(kept, "doc_id", "text",
+        maxBucketSize = cap)
+      val refIdx = DedupReference.buildNearDupIndex(kept, "doc_id", "text",
+        maxBucketSize = cap)
+      Map(
+        "minHashLsh" -> (rows(Dedup.minHashLsh(docs, "doc_id", "text",
+          minJaccard = 0.3, maxBucketSize = cap)),
+          rows(DedupReference.minHashLsh(docs, "doc_id", "text",
+            minJaccard = 0.3, maxBucketSize = cap))),
+        "minHashLshPortable" -> (rows(Dedup.minHashLshPortable(docs,
+          "doc_id", "text")),
+          rows(DedupReference.minHashLshPortable(docs, "doc_id", "text"))),
+        "hammingPairs64" -> (rows(Dedup.hammingPairs64(sigs, 3, cap)),
+          rows(DedupReference.hammingPairs64(sigs, 3, cap))),
+        "buildNearDupIndex" -> (rows(idx.banded), rows(refIdx.banded)),
+        "incrementalNearDupMatches" -> (rows(Dedup.incrementalNearDupMatches(
+          fresh, idx, "doc_id", "text", 0.3, cap)),
+          rows(DedupReference.incrementalNearDupMatches(fresh, refIdx,
+            "doc_id", "text", 0.3, cap))))
+    }
+    def mismatches(p: Map[String, (Seq[String], Seq[String])]): Seq[String] =
+      p.collect { case (name, (got, want)) if got != want => name }.toSeq
+    check("lsh core parity", Prop.forAllNoShrink(textsGen, sigsGen, Gen.long) {
+      (texts, sigList, seed) =>
+        val bad = mismatches(paths(texts, sigList, seed, cap))
+        Prop(bad.isEmpty) :| bad.mkString(", ")
+    }, cases = 5)
+    // one fixed corpus on which the cap changes the output of both capped
+    // pair paths, so a core that ignored it could not pass
+    val texts = Seq(Some("a b c d e f g h"), Some("a b c d e f g h"),
+      Some("a\tb\tc\td\te\tf\tg\th"), Some("a b c d e f g h x"), None,
+      Some(""), Some("   "), Some("\t"), Some("\t\n")) ++
+      (0 until 6).map(j => Some((('a' to 'p').map(_.toString) :+ s"f$j")
+        .mkString(" ")))
+    val sigList = (0 until 8).flatMap(k => Seq(
+      Some(0x5a5aL ^ (1L << (20 + k))), Some(0x5a5aL ^ (1L << (40 + k))))) ++
+      Seq(Some(0x5a5aL), None)
+    val capped = paths(texts, sigList, 7L, cap)
+    assert(mismatches(capped).isEmpty, mismatches(capped))
+    assert(capped("minHashLsh")._1 != rows(Dedup.minHashLsh(frame(texts, 7L),
+      "doc_id", "text", minJaccard = 0.3)))
+    assert(capped("hammingPairs64")._1 !=
+      rows(Dedup.hammingPairs64(sigFrame(sigList))))
   }
 }
