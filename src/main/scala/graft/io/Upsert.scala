@@ -1,177 +1,34 @@
 package graft.io
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.UUID
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** MERGE/upsert emulation (SURVEY §2.3 M1, §7.4).
+/** MERGE algebra (SURVEY §2.3 M1, §7.4).
   *
   * The reference uses Delta `MERGE` (reference `src/utils/spark_utils.py:285-344`):
   * equi-match on merge keys, matched rows update listed columns (or all),
-  * unmatched source rows insert. Delta itself implements MERGE as a join plus
-  * a file rewrite; without Delta jars we express the same thing directly as a
-  * full-outer join with source-wins resolution, then commit via
-  * staging-directory + atomic rename.
+  * unmatched source rows insert. Delta implements MERGE as a join plus a
+  * file rewrite committed through its transaction log. [[merge]] is the
+  * join half, a lazy full-outer join with source-wins resolution;
+  * [[VersionedTable.merge]] is the commit half: it merges only the files
+  * holding a source key and commits optimistically through the table log,
+  * so concurrent writers serialize there (EP2 and the streaming
+  * `mergeSink` both upsert that way).
   *
-  * Scale notes:
-  *  - The join shuffles both sides on the merge keys; when the source batch is
-  *    small relative to the target (the common CDC shape) AQE converts it to a
-  *    broadcast join automatically — no hint needed, but `broadcastSource`
-  *    forces it for predictable plans.
-  *  - Matched/inserted counts come from one aggregate over the join output
-  *    (the reference returns a -1 sentinel, spark_utils.py:344 — we return
-  *    real counts).
+  * Scale note: the join shuffles both sides on the merge keys; when the
+  * source batch is small relative to the target (the common CDC shape)
+  * AQE converts it to a broadcast join automatically.
   */
 object Upsert {
 
-  final case class MergeStats(inserted: Long, updated: Long)
-
-  /** Thrown when a second writer attempts a concurrent [[upsertParquet]]
-    * on the same target. This emulation is SINGLE-WRITER BY CONTRACT —
-    * Delta's log-mediated optimistic concurrency (the reference's MERGE,
-    * spark_utils.py:285-344) is exactly what a directory-swap commit
-    * cannot provide — so the guard exists to turn a silent lost-update /
-    * torn-swap into a loud, retryable error. */
+  /** Thrown when a write loses to a concurrent writer: a
+    * [[VersionedTable]] read-modify-write commit whose read version was
+    * overtaken by a conflicting commit, a commit that could not claim a
+    * log slot, or a [[Maintenance]] rewrite that finds the directory's
+    * writer lock held. Nothing of the losing write is visible; re-read
+    * and retry. */
   final class ConcurrentWriteException(msg: String)
     extends RuntimeException(msg)
-
-  /** Advisory single-writer lock around a table mutation: atomic
-    * lock-file create (POSIX `O_EXCL` semantics — also atomic on NFS v3+
-    * and HDFS; on object stores without atomic create this degrades to
-    * best-effort, which is still strictly better than no guard).
-    *
-    * Liveness: the holder HEARTBEATS the lock's mtime (daemon thread,
-    * every staleLockMs/4), so a legitimately long mutation — a
-    * multi-hour 100 TB merge — never looks abandoned. A lock older than
-    * `staleLockMs` therefore really is a killed JVM's leftover and is
-    * broken — by an atomic RENAME to a breaker-private tombstone, never
-    * delete+create: exactly one racing breaker can win the rename
-    * (deleteIfExists let a second breaker delete the first's FRESH
-    * lock), and the winner verifies by owner token that it renamed the
-    * lock it observed stale, restoring it if a live writer raced in.
-    * The interrupted swap itself is healed separately by
-    * `Maintenance.recoverOrphanedSwap`.
-    *
-    * private[io]: Maintenance.compact/clusterBy rewrite the same
-    * directory through the same two-move swap and MUST serialize with
-    * upserts under this lock — an unlocked compact racing an upsert can
-    * read pre-merge data and swap LAST, silently erasing the merge. */
-  private[io] def withWriterLock[T](targetPath: String, staleLockMs: Long)
-      (body: => T): T = {
-    val lock = Paths.get(targetPath + ".lock")
-    Option(lock.getParent).foreach(Files.createDirectories(_))
-    val token = UUID.randomUUID().toString
-    def readToken(p: Path): String =
-      try Files.readString(p) catch { case _: java.io.IOException => "" }
-    // create-exclusive WITH the owner token in place (tmp + hard link,
-    // the CommitArbiter.PosixLink shape) so a breaker can tell whose
-    // lock it renamed; no-hardlink filesystems fall back to
-    // create-then-write (brief empty-token window — breakers treat an
-    // unreadable token as a LIVE lock and restore, the safe side)
-    def tryAcquire(): Boolean = {
-      val tmp = Paths.get(s"$targetPath.lock.tmp-$token")
-      try {
-        Files.writeString(tmp, token)
-        try { Files.createLink(lock, tmp); true }
-        catch {
-          case _: UnsupportedOperationException =>
-            // no-hardlink fallback: create-exclusive may ALSO lose the
-            // race — map that to false here (the handler cases are
-            // siblings, so the outer FileAlreadyExistsException case
-            // would not catch a throw from inside this one)
-            try {
-              Files.createFile(lock)
-              Files.writeString(lock, token)
-              true
-            } catch {
-              case _: java.nio.file.FileAlreadyExistsException => false
-            }
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      } finally { Files.deleteIfExists(tmp); () }
-    }
-    var acquired = tryAcquire()
-    if (!acquired) {
-      val age =
-        try System.currentTimeMillis() -
-          Files.getLastModifiedTime(lock).toMillis
-        catch { case _: java.io.IOException => 0L } // vanished = fresh race
-      // an EMPTY token is still breakable when stale: externally created
-      // or fallback-crash locks have no token, and the fallback's brief
-      // empty-token window is always fresh-mtime (excluded by the age
-      // check) — the tombstone compare below still catches a live lock
-      // (nonempty token) renamed by mistake
-      val staleToken = readToken(lock)
-      if (age > staleLockMs) {
-        val tomb = Paths.get(s"$targetPath.lock.broken-$token")
-        val won =
-          try { Files.move(lock, tomb, StandardCopyOption.ATOMIC_MOVE); true }
-          catch { case _: java.io.IOException => false }
-        if (won) {
-          if (readToken(tomb) == staleToken) {
-            // broke the abandoned lock we observed; claim the slot
-            Files.deleteIfExists(tomb)
-            acquired = tryAcquire()
-          } else {
-            // the file changed owner between our stat and our rename —
-            // we stole a LIVE lock; put it back. The restore must FAIL
-            // when a third writer has already claimed the path (the
-            // path holder wins): rename(2) silently REPLACES an
-            // existing target on POSIX, so restore via hard link
-            // (create-exclusive semantics), falling back to
-            // create-exclusive + copy on no-hardlink filesystems. Only
-            // when the create succeeded is the tombstone consumed.
-            try { Files.createLink(lock, tomb); Files.delete(tomb) }
-            catch {
-              case _: java.nio.file.FileAlreadyExistsException =>
-                // a third writer holds the path — it wins; the stolen
-                // owner's heartbeat will recreate/err on its side
-                Files.deleteIfExists(tomb); ()
-              case _: UnsupportedOperationException =>
-                try {
-                  Files.createFile(lock)
-                  Files.writeString(lock, readToken(tomb))
-                  Files.deleteIfExists(tomb); ()
-                } catch {
-                  case _: java.nio.file.FileAlreadyExistsException =>
-                    Files.deleteIfExists(tomb); ()
-                }
-              case _: java.io.IOException =>
-                Files.deleteIfExists(tomb); ()
-            }
-          }
-        }
-      }
-      if (!acquired)
-        throw new ConcurrentWriteException(
-          s"another writer holds $lock (single-writer contract; " +
-            "retry after it completes, or remove the lock if its " +
-            "owner is known dead)")
-    }
-    // heartbeat: a live holder's lock never ages past staleLockMs
-    val period = math.max(1000L, staleLockMs / 4)
-    val hb = new Thread(() => {
-      try {
-        while (!Thread.currentThread().isInterrupted) {
-          Thread.sleep(period)
-          try Files.setLastModifiedTime(lock,
-            java.nio.file.attribute.FileTime.fromMillis(
-              System.currentTimeMillis()))
-          catch { case _: java.io.IOException => () }
-        }
-      } catch { case _: InterruptedException => () }
-    }, s"graft-upsert-lock-heartbeat-$token")
-    hb.setDaemon(true)
-    hb.start()
-    try body finally {
-      hb.interrupt()
-      // release only OUR lock — if something broke it despite the
-      // heartbeat, the current holder's file must survive our exit
-      if (readToken(lock) == token) { Files.deleteIfExists(lock); () }
-    }
-  }
 
   /** Pure (lazy) merge of `source` into `target`: full-outer join on `keys`;
     * on match, `updateColumns` (default: all non-key columns) come from the
@@ -182,29 +39,15 @@ object Upsert {
     *
     * PRECONDITION: the source must be key-unique. Duplicate source keys
     * match the same target row repeatedly — the output then carries the
-    * key twice and the stats double-count (Delta MERGE raises an error
-    * here; this emulation cannot detect it without an extra pass).
+    * key twice (Delta MERGE raises an error here; this emulation cannot
+    * detect it without an extra pass).
     * Pre-reduce CDC batches with `Transforms.deduplicateByKey` — the
     * streaming `mergeSink` does exactly that. */
   def merge(
       target: DataFrame,
       source: DataFrame,
       keys: Seq[String],
-      updateColumns: Option[Seq[String]] = None,
-      broadcastSource: Boolean = false): DataFrame =
-    mergeTracked(target, source, keys, updateColumns, broadcastSource, None)
-
-  /** [[merge]] with an optional [[org.apache.spark.sql.Observation]]: when
-    * supplied, updated/inserted counts are observed on the merge plan
-    * itself, so whatever action consumes the result (e.g. the upsert's
-    * staging write) yields the stats for free — no second join. */
-  def mergeTracked(
-      target: DataFrame,
-      source: DataFrame,
-      keys: Seq[String],
-      updateColumns: Option[Seq[String]],
-      broadcastSource: Boolean,
-      observation: Option[org.apache.spark.sql.Observation]): DataFrame = {
+      updateColumns: Option[Seq[String]] = None): DataFrame = {
     require(keys.nonEmpty, "merge keys must be non-empty")
     val dataCols = target.columns.filterNot(keys.contains).toSeq
     val updSet = updateColumns.getOrElse(dataCols).toSet
@@ -212,10 +55,9 @@ object Upsert {
     // Rename every source column up front: the aliased projection mints
     // fresh attribute ids, so merging a frame into ITSELF (or any shared
     // lineage) cannot hit self-join attribute ambiguity.
-    val s0 = source.select(
+    val s = source.select(
       source.columns.map(c => col(c).as(s"__s_$c")).toIndexedSeq :+
         lit(true).as("__s_present"): _*)
-    val s = if (broadcastSource) broadcast(s0) else s0
     val t = target.withColumn("__t_present", lit(true))
 
     val cond = keys.map(k => col(k) <=> col(s"__s_$k")).reduce(_ && _)
@@ -223,158 +65,12 @@ object Upsert {
 
     val sHere = col("__s_present").isNotNull
     val tHere = col("__t_present").isNotNull
-    val tracked = observation match {
-      case Some(obs) => joined.observe(obs,
-        sum(when(sHere && tHere, 1L).otherwise(0L)).as("updated"),
-        sum(when(sHere && !tHere, 1L).otherwise(0L)).as("inserted"))
-      case None => joined
-    }
     val keyCols = keys.map(k =>
       when(sHere, col(s"__s_$k")).otherwise(col(k)).as(k))
     val valCols = dataCols.map { c =>
       val fromSource = if (updSet.contains(c)) sHere else sHere && !tHere
       when(fromSource, col(s"__s_$c")).otherwise(col(c)).as(c)
     }
-    tracked.select(keyCols ++ valCols: _*)
-  }
-
-  /** Merge stats without materialising the merge twice: one aggregate over
-    * the join output. */
-  def mergeStats(
-      target: DataFrame,
-      source: DataFrame,
-      keys: Seq[String]): MergeStats = {
-    val t = target.select(keys.map(col): _*).withColumn("__t", lit(true))
-    val s = source.select(keys.map(col): _*).withColumn("__s", lit(true))
-    val cond = keys.map(k => t(k) <=> s(k)).reduce(_ && _)
-    val row = t.join(s, cond, "full_outer")
-      .agg(
-        sum(when(t("__t").isNotNull && s("__s").isNotNull, 1L).otherwise(0L)).as("updated"),
-        sum(when(t("__t").isNull && s("__s").isNotNull, 1L).otherwise(0L)).as("inserted"))
-      .head()
-    MergeStats(
-      inserted = Option(row.getAs[Long]("inserted")).getOrElse(0L),
-      updated = Option(row.getAs[Long]("updated")).getOrElse(0L))
-  }
-
-  /** Upsert `source` into the parquet table at `targetPath` (reference
-    * EP2, spark_utils.py:285-344). Bootstrap path: target absent → plain
-    * write. Otherwise merge → write staging dir → atomic directory swap; the
-    * prior version is retired alongside for `Maintenance.vacuum` to GC.
-    * Returns real inserted/updated counts.
-    *
-    * CONCURRENCY CONTRACT: single writer per target. Concurrent
-    * `upsertParquet` calls on one table throw [[ConcurrentWriteException]]
-    * (advisory lock file, broken automatically once `staleLockMs` old) —
-    * unlike Delta's optimistic log commit, a directory swap cannot merge
-    * two writers' work, so the second writer must retry after the first
-    * completes. Concurrent READERS of a swapped table are also exposed to
-    * a brief listing window during the two-move commit; pin readers to a
-    * snapshot (or schedule around writes) when that matters.
-    */
-  def upsertParquet(
-      spark: SparkSession,
-      source: DataFrame,
-      targetPath: String,
-      keys: Seq[String],
-      updateColumns: Option[Seq[String]] = None,
-      partitionBy: Seq[String] = Nil,
-      staleLockMs: Long = 60L * 60 * 1000): MergeStats =
-    withWriterLock(targetPath, staleLockMs) {
-      upsertParquetLocked(spark, source, targetPath, keys, updateColumns,
-        partitionBy)
-    }
-
-  private def upsertParquetLocked(
-      spark: SparkSession,
-      source: DataFrame,
-      targetPath: String,
-      keys: Seq[String],
-      updateColumns: Option[Seq[String]],
-      partitionBy: Seq[String]): MergeStats = {
-    def write(df: DataFrame, path: String): Unit =
-      Writers.writeParquet(df, path, partitionBy = partitionBy)
-    // heal an interrupted swap FIRST: a crash between the two commit
-    // moves leaves targetPath absent with the whole table in the newest
-    // .retired-* dir — without this the bootstrap branch below would
-    // silently rebuild the table from this batch alone
-    Maintenance.recoverOrphanedSwap(targetPath)
-    val dir = Paths.get(targetPath)
-    if (!Files.exists(dir)) {
-      // observe the count ON the bootstrap write — a separate count()
-      // would execute the whole source plan twice (the dominant cost of
-      // bootstrapping a large snapshot), and for a non-deterministic
-      // source could even disagree with what was written
-      val obs = org.apache.spark.sql.Observation(
-        s"boot_${UUID.randomUUID().toString.take(8)}")
-      // stage + atomic move, like the non-bootstrap swap: a crash
-      // mid-bootstrap must leave the target ABSENT (next run bootstraps
-      // cleanly), never a half-committed directory that a later upsert
-      // reads as the whole table — or a _temporary-only husk that
-      // bricks every later read. Orphaned staging dirs are vacuumed by
-      // the `.staging-` retention rule.
-      val bootStaging =
-        s"$targetPath.staging-${UUID.randomUUID().toString.take(8)}"
-      write(source.observe(obs, count(lit(1)).as("inserted")), bootStaging)
-      Files.move(Paths.get(bootStaging), dir,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      var m = org.apache.spark.sql.graftbridge.Bridge.observedOrEmpty(obs)
-      var waitedMs = 0
-      while (m.isEmpty && waitedMs < 5000) {
-        Thread.sleep(100); waitedMs += 100
-        m = org.apache.spark.sql.graftbridge.Bridge.observedOrEmpty(obs)
-      }
-      val n = m.get("inserted")
-        .collect { case l: java.lang.Long => l.longValue }
-        // fallback recounts the WRITTEN files (metadata-cheap), never the
-        // source plan
-        .getOrElse(spark.read.parquet(targetPath).count())
-      return MergeStats(inserted = n, updated = 0L)
-    }
-    // Partition-column values come back from DIRECTORY NAMES on read;
-    // default type inference would turn a string partition value like
-    // "007" into int 7 and corrupt keys through the merge round-trip.
-    // Read them as strings and cast each partition column back to the
-    // SOURCE's declared type.
-    val raw = Maintenance.readInferenceOff(spark, targetPath)
-    val target = partitionBy.foldLeft(raw) { (df, c) =>
-      source.schema.find(_.name == c)
-        .map(f => df.withColumn(c, col(c).cast(f.dataType)))
-        .getOrElse(df)
-    }
-    // Stats ride the staging write as observed metrics: ONE full-outer join
-    // total. A separate mergeStats() pass would run the join twice — at
-    // 100 TB that doubles the most expensive operation in the pipeline.
-    val obs = org.apache.spark.sql.Observation(
-      s"merge_${UUID.randomUUID().toString.take(8)}")
-    val staging = s"$targetPath.staging-${UUID.randomUUID().toString.take(8)}"
-    write(mergeTracked(target, source, keys, updateColumns,
-      broadcastSource = false, Some(obs)), staging)
-    // Resolve stats BEFORE the swap: the fallback re-reads `target`, whose
-    // file listing points at the pre-swap paths — after the move those
-    // files live in the retired dir and the scan would fail (or silently
-    // recount against the merged table).
-    // The metrics arrive via the async listener bus; under backlog a
-    // single non-blocking read can miss them and the fallback would
-    // re-run the full-outer join — the exact cost this path eliminates.
-    // Poll briefly (bounded, never hangs) before giving up.
-    var m = org.apache.spark.sql.graftbridge.Bridge.observedOrEmpty(obs)
-    var waitedMs = 0
-    while (m.isEmpty && waitedMs < 5000) {
-      Thread.sleep(100); waitedMs += 100
-      m = org.apache.spark.sql.graftbridge.Bridge.observedOrEmpty(obs)
-    }
-    def metric(name: String): Option[Long] =
-      m.get(name).collect { case l: java.lang.Long => l.longValue }
-    val stats = (metric("inserted"), metric("updated")) match {
-      case (Some(ins), Some(upd)) => MergeStats(inserted = ins, updated = upd)
-      // metrics missing (action stopped posting SQL events — shouldn't
-      // happen on current Spark): fall back to the two-pass count
-      case _ => mergeStats(target, source, keys)
-    }
-    // the shared two-move commit (crash window healed by
-    // recoverOrphanedSwap at the top of the next table operation)
-    Maintenance.swap(targetPath, staging)
-    stats
+    joined.select(keyCols ++ valCols: _*)
   }
 }

@@ -13,10 +13,11 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
 
 import graft.util.{Fmt, Stages}
 
-/** Log-mediated versioned parquet table: the Delta-lake surface the plain
-  * directory-swap [[Upsert]] cannot provide (reference
+/** Log-mediated versioned parquet table: the Delta-lake surface (reference
   * `src/utils/spark_utils.py:285-344` gets MERGE concurrency + `RESTORE`
-  * history from Delta's transaction log for free).
+  * history from Delta's transaction log for free). Every upsert in the
+  * engine commits here: EP2 (q177) and the streaming `mergeSink` through
+  * [[merge]], with [[Upsert.merge]] as the row algebra.
   *
   * Layout:
   * {{{
@@ -34,7 +35,8 @@ import graft.util.{Fmt, Stages}
   * every historical version stays readable until [[vacuum]] ages its files
   * out — exactly the Delta time-travel/retention contract.
   *
-  * Concurrency (the reason this exists next to [[Upsert]]):
+  * Concurrency (multi-writer, unlike a plain parquet directory, whose
+  * rewrites [[Maintenance]] must serialize under a lock):
   *  - commits publish through a pluggable [[CommitArbiter]] (default:
   *    ATOMIC hard-link/move of a fully-written temp file to the next
   *    version slot — the filesystem arbitrates racing writers, first
@@ -76,10 +78,14 @@ object VersionedTable {
   sealed trait Isolation
   object Isolation {
     /** The default (as in Delta): interleaved commits that are blind
-      * add-only appends (no removes, no deletion-vector changes, no
-      * schema change) REBASE — the op's remove/DV sets were derived at
-      * its read version and an append cannot invalidate them, so the op
-      * commits on top rather than aborting. The documented anomaly: rows
+      * appends (`append` commits: no removes, no deletion-vector
+      * changes, no schema change) REBASE — the op's remove/DV sets were
+      * derived at its read version and an append cannot invalidate them,
+      * so the op commits on top rather than aborting. An add-only MERGE
+      * or applyChanges is not blind (it read the table to find its keys
+      * new), so a second MERGE of the same new key conflicts instead of
+      * duplicating it; OPTIMIZE, which changes no rows, still rebases
+      * over one. The documented anomaly: rows
       * appended concurrently are not seen by the op's predicate/join
       * (a concurrent MERGE + blind append can momentarily duplicate a
       * key; the next MERGE collapses it). Anything beyond a blind append
@@ -1122,16 +1128,26 @@ object VersionedTable {
       // read-modify-write ops derived their add/remove/DV sets from the
       // state at readVersion, so a commit landed beyond it is a conflict
       // — UNLESS the op runs at WriteSerializable isolation and every
-      // interleaved commit is a blind add-only append (no removes, no DV
-      // changes, no schema change): an append cannot invalidate a
-      // remove/DV set derived at readVersion, so the op REBASES over it
-      // and commits on top (see [[Isolation.WriteSerializable]]).
+      // interleaved commit is a blind append (no removes, no DV changes,
+      // no schema change): an append cannot invalidate a remove/DV set
+      // derived at readVersion, so the op REBASES over it and commits on
+      // top (see [[Isolation.WriteSerializable]]).
       readVersion.foreach { rv =>
         if (next != rv + 1) {
           val blindAppends = rebaseOverAdds &&
             versions(table).filter(v => v > rv && v < next)
               .map(v => parseCommit(versionFile(table, v)))
-              .forall(c => c.remove.isEmpty && c.dvAdd.isEmpty &&
+              // only an `append` commit is blind: an add-only MERGE or
+              // applyChanges READ the table to decide its rows were new,
+              // so a merge rebasing over one would insert the same new
+              // key a second time (Delta: only isBlindAppend commits
+              // skip the read-conflict check). A commit adding nothing
+              // carries nothing to conflict with, and OPTIMIZE changes
+              // no rows, so any add-only commit leaves it valid (Delta
+              // runs dataChange=false commits at snapshot isolation).
+              .forall(c => (c.op == "append" || c.add.isEmpty ||
+                  op == "optimize") &&
+                c.remove.isEmpty && c.dvAdd.isEmpty &&
                 c.dvRemove.isEmpty &&
                 // a property commit is a REAL conflict, not a blind
                 // append: rebasing a MERGE/DELETE over an interleaved
@@ -2575,10 +2591,7 @@ object VersionedTable {
         // is old enough (the strict form left a same-millisecond flake
         // at retainMs = 0)
         Files.getLastModifiedTime(p).toMillis <= nowMs - retainMs) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-        finally walk.close()
+        graft.util.Fs.deleteRecursively(p)
         removed += 1
       } else if ((n.endsWith(".parquet") || n.endsWith("-bloom.json")) &&
         !live.contains(n) &&

@@ -85,11 +85,12 @@ object Transforms {
   }
 
   /** Scale-safe surrogate keys: two-phase — per-partition ranks plus an
-    * exclusive running offset of partition sizes (computed from a tiny
-    * per-partition count aggregate, broadcast back). Produces the same
-    * dense 1..N keys ordered by the natural keys, without a single-partition
-    * window. The extra cost over the global window is one range shuffle
-    * (for global order) + one tiny aggregate. */
+    * exclusive running offset of partition sizes (a tiny per-partition
+    * count collected to the driver, summed there by [[partitionOffsets]]
+    * and broadcast back). Produces the same dense 1..N keys ordered by
+    * the natural keys, without a single-partition window. The extra cost
+    * over the global window is one range shuffle (for global order) + one
+    * tiny aggregate. */
   def addSurrogateKeyScalable(
       df: DataFrame,
       keyColumnName: String,
@@ -116,28 +117,37 @@ object Transforms {
         .withColumn("__pid", spark_partition_id())
         .withColumn("__lrn", monotonically_increasing_id()
           .bitwiseAND(lit((1L << 33) - 1)) + lit(1L)))
-    val offsets = ordered.groupBy("__pid").count()
-      // the 33-bit record counter the ordinals came from WRAPS past
-      // 2^33 rows in one partition (a hot natural key funnels all its
-      // rows to one range partition) — wrapped ordinals would emit
-      // DUPLICATE "unique" keys silently, so fail the query instead the
-      // moment any partition count says it happened
-      .withColumn("count", when(col("count") >= (1L << 33),
-        raise_error(concat(lit("addSurrogateKeyScalable: a range " +
-          "partition holds "), col("count"),
-          lit(" rows — past the 2^33 per-partition ordinal range; " +
-            "key assignment would wrap and collide. Split the hot " +
-            "natural key or salt it.")))).otherwise(col("count")))
-      .withColumn("__offset",
-        coalesce(
-          sum(col("count")).over(
-            Window.orderBy(col("__pid"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("__pid"), col("__offset"))
+    // per-partition counts come to the driver (a few rows, one per range
+    // partition); the offsets are their exclusive prefix sums, joined back
+    // as a broadcast local relation — no single-partition window
+    val counts = ordered.groupBy("__pid").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toSeq
+    val offsets = df.sparkSession
+      .createDataFrame(partitionOffsets(counts))
+      .toDF("__pid", "__offset")
     ordered.join(broadcast(offsets), "__pid")
       .withColumn(keyColumnName, (col("__offset") + col("__lrn")).cast("long"))
       .drop("__pid", "__lrn", "__offset")
+  }
+
+  /** Exclusive prefix sums of per-partition row counts, in partition-id
+    * order: `(pid, rows before pid)`. The ordinals
+    * [[addSurrogateKeyScalable]] adds to these offsets come from
+    * `monotonically_increasing_id`'s 33-bit per-partition record counter,
+    * which WRAPS past 2^33 rows in one partition (a hot natural key
+    * funnels all its rows to one range partition) — wrapped ordinals
+    * would emit DUPLICATE "unique" keys silently, so any such count
+    * fails here instead. */
+  private[graft] def partitionOffsets(
+      counts: Seq[(Int, Long)]): Seq[(Int, Long)] = {
+    counts.find(_._2 >= (1L << 33)).foreach { case (_, n) =>
+      throw new IllegalStateException("addSurrogateKeyScalable: a range " +
+        s"partition holds $n rows — past the 2^33 per-partition ordinal " +
+        "range; key assignment would wrap and collide. Split the hot " +
+        "natural key or salt it.")
+    }
+    val byPid = counts.sortBy(_._1)
+    byPid.map(_._1).zip(byPid.scanLeft(0L)(_ + _._2))
   }
 
   /** Scale-safe rank WITHIN a group (ties broken by the order columns —
@@ -168,8 +178,8 @@ object Transforms {
           .bitwiseAND(lit((1L << 33) - 1))))
     // per-(partition, group): row count and first physical index —
     // #partitions × #groups rows. The 33-bit ordinal wrap guard rides
-    // the same aggregate (see addSurrogateKeyScalable: wrapped ordinals
-    // would emit colliding ranks silently).
+    // the same aggregate (see partitionOffsets: wrapped ordinals would
+    // emit colliding ranks silently).
     // snapshot the (small) aggregate: the cardinality probe below and
     // the offsets window both read it without re-aggregating `ordered`
     val perPart = graft.util.Caches.snapshot(ordered

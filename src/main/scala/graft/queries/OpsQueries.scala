@@ -328,37 +328,41 @@ object OpsQueries {
       }
     }),
 
-    // EP2 upsertParquet END-TO-END on disk (bootstrap write -> staged
-    // merge -> atomic directory swap, advisory writer lock, observed
-    // merge stats), previously ScalaTest-only: bootstrap the mod-3
-    // survivors partitioned by status, upsert the even-key source
-    // (price+1000, status 'U' — rows MOVE partitions), read the swapped
-    // table back. The '~stats' row hashes the REAL inserted/updated
-    // counts (observed on the staging write, not recounted); the final
-    // state replays q13's merge algebra in the oracle. A partition-value
-    // type corruption, a lost swap, or wrong stats all flip the hash.
+    // EP2 (the reference's Delta MERGE, spark_utils.py:285-344) END-TO-END
+    // on disk through the VersionedTable log: bootstrap the mod-3
+    // survivors with an append, enable change capture, merge the even-key
+    // source (price+1000, status 'U'), read the latest snapshot back. The
+    // '~stats' row hashes the inserted/updated counts the merge commit
+    // itself wrote (its insert / update_postimage change rows), not a
+    // recount from the source; the final state replays q13's merge
+    // algebra in the oracle. A lost commit, a dropped or duplicated row,
+    // or wrong change capture all flip the hash.
     "q177_upsert_parquet" -> ((s, dir) => {
       val scratch = java.nio.file.Files.createTempDirectory("graft-ep2")
       try {
+        val vt = graft.io.VersionedTable
         val base = t(s, dir, "orders").filter(col("o_orderkey") < 20000)
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"))
         val path = scratch.resolve("t").toString
-        graft.io.Upsert.upsertParquet(s,
-          base.filter(col("o_orderkey") % 3 =!= 0), path,
-          keys = Seq("o_orderkey"), partitionBy = Seq("o_orderstatus"))
-        val stats = graft.io.Upsert.upsertParquet(s,
+        vt.append(s, base.filter(col("o_orderkey") % 3 =!= 0), path)
+        vt.setProperties(path, Map(vt.CdfProp -> "true"))
+        val v = vt.merge(s,
           base.filter(col("o_orderkey") % 2 === 0)
             .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
             .withColumn("o_orderstatus", lit("U")),
-          path, keys = Seq("o_orderkey"), partitionBy = Seq("o_orderstatus"))
-        val out = s.read.parquet(path)
+          path, keys = Seq("o_orderkey")).version
+        def changed(kind: String) =
+          sum(when(col("_change_type") === kind, 1L).otherwise(0L))
+        val stats = vt.tableChanges(s, path, v - 1, v)
+          .agg(changed("insert").as("n"),
+            changed("update_postimage").as("key_sum"))
+        val out = vt.snapshot(s, path)
           .groupBy(col("o_orderstatus").as("bucket"))
           .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("key_sum"),
             Q.dsum(col("o_totalprice")).as("total"))
-          .unionByName(s.range(1).select(lit("~stats").as("bucket"),
-            lit(stats.inserted).as("n"), lit(stats.updated).as("key_sum"),
-            lit(null).cast("double").as("total")))
+          .unionByName(stats.select(lit("~stats").as("bucket"), col("n"),
+            col("key_sum"), lit(null).cast("double").as("total")))
           .orderBy(col("bucket"))
         graft.util.Caches.snapshot(out)
       } finally {
@@ -633,7 +637,7 @@ object OpsQueries {
         |  CAST(SUM(bonus) AS BIGINT) AS bonus_sum
         |FROM u GROUP BY st ORDER BY st""".stripMargin,
 
-    // q13's merge algebra on the on-disk swap path, plus the real
+    // q13's merge algebra on the on-disk log path, plus the real
     // inserted/updated counts in the '~stats' row: inserted = source
     // keys absent from the bootstrap (even AND mod-3), updated = the
     // rest of the source (even, not mod-3).

@@ -182,28 +182,40 @@ object Streams {
       .partitionBy("ingest_batch")
       .parquet(dir)
 
-  /** Continuous MERGE into a parquet lakehouse table — the standard
+  /** Continuous MERGE into a [[graft.io.VersionedTable]] — the standard
     * CDC-ingest sink shape: each micro-batch is reduced to its latest row
     * per key (intra-batch CDC ordering by `orderCol`; remaining columns
     * tie-break so the winner is a DETERMINISTIC total order, which makes a
-    * checkpoint-replayed batch upsert the same row again), then upserted
-    * via the atomic-swap [[graft.io.Upsert]].
+    * checkpoint-replayed batch upsert the same row again), then committed
+    * through the table log with `VersionedTable.merge`, which rewrites
+    * only the files holding a batch key. A missing target is first
+    * created by an empty `VersionedTable.append` that records only the
+    * schema, so even the first batch's rows go through merge. Read the
+    * target with `VersionedTable.snapshot`. A second writer on the same
+    * target commits optimistically instead of failing on a lock: two
+    * empty bootstrap appends are harmless, and a merge that raced another
+    * merge over the same files or the same new keys raises
+    * [[graft.io.Upsert.ConcurrentWriteException]] and fails the batch.
     *
-    * Each upsert retires the previous table version next to the target;
-    * `vacuumRetired` (default on) deletes versions older than
-    * `retainMs` after every batch — leave it on for continuous streams or
-    * disk grows by one table copy per micro-batch.
+    * Each merge retires the files it rewrote; `vacuumRetired` (default on)
+    * runs `VersionedTable.vacuum` with `retainMs` on the first batch and
+    * then on the first batch at least `retainMs` after the last run —
+    * leave it on for continuous streams or retired files accumulate.
+    * Vacuum replays the whole log, so it runs once per `retainMs`, not
+    * once per batch; while batches arrive, a retired file goes within
+    * about 2 × `retainMs`.
     *
-    * Scale: state-free — all heavy lifting is the batch merge join, which
-    * inherits Upsert's AQE broadcast of small CDC batches against the big
-    * target. */
+    * Scale: state-free — all heavy lifting is the file-granular merge
+    * join, whose small CDC batches AQE broadcasts against the touched
+    * target files. */
   def mergeSink(events: DataFrame, targetPath: String, keys: Seq[String],
       orderCol: String, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       vacuumRetired: Boolean = true,
       retainMs: Long = 3600L * 1000)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val lastVacuumMs = new java.util.concurrent.atomic.AtomicLong(0L)
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -232,14 +244,20 @@ object Streams {
             withJson, keys, orderCol, ascending = false,
             tieBreakers = if (unord.isEmpty) ties else ties :+ tieJson)
             .drop(tieJson)
-          graft.io.Upsert.upsertParquet(
-            batch.sparkSession, latest, targetPath, keys)
-          if (vacuumRetired)
-            graft.io.Maintenance.vacuum(targetPath, retainMs)
+          val vt = graft.io.VersionedTable
+          if (vt.latestVersion(targetPath).isEmpty)
+            vt.append(batch.sparkSession, latest.limit(0), targetPath)
+          vt.merge(batch.sparkSession, latest, targetPath, keys)
+          val now = System.currentTimeMillis()
+          if (vacuumRetired && now - lastVacuumMs.get() >= retainMs) {
+            vt.vacuum(targetPath, retainMs, now)
+            lastVacuumMs.set(now)
+          }
         }
         ()
       }
       .start()
+  }
 
   /** True iff the directory holds at least one COMMITTED data file —
     * `fs.exists` alone is not loadability: a crash mid-write leaves the

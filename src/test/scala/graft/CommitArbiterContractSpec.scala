@@ -20,10 +20,10 @@ import graft.io.{CommitArbiter, FileObjectStore, InMemoryObjectStore,
   *  1. raw slot-claim laws (exactly-one-winner, untorn content, loser
   *     never throws, slots independent, pre-existing objects lose);
   *  2. the table-level race suite — concurrent appends, WriteSerializable
-  *     rebase over an interleaved commit, Serializable abort, loser
-  *     schema revalidation — re-run with the arbiter installed
-  *     process-wide, proving the table logic needs nothing from the
-  *     storage layer beyond the trait.
+  *     rebase over an interleaved commit, Serializable abort, MERGE vs
+  *     MERGE and MERGE vs append, loser schema revalidation — re-run with
+  *     the arbiter installed process-wide, proving the table logic needs
+  *     nothing from the storage layer beyond the trait.
   */
 class CommitArbiterContractSpec extends SparkSpec {
   import spark.implicits._
@@ -141,16 +141,80 @@ class CommitArbiterContractSpec extends SparkSpec {
 
   // interposes a REAL interleaved commit at the moment the op under test
   // claims its slot — the same racer as VersionedTableSpec, but both the
-  // racer's commit and the retry go through ConditionalPut
-  private def withRacer[T](race: => Unit)(body: => T): T = {
+  // racer's commit and the retry go through `under` (ConditionalPut by
+  // default)
+  private def withRacer[T](race: => Unit,
+      under: CommitArbiter = CommitArbiter.ConditionalPut)(body: => T): T = {
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     val racer = new CommitArbiter {
       def tryClaim(dir: Path, target: Path, json: String): Boolean =
-        if (fired.getAndSet(true))
-          CommitArbiter.ConditionalPut.tryClaim(dir, target, json)
+        if (fired.getAndSet(true)) under.tryClaim(dir, target, json)
         else { race; false }
     }
     withArbiter(racer)(body)
+  }
+
+  private def rows(t: String): Map[Int, String] =
+    VT.snapshot(spark, t).as[(Int, String)].collect().toMap
+
+  // MERGE races: what a writer lock used to guarantee for the directory
+  // swap (a concurrent upsert fails loudly, the winner's rows survive),
+  // proved on the log under both conditional-put arbiters
+  for ((name, arb) <- Seq(
+      "ConditionalPut" -> (() => CommitArbiter.ConditionalPut),
+      "ObjectStore" -> (() =>
+        new ObjectStoreArbiter(new InMemoryObjectStore): CommitArbiter))) {
+
+    test(s"[$name] a merge whose hit file a racing merge rewrote fails " +
+        "loudly; the racer's rows survive") {
+      val a = arb()
+      withTable { t =>
+        withArbiter(a) {                                     // v0: one file
+          VT.append(spark, df(1 -> "a", 2 -> "b").coalesce(1), t,
+            optimizeWrite = false)
+        }
+        withRacer(VT.merge(spark, df(1 -> "racer"), t, Seq("id")), a) {
+          intercept[Upsert.ConcurrentWriteException] {
+            VT.merge(spark, df(2 -> "mine"), t, Seq("id"))
+          }
+        }
+        assert(VT.latestVersion(t).contains(1L))
+        assert(rows(t) == Map(1 -> "racer", 2 -> "b"))
+      }
+    }
+
+    test(s"[$name] a merge racing a pure-insert merge of the same new " +
+        "key fails loudly; the key lands once") {
+      val a = arb()
+      withTable { t =>
+        withArbiter(a) {
+          VT.append(spark, df(1 -> "a"), t)                  // v0: no key 5
+        }
+        withRacer(VT.merge(spark, df(5 -> "r"), t, Seq("id")), a) { // v1
+          intercept[Upsert.ConcurrentWriteException] {
+            VT.merge(spark, df(5 -> "m"), t, Seq("id"))
+          }
+        }
+        assert(VT.latestVersion(t).contains(1L))
+        assert(VT.snapshot(spark, t).as[(Int, String)].collect()
+          .sortBy(_._1).toSeq == Seq(1 -> "a", 5 -> "r"))
+      }
+    }
+
+    test(s"[$name] a merge racing a blind append rebases " +
+        "(WriteSerializable); both writes land") {
+      val a = arb()
+      withTable { t =>
+        withArbiter(a) {
+          VT.append(spark, df(1 -> "a", 2 -> "b"), t)        // v0
+        }
+        withRacer(VT.append(spark, df(9 -> "z"), t), a) {    // steals v1
+          VT.merge(spark, df(2 -> "B", 3 -> "c"), t, Seq("id")) // v2
+        }
+        assert(VT.latestVersion(t).contains(2L))
+        assert(rows(t) == Map(1 -> "a", 2 -> "B", 3 -> "c", 9 -> "z"))
+      }
+    }
   }
 
   test("[ConditionalPut] WriteSerializable: OPTIMIZE rebases over an " +
@@ -373,13 +437,7 @@ class CommitArbiterContractSpec extends SparkSpec {
       withArbiter(arb) {
         VT.append(spark, df(1 -> "a", 2 -> "b"), t) // v0
       }
-      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val racer = new CommitArbiter {
-        def tryClaim(dir: Path, target: Path, json: String): Boolean =
-          if (fired.getAndSet(true)) arb.tryClaim(dir, target, json)
-          else { VT.append(spark, df(9 -> "z"), t); false }
-      }
-      withArbiter(racer) {
+      withRacer(VT.append(spark, df(9 -> "z"), t), arb) {
         VT.compact(spark, t, targetFiles = 1) // rebases: v2
       }
       assert(VT.latestVersion(t).contains(2L))

@@ -49,6 +49,21 @@ class TransformsSpec extends SparkSpec {
     assert(global.toSeq == scalable.toSeq)
   }
 
+  test("partitionOffsets: exclusive prefix sums by pid; 2^33 rows fail") {
+    assert(Transforms.partitionOffsets(Seq(2 -> 5L, 0 -> 3L, 1 -> 4L)) ==
+      Seq(0 -> 0L, 1 -> 3L, 2 -> 7L))
+    assert(Transforms.partitionOffsets(Nil).isEmpty)
+    // one partition at the 33-bit record-counter range: its ordinals
+    // would wrap and collide, so key assignment must refuse
+    val e = intercept[IllegalStateException] {
+      Transforms.partitionOffsets(Seq(0 -> 1L, 1 -> (1L << 33)))
+    }
+    assert(e.getMessage.contains(s"holds ${1L << 33} rows"))
+    assert(e.getMessage.contains("2^33 per-partition ordinal range"))
+    assert(Transforms.partitionOffsets(Seq(0 -> ((1L << 33) - 1), 1 -> 1L))
+      .last == (1 -> ((1L << 33) - 1)))
+  }
+
   test("standardizeStrings trims and upcases listed existing columns only") {
     val df = Seq(("  john  ", "x")).toDF("name", "other")
     val out = Transforms.standardizeStrings(df, Seq("name", "missing"), "upper")

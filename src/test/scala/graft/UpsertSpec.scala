@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.col
 
 import graft.io.{Maintenance, Upsert, Writers}
@@ -37,83 +39,86 @@ class UpsertSpec extends SparkSpec {
     assert(out(1).getAs[String]("name") == null)
   }
 
-  test("mergeStats returns real inserted/updated counts") {
-    val st = Upsert.mergeStats(target, source, Seq("id"))
-    assert(st == Upsert.MergeStats(inserted = 1, updated = 1))
+  private def dataFiles(path: String): Long = {
+    val l = Files.list(Paths.get(path))
+    try l.filter(_.toString.endsWith(".parquet")).count() finally l.close()
   }
 
-  test("upsertParquet bootstraps, merges atomically, vacuum GCs retired") {
-    val dir = Files.createTempDirectory("upsert").toString
+  test("clusterBy swaps in its rewrite; vacuum GCs the retired copy") {
+    val dir = Files.createTempDirectory("cluster-swap").toString
     val path = s"$dir/t"
-    val st1 = Upsert.upsertParquet(spark, target, path, Seq("id"))
-    assert(st1 == Upsert.MergeStats(3, 0))
-    val st2 = Upsert.upsertParquet(spark, source, path, Seq("id"))
-    assert(st2 == Upsert.MergeStats(1, 1))
+    target.write.parquet(path)
+    Maintenance.clusterBy(spark, path, Seq("amount"), targetFiles = 1)
     val back = spark.read.parquet(path).orderBy("id").collect()
-    assert(back.length == 4)
-    assert(back(1).getAs[Double]("amount") == 99.0)
+    assert(back.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
+    assert(back(1).getAs[Double]("amount") == 20.0)
     // one retired dir from the swap; vacuum with retain=0 removes it
     assert(Maintenance.vacuum(path, retainMs = 0) == 1)
-    assert(spark.read.parquet(path).count() == 4)
+    assert(spark.read.parquet(path).count() == 3)
   }
 
-  test("upsertParquet enforces the single-writer contract via lock file") {
-    val dir = Files.createTempDirectory("upsert-lock").toString
+  test("clusterBy under a held writer lock fails and leaves the table untouched") {
+    val dir = Files.createTempDirectory("cluster-held").toString
     val path = s"$dir/t"
-    Upsert.upsertParquet(spark, target, path, Seq("id"))
-    // a held lock (another writer mid-flight) makes the next writer fail
+    target.repartition(3).write.parquet(path)
+    // a held lock (another writer mid-flight) makes the next rewrite fail
     // loudly instead of silently racing the directory swap
     val lock = Paths.get(s"$path.lock")
     Files.createFile(lock)
     intercept[Upsert.ConcurrentWriteException] {
-      Upsert.upsertParquet(spark, source, path, Seq("id"))
-    }
-    assert(spark.read.parquet(path).count() == 3) // target untouched
-    // a STALE lock (dead writer) is broken automatically and the upsert
-    // proceeds; the lock is released afterwards
-    Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 2L * 60 * 60 * 1000))
-    val st = Upsert.upsertParquet(spark, source, path, Seq("id"))
-    assert(st == Upsert.MergeStats(1, 1))
-    assert(!Files.exists(lock))
-    // normal completion leaves no lock either
-    Upsert.upsertParquet(spark, source, path, Seq("id"))
-    assert(!Files.exists(lock))
-  }
-
-  test("compact and clusterBy serialize under the SAME writer lock as " +
-    "upsert (an unlocked maintenance swap could erase a racing merge)") {
-    val dir = Files.createTempDirectory("maint-lock").toString
-    val path = s"$dir/t"
-    Upsert.upsertParquet(spark, target, path, Seq("id"))
-    val lock = Paths.get(s"$path.lock")
-    Files.createFile(lock)
-    intercept[Upsert.ConcurrentWriteException] {
-      Maintenance.compact(spark, path, targetFiles = 1)
-    }
-    intercept[Upsert.ConcurrentWriteException] {
       Maintenance.clusterBy(spark, path, Seq("id"), targetFiles = 1)
     }
-    assert(spark.read.parquet(path).count() == 3) // table untouched
-    Files.delete(lock)
-    Maintenance.compact(spark, path, targetFiles = 1)
+    assert(dataFiles(path) == 3) // table untouched
+    assert(spark.read.parquet(path).count() == 3)
+    Files.delete(lock) // the holder completes
+    Maintenance.clusterBy(spark, path, Seq("id"), targetFiles = 1)
+    assert(dataFiles(path) == 1)
     assert(!Files.exists(lock)) // released on completion
     assert(spark.read.parquet(path).count() == 3)
   }
 
-  test("upsertParquet preserves a partitioned layout") {
-    val dir = Files.createTempDirectory("upsert-part").toString
+  test("clusterBy enforces the single-writer contract via lock file") {
+    val dir = Files.createTempDirectory("cluster-lock").toString
     val path = s"$dir/t"
-    val t0 = Seq((1, "x", 10.0), (2, "y", 20.0)).toDF("id", "part", "amount")
-    val s0 = Seq((2, "y", 99.0), (3, "x", 30.0)).toDF("id", "part", "amount")
-    Upsert.upsertParquet(spark, t0, path, Seq("id"), partitionBy = Seq("part"))
-    Upsert.upsertParquet(spark, s0, path, Seq("id"), partitionBy = Seq("part"))
-    // partition directories exist and content merged
-    assert(Files.exists(Paths.get(s"$path/part=x")))
-    val back = spark.read.parquet(path).orderBy("id").collect()
-    assert(back.length == 3)
-    assert(back(1).getAs[Double]("amount") == 99.0)
+    target.repartition(3).write.parquet(path)
+    val lock = Paths.get(s"$path.lock")
+    Files.createFile(lock)
+    intercept[Upsert.ConcurrentWriteException] {
+      Maintenance.clusterBy(spark, path, Seq("id"), targetFiles = 1)
+    }
+    // a STALE lock (dead writer) is broken automatically and the rewrite
+    // proceeds; the lock is released afterwards
+    Files.setLastModifiedTime(lock,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 2L * 60 * 60 * 1000))
+    Maintenance.clusterBy(spark, path, Seq("id"), targetFiles = 1)
+    assert(dataFiles(path) == 1)
+    assert(!Files.exists(lock))
+    // normal completion leaves no lock either
+    Maintenance.clusterBy(spark, path, Seq("id"), targetFiles = 1)
+    assert(!Files.exists(lock))
+    assert(spark.read.parquet(path).count() == 3)
+  }
+
+  test("only io/Maintenance.scala holds a writer lock or a directory swap") {
+    // upserts commit through the VersionedTable log; a second lock + swap
+    // protocol must not grow back anywhere else in src/main
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val walk = Files.walk(root)
+    val files: Seq[java.nio.file.Path] =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally walk.close()
+    val home = root.resolve("graft/io/Maintenance.scala")
+    assert(files.contains(home))
+    val banned = Seq("upsertParquet", "withWriterLock", "\".retired-\"",
+      "\".lock\"")
+    val offenders = for {
+      f <- files if f != home
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if banned.exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 
   test("maintenance compact reduces file count, preserves rows") {
@@ -121,23 +126,23 @@ class UpsertSpec extends SparkSpec {
     val path = s"$dir/t"
     Tables.load(spark, sfDir, "lineitem").repartition(16)
       .write.parquet(path)
-    val before = Files.list(Paths.get(path)).filter(_.toString.endsWith(".parquet")).count()
+    val before = dataFiles(path)
     val n = spark.read.parquet(path).count()
-    Maintenance.compact(spark, path, targetFiles = 2)
-    val after = Files.list(Paths.get(path)).filter(_.toString.endsWith(".parquet")).count()
+    Maintenance.clusterBy(spark, path, Seq("l_orderkey"), targetFiles = 2)
+    val after = dataFiles(path)
     assert(before > after && after <= 2)
     assert(spark.read.parquet(path).count() == n)
     Maintenance.vacuum(path, retainMs = 0)
   }
 
-  test("compact preserves partition layout and string partition values") {
+  test("clusterBy preserves partition layout and string partitions") {
     val dir = Files.createTempDirectory("compactp").toString
     val path = s"$dir/t"
     // "007" is the inference trap: a naive read+rewrite turns it into
     // int 7 and flattens the directory layout entirely
     Seq(("007", 1L), ("007", 2L), ("12", 3L)).toDF("acct", "v")
       .repartition(8).write.partitionBy("acct").parquet(path)
-    Maintenance.compact(spark, path, targetFiles = 1)
+    Maintenance.clusterBy(spark, path, Seq("v"), targetFiles = 1)
     assert(Files.exists(Paths.get(s"$path/acct=007")))
     assert(Files.exists(Paths.get(s"$path/acct=12")))
     val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
