@@ -1851,13 +1851,11 @@ object VersionedTable {
     * update_preimage / update_postimage / delete, the [[changeFeed]]
     * shape) to this table as ONE idempotent commit — the row-level CDC
     * sink that keeps a downstream mirror in sync with an upstream
-    * versioned table without rewriting it.
-    *
-    * File-granular, the [[deleteWhere]] discipline: only data files that
-    * CONTAIN a changed key are rewritten (survivor rows re-written minus
-    * changed keys, plus the new/updated rows); untouched files carry
-    * over by reference. On a selective change set this touches a sliver
-    * of a 100 TB mirror. The (`txnApp`, `txnId`) guard makes replays
+    * versioned table without rewriting it. A [[rewriteRows]] write: the
+    * keys the feed names (preimages are informational) retire, and the
+    * feed's inserts and post-images land; feed columns new to the table
+    * evolve its schema, and table columns the feed lacks land as null
+    * (the CDC convention). The (`txnApp`, `txnId`) guard makes replays
     * no-ops, so an at-least-once driver loop
     * ([[ChangeConsumer.processChanges]]) yields an exactly-once mirror. */
   def applyChanges(spark: SparkSession, feed: DataFrame, table: String,
@@ -1868,11 +1866,8 @@ object VersionedTable {
     txnCommit(table, txnApp, txnId).getOrElse {
       Files.createDirectories(Paths.get(table))
       // persisted: the caller's feed is often itself an expensive
-      // derivation (a changeFeed classification over commit diffs), and
-      // unpersisted it re-evaluated once per consumer below — the
-      // survivor write, the changed-key bounds agg + hit semi-join, and
-      // every CDF capture join: ~6 evaluations per apply (r18 opt).
-      // Released in the finally at the bottom of this block — UNLESS the
+      // derivation (a changeFeed classification over commit diffs) and
+      // feeds both the retired keys and the landing rows — UNLESS the
       // caller already persisted this exact frame (e.g. replaying one
       // changeFeed into several mirrors): Spark's CacheManager is
       // plan-keyed, not reference-counted, so persist+unpersist here
@@ -1882,158 +1877,13 @@ object VersionedTable {
       val feedP = if (feedOwned) feed.persist() else feed
       val upserts = feedP.filter(col("_change_type")
         .isin("insert", "update_postimage")).drop("_change_type")
-      // preimages are informational; every other change type names a key
-      // whose dst row (if any) must go — updates retire the old row,
-      // inserts guard against re-inserting a key the dst already holds.
-      // Persisted too: the distinct is a shuffle, and hitFilePaths alone
-      // consumes it twice (bounds aggregate + exact semi-join).
-      val changedKeys = feedP
-        .filter(col("_change_type") =!= "update_preimage")
-        .select(keys.map(col): _*).distinct().persist()
-      try {
-      // same write-time bar as append/merge: a feed whose shared columns
-      // re-type the table fails loudly; new feed columns are the CDC
-      // schema-evolution path (hence mergeSchema = true)
-      enforceAppendSchema(table, upserts.schema, mergeSchema = true)
-      // only the upserts can introduce violations: survivor rows were in
-      // the table already, and every active constraint validated the full
-      // snapshot when it was added
-      enforceConstraints(table, upserts)
-      latestVersion(table) match {
-        case None =>
-          val files = writeDataFiles(upserts, table)
-          commitLoop(table, "apply_changes", files, _ => Nil,
-            upserts.schema.json, None, txn = Some((txnApp, txnId)),
-            stats = withSizes(table, files,
-              computeStats(spark, table, files, statsFor)),
-            revalidate = () => {
-              enforceAppendSchema(table, upserts.schema, mergeSchema = true)
-              enforceConstraints(table, upserts)
-            })
-        case Some(v) =>
-          val st = stateAt(table, v)
-          // hit-file rewrite reads raw files — active DVs would resurrect
-          requireNoDv(st, "applyChanges", table)
-          if (st.schemaJson.isEmpty) {
-            // metadata-only log so far (e.g. setProperties enabling CDF
-            // before the first data write): this IS the bootstrap write
-            val files = writeDataFiles(upserts, table)
-            commitLoop(table, "apply_changes", files, _ => Nil,
-              upserts.schema.json, readVersion = Some(v),
-              txn = Some((txnApp, txnId)),
-              stats = withSizes(table, files,
-                computeStats(spark, table, files, statsFor)),
-              revalidate = () => {
-                enforceAppendSchema(table, upserts.schema,
-                  mergeSchema = true)
-                enforceConstraints(table, upserts)
-              },
-              rebaseOverAdds = isolation == Isolation.WriteSerializable)
-          } else {
-          val schema = DataType.fromJson(st.schemaJson)
-            .asInstanceOf[StructType]
-          val hitPaths =
-            hitFilePaths(spark, table, st, schema, changedKeys, keys)
-          // persisted: the touched-file sliver feeds the survivor
-          // anti-join AND (under CDF) the capture's old-row joins —
-          // unpersisted, each consumer re-read the hit parquet files
-          // end to end (the merge hitRows rationale, r18 opt)
-          val hitScan =
-            if (hitPaths.isEmpty)
-              spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-                schema)
-            else spark.read.option("mergeSchema", "true")
-              .parquet(hitPaths.map(p => new java.net.URI(p).getPath): _*)
-              .persist()
-          val survivors =
-            if (hitPaths.isEmpty) upserts
-            // allowMissingColumns: under schema evolution the hit files
-            // (old physical schema) and the feed (source's to-version
-            // schema) may differ — absent sides null-fill, the CDC
-            // convention for columns that predate/postdate a row
-            else keyJoin(hitScan, changedKeys, keys, "left_anti")
-              .unionByName(upserts, allowMissingColumns = true)
-          val hitNames = hitPaths.map(p =>
-            Paths.get(new java.net.URI(p).getPath).getFileName.toString)
-          // keep the file count proportional to the files TOUCHED, not
-          // to the join's shuffle-partition count — without this every
-          // 1-file delta fragments the mirror by `shuffle.partitions`
-          // new files and the table degrades cycle by cycle. A
-          // pure-insert feed (no hits) keeps its natural write
-          // parallelism, like merge — coalesce(1) would funnel a large
-          // insert-only backfill through one task
-          val added = writeDataFiles(
-            if (hitNames.nonEmpty) survivors.coalesce(hitNames.size)
-            else survivors, table)
-          // change capture (CDF): old rows in the hit files split into
-          // deletes (feed said delete) and update pre-images (feed
-          // upserted their key); the feed's upserts split into
-          // post-images (key existed) and inserts (key is new). Assumes
-          // the feed is key-compacted — one final op per key — which is
-          // what [[changeFeed]]/[[ChangeConsumer]] produce. Each split
-          // is ONE join (r18 opt): the old rows inner-join a typed
-          // key-op table (the op the feed named for that key — a
-          // non-compacted feed naming a key twice matches twice, which
-          // is byte-for-byte what the old semi-join pair emitted); the
-          // upserts LEFT-join the distinct old keys with an explicit
-          // marker (null-safe join, so only `__hit` — never the right
-          // key's nullness — distinguishes post-image from insert).
-          val cdc =
-            if (!cdfEnabled(st.props)) Nil
-            else {
-              val old = hitScan
-              val ph = keys.indices.map(i => s"__graft_ck_$i")
-              // working/marker columns use the same collision-resistant
-              // __graft_ prefix as the key placeholders: a DATA column
-              // literally named "__hit"/"__ct" is legal in a feed, and a
-              // bare col() reference would then be ambiguous and fail
-              // the whole CDC write with an AnalysisException
-              val keyOps = feedP
-                .filter(col("_change_type") =!= "update_preimage")
-                .select(keys.map(col) :+
-                  when(col("_change_type") === "delete", lit("delete"))
-                    .otherwise(lit("update_preimage")).as("__graft_ct"): _*)
-                .distinct()
-                .toDF(ph :+ "__graft_ct": _*)
-              val oldPart = old.join(keyOps,
-                  keys.zip(ph).map { case (k, p) =>
-                    old(k) <=> keyOps(p) }.reduce(_ && _))
-                .withColumn("_change_type", col("__graft_ct"))
-                .drop(ph :+ "__graft_ct": _*)
-              val oldKeysM = old.select(keys.map(col): _*).distinct()
-                .toDF(ph: _*).withColumn("__graft_hit", lit(true))
-              val postIns = upserts.join(oldKeysM,
-                  keys.zip(ph).map { case (k, p) =>
-                    upserts(k) <=> oldKeysM(p) }.reduce(_ && _),
-                  "left")
-                .withColumn("_change_type",
-                  when(col("__graft_hit"), lit("update_postimage"))
-                    .otherwise(lit("insert")))
-                .drop(ph :+ "__graft_hit": _*)
-              writeCdc(oldPart
-                .unionByName(postIns, allowMissingColumns = true),
-                table, hitNames.size)
-            }
-          try commitLoop(table, "apply_changes", added, _ => hitNames,
-            schema.json, readVersion = Some(v),
-            txn = Some((txnApp, txnId)),
-            stats = withSizes(table, added, computeStats(spark, table,
-              added, effectiveCols(statsFor, trackedStatColumns(st)))),
-            bloomAdd = computeBlooms(spark, table, added,
-              trackedBloomColumns(table, st), 0.03),
-            revalidate = () => {
-              enforceAppendSchema(table, upserts.schema, mergeSchema = true)
-              enforceConstraints(table, upserts)
-            },
-            rebaseOverAdds = isolation == Isolation.WriteSerializable,
-            cdcAdd = cdc)
-          finally hitScan.unpersist(blocking = false)
-          }
-      }
-      } finally {
-        changedKeys.unpersist(blocking = false)
-        if (feedOwned) feedP.unpersist(blocking = false)
-      }
+      val rv = latestVersion(table)
+      try rewriteRows(spark, table, "apply_changes", rv,
+        rv.map(stateAt(table, _)).getOrElse(TableState(Nil, Nil, Map.empty)),
+        ByKeys(keys, feedP.filter(col("_change_type") =!= "update_preimage"),
+          _ => upserts),
+        isolation, statsFor, txn = Some((txnApp, txnId)))
+      finally if (feedOwned) feedP.unpersist(blocking = false)
     }
   }
 
@@ -2054,70 +1904,219 @@ object VersionedTable {
       how)
   }
 
-  /** Data files of version-state `st` that may contain a key from
-    * `changedKeys`: manifest stats pre-prune (single-key change sets
-    * against recorded per-file min/max — files outside the changed-key
-    * range are skipped without a scan; a NULL changed key additionally
-    * admits every file whose recorded null count for the key column is
-    * nonzero or unknown, since min/max never see nulls), then an exact
-    * null-safe semi-join over the surviving candidates. Returns absolute
-    * paths; bounded by file count. */
-  private def hitFilePaths(spark: SparkSession, table: String,
-      st: TableState, schema: StructType, changedKeys: DataFrame,
-      keys: Seq[String]): Seq[String] = {
-    // the bounds aggregate only pays off when at least one file records
-    // min/max (or a null count) for the key column — fileStats.nonEmpty
-    // alone is true on EVERY table (withSizes always records sizes), so
-    // a stat-less table paid one collect job per MERGE/apply just to
-    // keep every candidate anyway (r18 opt)
-    def keyHasStats(k: String): Boolean = st.fileStats.valuesIterator
-      .exists(m => m.contains(k) || m.contains(nullsKey(k)))
-    val candidates =
-      if (keys.size == 1 && keyHasStats(keys.head)) {
-        val k = keys.head
-        val b = changedKeys.agg(min(col(k)), max(col(k)),
-          max(col(k).isNull.cast("int"))).collect()(0)
-        val ranged =
-          if (b.isNullAt(0)) Nil // no non-null changed keys
-          else filesInRange(st, schema, k,
-            Some(b.get(0)), Some(b.get(1)),
-            spark.conf.get("spark.sql.session.timeZone"))
-        val nullable =
-          if (b.isNullAt(2) || b.getInt(2) == 0) Nil // no null changed key
-          else st.files.filter { f =>
-            st.fileStats.get(f).flatMap(_.get(nullsKey(k))) match {
-              case Some((n, _)) =>
-                scala.util.Try(n.toLong > 0).getOrElse(true)
-              case None => true // unknown: cannot exclude
+  /** `left` plus a boolean column `flag`: whether its key tuple is in
+    * `right`, null-safe like [[keyJoin]]. `right` must hold DISTINCT key
+    * tuples, or a left row would repeat. Working columns carry the
+    * `__graft_` prefix: a data column literally named like a bare marker
+    * is legal, and a bare reference would then be ambiguous. */
+  private def keyFlag(left: DataFrame, right: DataFrame, keys: Seq[String],
+      flag: String): DataFrame = {
+    val ph = keys.indices.map(i => s"__graft_fk_$i")
+    val r = right.select(keys.map(col): _*).toDF(ph: _*)
+      .withColumn("__graft_fk", lit(true))
+    left.join(r,
+      keys.zip(ph).map { case (k, p) => left(k) <=> r(p) }.reduce(_ && _),
+      "left")
+      .withColumn(flag, coalesce(col("__graft_fk"), lit(false)))
+      .drop(ph :+ "__graft_fk": _*)
+  }
+
+  /** Which old rows a [[rewriteRows]] write retires, and what lands. */
+  private sealed trait RowChange
+  /** Rows where `cond` is TRUE retire (SQL DELETE: a NULL predicate keeps
+    * the row); nothing lands. */
+  private final case class ByPredicate(cond: org.apache.spark.sql.Column)
+    extends RowChange
+  /** Rows whose `keys` tuple is in `set` retire (null-safe: NULL is a
+    * real key), and `land(retired rows)` lands. Every landed row must
+    * carry a key of `set`: change capture finds the new rows again by
+    * that key. */
+  private final case class ByKeys(keys: Seq[String], set: DataFrame,
+      land: DataFrame => DataFrame) extends RowChange
+
+  /** The one file-granular row-level write behind [[merge]],
+    * [[applyChanges]] and [[deleteWhere]] (Delta runs MERGE, DELETE and
+    * CDC apply on one engine too). At read version `rv` (None: no log
+    * yet), in order:
+    *  - refuse active DVs: hit files are read raw, DV rows would resurrect;
+    *  - find the hit files — those holding a retired row. Key sets
+    *    pre-prune on the manifest min/max of a single key column (a NULL
+    *    key also admits files whose null count is nonzero or unknown),
+    *    then semi-join the candidates; predicates prune through the
+    *    [[GraftFileIndex]] pushdown of the snapshot scan;
+    *  - read the hit rows once, persisted, in the snapshot's (lineage
+    *    union) schema, tagged retired or surviving;
+    *  - write the survivors plus the landed rows, coalesced to the number
+    *    of hit files (no per-write fragmentation by shuffle-partition
+    *    count; a write with no hits keeps its natural parallelism);
+    *  - capture change envelopes (CDF): a retired row whose key lands
+    *    again is an `update_preimage`, otherwise a `delete`; a landed row,
+    *    read back from the written files, is an `update_postimage` when
+    *    its key was retired, otherwise an `insert`;
+    *  - record stats and blooms for whatever the table tracks (sticky
+    *    indexing: skipping must not decay under row-level writes);
+    *  - commit `op` with the schema of the rows actually written.
+    * Untouched files carry over by reference, so a selective write into a
+    * 100 TB table touches the files the rows live in, nothing else.
+    * Optimistic, [[Isolation.WriteSerializable]] by default: interleaved
+    * blind appends rebase; anything else raises, nothing lost. Each step
+    * prints a `vt <op>.<step>` [[Stages]] line. */
+  private def rewriteRows(spark: SparkSession, table: String, op: String,
+      rv: Option[Long], st: TableState, change: RowChange,
+      isolation: Isolation, statsFor: Seq[String] = Nil,
+      txn: Option[(String, Long)] = None): Commit = {
+    def step[T](name: String)(body: => T): T =
+      Stages.time("vt", s"$op.$name")(body)
+    requireNoDv(st, op, table)
+    val schema =
+      if (st.schemas.isEmpty) StructType(Nil) else unionSchema(st.schemas)
+    // persisted: the key set drives the bounds aggregate, the hit
+    // semi-join, the retire tag and the capture joins — unpersisted, the
+    // caller's plan (often itself a join) re-ran once per consumer
+    val keySet = change match {
+      case ByKeys(keys, set, _) =>
+        Some(set.select(keys.map(col): _*).distinct().persist())
+      case _ => None
+    }
+    try {
+      val hitNames = step("hit-scan") {
+        hitFiles(spark, table, st, schema, change, keySet) }
+      val hitRows =
+        if (hitNames.isEmpty)
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+        else readState(spark, table, st, hitNames)
+      val Retired = "__graft_retired"
+      val tagged = change match {
+        case _ if hitNames.isEmpty => hitRows.withColumn(Retired, lit(false))
+        case ByPredicate(cond) =>
+          hitRows.withColumn(Retired, coalesce(cond, lit(false))).persist()
+        case ByKeys(keys, _, _) =>
+          keyFlag(hitRows, keySet.get, keys, Retired).persist()
+      }
+      try {
+        val survivors = tagged.filter(!col(Retired)).drop(Retired)
+        val retired = tagged.filter(col(Retired)).drop(Retired)
+        val landed = change match {
+          case ByKeys(_, _, land) => Some(land(retired))
+          case _ => None
+        }
+        // the write-time bar append has: shared columns keep their type,
+        // new ones evolve the schema; constraints check the landed rows
+        // (survivors were validated when they were written, and a
+        // partial-column merge update can break a cross-column CHECK
+        // that each input passes alone)
+        def enforce(): Unit = landed.foreach { df =>
+          enforceAppendSchema(table, df.schema, mergeSchema = true)
+          enforceConstraints(table, df)
+        }
+        enforce()
+        val written = landed.fold(survivors)(
+          survivors.unionByName(_, allowMissingColumns = true))
+        val added =
+          if (hitNames.isEmpty && landed.isEmpty) Nil
+          else step("write") { writeDataFiles(
+            if (hitNames.nonEmpty) written.coalesce(hitNames.size)
+            else written, table) }
+        val cdc =
+          if (!cdfEnabled(st.props) || added.isEmpty && hitNames.isEmpty) Nil
+          else step("cdf-capture") {
+            val env = change match {
+              case ByPredicate(_) =>
+                retired.withColumn("_change_type", lit("delete"))
+              case ByKeys(keys, _, _) =>
+                val fresh = keyJoin(spark.read.schema(written.schema)
+                  .parquet(added.map(f => Paths.get(table, f).toString): _*),
+                  keySet.get, keys, "left_semi")
+                def typed(rows: DataFrame, other: DataFrame, yes: String,
+                    no: String): DataFrame =
+                  keyFlag(rows, other.select(keys.map(col): _*).distinct(),
+                    keys, "__graft_m")
+                    .withColumn("_change_type",
+                      when(col("__graft_m"), lit(yes)).otherwise(lit(no)))
+                    .drop("__graft_m")
+                // nothing hit (the bootstrap too, whose retired side has
+                // no columns to join on): every landed row is an insert
+                if (hitNames.isEmpty) fresh.withColumn("_change_type",
+                  lit("insert"))
+                else typed(retired, fresh, "update_preimage", "delete")
+                  .unionByName(
+                    typed(fresh, retired, "update_postimage", "insert"),
+                    allowMissingColumns = true)
             }
+            writeCdc(env, table, hitNames.size)
           }
-        (ranged ++ nullable).distinct
-      } else st.files
-    if (candidates.isEmpty) Seq.empty
-    else {
-      val scan = spark.read
-        .parquet(candidates.map(f => Paths.get(table, f).toString): _*)
+        val stats = step("stats") { withSizes(table, added, computeStats(
+          spark, table, added, effectiveCols(statsFor, trackedStatColumns(st))))
+        }
+        val blooms = step("blooms") { computeBlooms(spark, table, added,
+          trackedBloomColumns(table, st), 0.03) }
+        step("commit") {
+          commitLoop(table, op, added, _ => hitNames, written.schema.json,
+            readVersion = rv, txn = txn, stats = stats, bloomAdd = blooms,
+            revalidate = () => enforce(),
+            rebaseOverAdds = isolation == Isolation.WriteSerializable,
+            cdcAdd = cdc)
+        }
+      } finally tagged.unpersist(blocking = false)
+    } finally keySet.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Names of the files of `st` that hold a row `change` retires. */
+  private def hitFiles(spark: SparkSession, table: String, st: TableState,
+      schema: StructType, change: RowChange,
+      keySet: Option[DataFrame]): Seq[String] = {
+    if (st.files.isEmpty) return Nil
+    val paths = change match {
+      case ByPredicate(cond) =>
+        readState(spark, table, st, st.files).filter(cond)
+          .select(col("_metadata.file_path"))
+      case ByKeys(keys, _, _) =>
+        // the bounds aggregate only pays off when at least one file
+        // records min/max (or a null count) for the key column: every
+        // file records its size, so fileStats alone is never empty
+        def keyHasStats(k: String): Boolean = st.fileStats.valuesIterator
+          .exists(m => m.contains(k) || m.contains(nullsKey(k)))
+        val candidates =
+          if (keys.size == 1 && keyHasStats(keys.head)) {
+            val k = keys.head
+            val b = keySet.get.agg(min(col(k)), max(col(k)),
+              max(col(k).isNull.cast("int"))).collect()(0)
+            val ranged =
+              if (b.isNullAt(0)) Nil // no non-null retired keys
+              else filesInRange(st, schema, k,
+                Some(b.get(0)), Some(b.get(1)),
+                spark.conf.get("spark.sql.session.timeZone"))
+            // min/max never see nulls: a NULL retired key admits every
+            // file whose null count for the key is nonzero or unknown
+            val nullable =
+              if (b.isNullAt(2) || b.getInt(2) == 0) Nil
+              else st.files.filter { f =>
+                st.fileStats.get(f).flatMap(_.get(nullsKey(k))) match {
+                  case Some((n, _)) =>
+                    scala.util.Try(n.toLong > 0).getOrElse(true)
+                  case None => true
+                }
+              }
+            (ranged ++ nullable).distinct
+          } else st.files
+        if (candidates.isEmpty) return Nil
         // materialize the metadata pseudo-column BEFORE the join — it
         // only resolves directly against the scan relation
-        .select(col("*"), col("_metadata.file_path").as("__fp"))
-      keyJoin(scan, changedKeys, keys, "left_semi")
-        .select(col("__fp")).distinct()
-        .collect().map(_.getString(0)).toSeq
+        keyJoin(readState(spark, table, st, candidates)
+          .select(col("*"), col("_metadata.file_path").as("__fp")),
+          keySet.get, keys, "left_semi").select(col("__fp"))
     }
+    paths.distinct().collect().map(r => Paths.get(
+      new java.net.URI(r.getString(0)).getPath).getFileName.toString).toSeq
   }
 
   /** MERGE into the versioned table, file-granular (the Delta MERGE
-    * shape): only data files CONTAINING a source key are read and
-    * rewritten ([[Upsert.merge]] of their rows against the source —
-    * updates + inserts land in the new files); every other file carries
-    * over by reference. A selective MERGE into a 100 TB table touches
-    * the files the keys live in, nothing else — and, because untouched
-    * files survive as-is, a downstream [[changeFeed]] over the commit
-    * diffs only the touched sliver too. With single-column keys and
-    * recorded stats ([[append]]'s `statsFor`), candidate files are
-    * pre-pruned by manifest min/max before any scan. Optimistic,
-    * [[Isolation.WriteSerializable]] by default: interleaved blind
-    * appends rebase; anything else raises, nothing lost. */
+    * shape), as a [[rewriteRows]] write: the rows whose key the source
+    * names retire, and [[Upsert.merge]] of those rows against the source
+    * lands — updates (all columns, or `updateColumns`) plus inserts. A
+    * source-only column evolves the schema: matched rows take its
+    * values, every other row reads null. A source that lacks a table
+    * column fails loudly (no null fill, nothing committed). */
   def merge(spark: SparkSession, source: DataFrame, table: String,
       keys: Seq[String],
       updateColumns: Option[Seq[String]] = None,
@@ -2126,194 +2125,34 @@ object VersionedTable {
     val rv = latestVersion(table).getOrElse(
       throw new IllegalArgumentException(s"no table at $table to merge into"))
     val st = stateAt(table, rv)
-    // hit-file rewrite reads raw files — active DVs would resurrect
-    requireNoDv(st, "merge", table)
     if (st.schemaJson.isEmpty)
       throw new IllegalStateException(
         s"merge into $table: the log holds only metadata commits — " +
           "bootstrap the table with append or applyChanges first")
-    val schema = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
-    // persisted: the distinct source keys drive the hit scan (bounds agg
-    // + semi-join) AND all three CDF capture joins below — unpersisted,
-    // the caller's source plan (arbitrary — often itself a join) would
-    // re-evaluate per consumer, five times per MERGE (r18 opt)
-    val srcKeys = source.select(keys.map(col): _*).distinct().persist()
-    val hitPaths = Stages.time("vt", "merge.hit-scan") {
-      hitFilePaths(spark, table, st, schema, srcKeys, keys) }
-    // conform hit rows to the LOG schema, not the hit files' physical
-    // one: under schema evolution an old file lacks newer columns, and
-    // merging against its raw shape would silently drop the source's
-    // values for them (spec: "schema-evolved history")
-    val raw =
-      if (hitPaths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else spark.read.option("mergeSchema", "true").parquet(
-        hitPaths.map(p => new java.net.URI(p).getPath): _*)
-    // persisted: the touched-file sliver feeds the merge join, the CDF
-    // pre-image semi-join AND the hit-key set (evaluated twice more by
-    // the old post/ins joins) — unpersisted, each consumer re-read the
-    // hit parquet files end to end, four scans of the touched sliver
-    // per MERGE (r18 opt; at scale the sliver is the expensive part)
-    val hitRows = raw.select(schema.fields.map(f =>
-      (if (raw.columns.contains(f.name)) col(f.name).cast(f.dataType)
-      else lit(null).cast(f.dataType)).as(f.name)).toIndexedSeq: _*)
-      .persist()
-    // merge evolution must be REAL, not a comment: Upsert.merge projects
-    // the TARGET's columns only, so a genuinely new source column would
-    // silently vanish from the output (and the schema check below would
-    // never see it). Pre-extend the hit rows with the source-only
-    // columns as typed nulls — matched rows then take the source's
-    // values, survivors keep null, and the commit records the evolved
-    // schema (untouched files read the column as null via the lineage
-    // union, Delta's autoMerge shape).
-    val srcOnly = source.schema.fields
-      .filterNot(f => schema.fieldNames.contains(f.name))
-    val mergeTarget = srcOnly.foldLeft(hitRows)((df, f) =>
-      df.withColumn(f.name, lit(null).cast(f.dataType)))
-    val merged = Upsert.merge(mergeTarget, source, keys, updateColumns)
-    // the same write-time enforcement append has: a source whose shared
-    // columns coerce to a different type (INT source vs BIGINT table —
-    // Upsert.merge's when(...) widens silently) must fail HERE, not
-    // poison the log. Genuinely NEW source columns remain legal (the
-    // documented merge evolution path), hence mergeSchema = true.
-    enforceAppendSchema(table, merged.schema, mergeSchema = true)
-    // validate the MERGED rows, not the source: a partial-column update
-    // (updateColumns) combines old and new values, and the combination
-    // can violate a cross-column CHECK even when each input passes alone
-    enforceConstraints(table, merged)
-    val hitNames = hitPaths.map(p =>
-      Paths.get(new java.net.URI(p).getPath).getFileName.toString)
-    // file-count discipline: a surgical update is sized to the files it
-    // touched (no per-merge fragmentation by shuffle-partition count); a
-    // pure-insert merge (no hits) keeps its natural write parallelism
-    val added = Stages.time("vt", "merge.write") { writeDataFiles(
-      if (hitNames.nonEmpty) merged.coalesce(math.max(1, hitNames.size))
-      else merged, table) }
-    // change capture (CDF): pre-images come from the hit rows whose key
-    // the source names; post-images and inserts are read BACK from the
-    // just-written files (byte-identical to what landed, and no second
-    // evaluation of the merge join) and split on whether the key existed
-    val cdc =
-      // an empty source writes nothing (added = Nil) and changes
-      // nothing — skip capture rather than read zero parquet paths
-      if (!cdfEnabled(st.props) || added.isEmpty) Nil
-      else Stages.time("vt", "merge.cdf-capture") {
-        val landed = spark.read.option("mergeSchema", "true").parquet(
-          added.map(f => Paths.get(table, f).toString): _*)
-        // keyJoin (null-safe <=>), like applyChanges' capture: NULL is
-        // a real key value, and a plain column-name join never matches
-        // it — a merge touching a NULL-keyed row would then write NO
-        // envelope and every CDF consumer silently diverges
-        val pre = keyJoin(hitRows, srcKeys, keys, "left_semi")
-          .withColumn("_change_type", lit("update_preimage"))
-        // post + ins in ONE pass: the touched landed rows LEFT-join the
-        // (distinct) hit-key set with an explicit marker — a marked row
-        // had a pre-image (update_postimage), an unmarked one did not
-        // (insert). The old semi + anti pair computed the same split
-        // while scanning `landed` and re-deriving the hit keys twice
-        // each (r18 opt). The marker column must be explicit: the join
-        // is null-safe, so a matched NULL key still leaves the right
-        // key columns null — only the marker distinguishes the arms.
-        // Marker named with the __graft_ placeholder prefix: a DATA
-        // column "__hit" is legal and a bare name would be ambiguous.
-        val ph = keys.indices.map(i => s"__graft_hk_$i")
-        val hitKeysM = hitRows.select(keys.map(col): _*).distinct()
-          .toDF(ph: _*).withColumn("__graft_hit", lit(true))
-        val touched = keyJoin(landed, srcKeys, keys, "left_semi")
-        val postIns = touched.join(hitKeysM,
-            keys.zip(ph).map { case (k, p) =>
-              touched(k) <=> hitKeysM(p) }.reduce(_ && _),
-            "left")
-          .withColumn("_change_type",
-            when(col("__graft_hit"), lit("update_postimage"))
-              .otherwise(lit("insert")))
-          .drop(ph :+ "__graft_hit": _*)
-        writeCdc(pre
-          .unionByName(postIns, allowMissingColumns = true),
-          table, hitNames.size)
-      }
-    // record the MERGED schema (a source can itself evolve the table —
-    // the overwrite-based merge recorded the post-merge shape too)
-    val mergeStats = Stages.time("vt", "merge.stats") { withSizes(table, added,
-      computeStats(spark, table, added, trackedStatColumns(st))) }
-    val mergeBlooms = Stages.time("vt", "merge.blooms") { computeBlooms(spark,
-      table, added, trackedBloomColumns(table, st), 0.03) }
-    try Stages.time("vt", "merge.commit") {
-      commitLoop(table, "merge", added, _ => hitNames, merged.schema.json,
-        readVersion = Some(rv),
-        // sticky indexing: the rewrite re-records whatever the table
-        // tracks for its new files — skipping must not decay under MERGE
-        stats = mergeStats,
-        bloomAdd = mergeBlooms,
-        revalidate = () => {
-          enforceAppendSchema(table, merged.schema, mergeSchema = true)
-          enforceConstraints(table, merged)
-        },
-        rebaseOverAdds = isolation == Isolation.WriteSerializable,
-        cdcAdd = cdc)
-    } finally {
-      srcKeys.unpersist(blocking = false)
-      hitRows.unpersist(blocking = false)
-    }
+    // Upsert.merge projects the TARGET's columns only, so the retired
+    // rows are pre-extended with the source-only columns as typed nulls
+    // for a new source column to land at all
+    def land(retired: DataFrame): DataFrame = Upsert.merge(
+      source.schema.fields.filterNot(f => retired.columns.contains(f.name))
+        .foldLeft(retired)((df, f) =>
+          df.withColumn(f.name, lit(null).cast(f.dataType))),
+      source, keys, updateColumns)
+    rewriteRows(spark, table, "merge", Some(rv), st,
+      ByKeys(keys, source, land), isolation)
   }
 
-  /** File-granular DELETE: rewrite ONLY the files that contain matching
-    * rows (identified via `_metadata.file_path`), keep the rest untouched.
-    * On a selective predicate this touches a sliver of the table — the
-    * 100 TB-shaped delete. */
+  /** File-granular DELETE as a [[rewriteRows]] write: the rows where
+    * `cond` is TRUE retire (a NULL predicate keeps the row, like SQL
+    * DELETE and [[deleteWhereDeferred]]); only files holding one are
+    * rewritten. On a selective predicate this touches a sliver of the
+    * table — the 100 TB-shaped delete. */
   def deleteWhere(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column,
       isolation: Isolation = Isolation.WriteSerializable): Commit = {
     val rv = latestVersion(table).getOrElse(
       throw new IllegalArgumentException(s"no table at $table"))
-    val preSt = stateAt(table, rv)
-    // the survivor rewrite reads hit files RAW — running it over active
-    // DVs would resurrect their deleted rows
-    requireNoDv(preSt, "deleteWhere", table)
-    val snap = snapshot(spark, table, Some(rv))
-    val hitPaths = snap.filter(cond)
-      .select(col("_metadata.file_path").as("fp")).distinct()
-      .collect().map(_.getString(0)).toSeq // bounded by file count
-    if (hitPaths.isEmpty)
-      return commitLoop(table, "delete", Nil, _ => Nil, snap.schema.json,
-        readVersion = Some(rv),
-        rebaseOverAdds = isolation == Isolation.WriteSerializable)
-    val hitNames = hitPaths.map(p => Paths.get(new java.net.URI(p).getPath)
-      .getFileName.toString)
-    // mergeSchema like every other mixed-lineage rewrite path
-    // (deleteWhereDeferred/merge/applyChanges/compactSmallFiles): a hit
-    // set spanning schema evolution would otherwise infer one footer's
-    // schema and rewrite the other files' survivors WITHOUT their newer
-    // columns — silent, permanent data loss.
-    // Persisted when CDF is on: the survivor rewrite AND the delete-
-    // envelope capture both consume it — one scan of the touched
-    // sliver, not two (the deleteWhereDeferred rationale, r18 opt)
-    val hitScan0 = spark.read.option("mergeSchema", "true")
-      .parquet(hitPaths.map(p => new java.net.URI(p).getPath): _*)
-    val hitScan =
-      if (cdfEnabled(preSt.props)) hitScan0.persist() else hitScan0
-    // SQL DELETE semantics: only rows where the predicate is TRUE go —
-    // a NULL predicate keeps the row. (A bare `!cond` filter would drop
-    // NULL-cond rows from the survivors, silently deleting them — and
-    // disagreeing with [[deleteWhereDeferred]], whose DV entries come
-    // from `filter(cond)` and so only ever name TRUE rows.)
-    val survivors = hitScan.filter(!coalesce(cond, lit(false)))
-    val added = writeDataFiles(survivors, table)
-    // change capture (CDF): the deleted rows are exactly the TRUE-cond
-    // rows of the hit files — one extra pass over the touched sliver
-    val cdc =
-      if (!cdfEnabled(preSt.props)) Nil
-      else writeCdc(hitScan.filter(cond)
-        .withColumn("_change_type", lit("delete")), table, hitNames.size)
-    try commitLoop(table, "delete", added, _ => hitNames, snap.schema.json,
-      readVersion = Some(rv),
-      stats = withSizes(table, added,
-        computeStats(spark, table, added, trackedStatColumns(preSt))),
-      bloomAdd = computeBlooms(spark, table, added,
-        trackedBloomColumns(table, preSt), 0.03),
-      rebaseOverAdds = isolation == Isolation.WriteSerializable,
-      cdcAdd = cdc)
-    finally hitScan.unpersist(blocking = false)
+    rewriteRows(spark, table, "delete", Some(rv), stateAt(table, rv),
+      ByPredicate(cond), isolation)
   }
 
   /** RESTORE to `version` (Delta `RESTORE TABLE ... TO VERSION AS OF`):

@@ -102,6 +102,64 @@ class PropertiesSpec extends SparkSpec {
     })
   }
 
+  test("merge / applyChanges / deleteWhere capture what the key diff " +
+    "reads, and land what a Map model predicts") {
+    import graft.io.{VersionedTable => VT}
+    val idGen = Gen.chooseNum(0, 7)
+    // one write: its kind and (id, upsert?) picks — upsert? only steers
+    // applyChanges (false = the feed deletes the id)
+    val opGen = for {
+      kind <- Gen.oneOf("merge", "apply", "delete")
+      ids <- Gen.nonEmptyListOf(idGen).map(_.distinct.take(4))
+      ups <- Gen.listOfN(ids.size, Gen.oneOf(true, false))
+    } yield (kind, ids.zip(ups))
+    val caseGen = for {
+      seed <- Gen.nonEmptyListOf(idGen).map(_.distinct)
+      ops <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, opGen))
+    } yield (seed, ops)
+    def bag(df: DataFrame): Map[Seq[Any], Int] =
+      df.select("id", "v", "_change_type").collect().toSeq.map(_.toSeq)
+        .groupBy(identity).map { case (k, v) => (k, v.size) }
+    check("capture-parity", Prop.forAllNoShrink(caseGen) { case (seed, ops) =>
+      TestDirs.withTempDir("graft-parity") { dir =>
+        val t = dir.resolve("t").toString
+        var model = seed.map(i => i -> s"s-$i").toMap
+        VT.append(spark, model.toSeq.toDF("id", "v"), t)
+        VT.setProperties(t, Map(VT.CdfProp -> "true"))
+        ops.zipWithIndex.forall { case ((kind, picks), step) =>
+          // values unique to the step: every update changes `v`, so the
+          // key diff sees each one the capture records
+          def value(id: Int) = s"$step-$id"
+          val c = kind match {
+            case "merge" =>
+              model ++= picks.map { case (id, _) => id -> value(id) }
+              VT.merge(spark, picks.map { case (id, _) => id -> value(id) }
+                .toDF("id", "v"), t, Seq("id"))
+            case "apply" =>
+              val feed = picks.map { case (id, up) =>
+                if (!up) (id, null: String, "delete")
+                else (id, value(id),
+                  if (model.contains(id)) "update_postimage" else "insert")
+              }
+              picks.foreach { case (id, up) =>
+                if (up) model += id -> value(id) else model -= id }
+              VT.applyChanges(spark, feed.toDF("id", "v", "_change_type"),
+                t, Seq("id"), "parity", step.toLong)
+            case _ =>
+              model --= picks.map(_._1)
+              VT.deleteWhere(spark, t, col("id").isin(picks.map(_._1): _*))
+          }
+          val v = c.version
+          bag(VT.tableChanges(spark, t, v - 1, v)) ==
+            bag(VT.changeFeed(spark, t, v - 1, v, Seq("id"),
+              includePreimage = true)) &&
+            VT.snapshot(spark, t).as[(Int, String)].collect().toSeq
+              .sortBy(_._1) == model.toSeq.sortBy(_._1)
+        }
+      }
+    }, cases = 6)
+  }
+
   test("surrogate keys are dense 1..N regardless of input partitioning") {
     check("surrogate", Prop.forAll(dfGen, Gen.chooseNum(1, 5)) { (rows, parts) =>
       val df = toDF(rows).repartition(parts)

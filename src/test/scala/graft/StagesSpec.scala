@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.functions.col
+
 import graft.io.{VersionedTable => VT}
 import graft.util.Stages
 
@@ -55,18 +57,24 @@ class StagesSpec extends SparkSpec {
     assert(lines.size == 1 && lines.head.startsWith("bench-stage g boom "))
   }
 
-  test("VersionedTable.merge prints its vt merge.<seg> lines") {
+  test("VersionedTable row-level writes print vt <op>.<seg> lines") {
     TestDirs.withTempDir("graft-stages") { dir =>
       val t = dir.resolve("t").toString
       VT.append(spark, Seq(1 -> "a", 2 -> "b").toDF("id", "v"), t)
-      val lines = captured(on = true) {
-        VT.merge(spark, Seq(2 -> "B", 3 -> "c").toDF("id", "v"), t,
-          Seq("id"))
+      val writes = Seq[(String, () => Any)](
+        "merge" -> (() => VT.merge(spark,
+          Seq(2 -> "B", 3 -> "c").toDF("id", "v"), t, Seq("id"))),
+        "delete" -> (() => VT.deleteWhere(spark, t, col("id") === 1)),
+        "apply_changes" -> (() => VT.applyChanges(spark,
+          Seq((4, "d", "insert")).toDF("id", "v", "_change_type"), t,
+          Seq("id"), "stages", 1L)))
+      for ((op, write) <- writes) {
+        val lines = captured(on = true)(write())
+        val segs = lines.collect { case Line("vt", seg, _) => seg }
+        // no CDF on this table, so no cdf-capture segment
+        assert(segs == Seq("merge.hit-scan", "merge.write", "merge.stats",
+          "merge.blooms", "merge.commit").map(_.replace("merge.", s"$op.")))
       }
-      val segs = lines.collect { case Line("vt", seg, _) => seg }
-      // no CDF on this table, so no cdf-capture segment
-      assert(segs == Seq("merge.hit-scan", "merge.write", "merge.stats",
-        "merge.blooms", "merge.commit"))
       assert(VT.snapshot(spark, t).count() == 3)
     }
   }

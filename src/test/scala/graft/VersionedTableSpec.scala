@@ -100,6 +100,23 @@ class VersionedTableSpec extends SparkSpec {
     }
   }
 
+  test("merge after a subset-schema append keeps the hit file's other " +
+    "columns (rows are rewritten in the snapshot's schema)") {
+    withTable { t =>
+      VT.append(spark, Seq((1, "a", 10L), (2, "b", 20L))
+        .toDF("id", "v", "extra").coalesce(1), t)
+      VT.append(spark, df(3 -> "c"), t) // legal subset: extra reads null
+      VT.merge(spark, Seq((1, "A", 11L)).toDF("id", "v", "extra"), t,
+        Seq("id"))
+      val back = VT.snapshot(spark, t).orderBy("id")
+        .select("id", "v", "extra").as[(Int, String, Option[Long])]
+        .collect().toSeq
+      // row 2 survives in the rewritten file and must keep its `extra`
+      assert(back == Seq((1, "A", Some(11L)), (2, "b", Some(20L)),
+        (3, "c", None)), back.toString)
+    }
+  }
+
   test("merge with a source-only column EVOLVES the schema: matched " +
     "rows take the values, survivors read null") {
     withTable { t =>
@@ -114,6 +131,21 @@ class VersionedTableSpec extends SparkSpec {
         else r.getLong(r.fieldIndex("score")))
       // untouched row null, updated row 99, inserted row 55
       assert(score.toSeq == Seq(-1L, 99L, 55L), score.mkString(","))
+    }
+  }
+
+  test("merge of a source lacking a table column fails loudly: no " +
+    "commit, no null fill") {
+    withTable { t =>
+      VT.append(spark, Seq((1, "a", 10L)).toDF("id", "v", "n"), t)
+      val before = VT.latestVersion(t)
+      intercept[org.apache.spark.sql.AnalysisException] {
+        VT.merge(spark, Seq(1 -> "A", 2 -> "b").toDF("id", "v"), t,
+          Seq("id"))
+      }
+      assert(VT.latestVersion(t) == before)
+      assert(VT.snapshot(spark, t).as[(Int, String, Long)].collect().toSeq ==
+        Seq((1, "a", 10L)))
     }
   }
 
@@ -1012,6 +1044,28 @@ class VersionedTableSpec extends SparkSpec {
       assert(c1.version == c2.version)
       assert(VT.latestVersion(t).contains(c1.version))
       assert(VT.snapshot(spark, t).count() == 2)
+    }
+  }
+
+  test("applyChanges with a feed column new to the table records it: " +
+    "snapshot and tableChanges both carry it") {
+    withTable { t =>
+      VT.append(spark, df(1 -> "a", 2 -> "b"), t)
+      VT.setProperties(t, Map(VT.CdfProp -> "true"))
+      val c = VT.applyChanges(spark,
+        Seq((2, "B", "x", "update_postimage"), (3, "c", "y", "insert"))
+          .toDF("id", "v", "tag", "_change_type"),
+        t, Seq("id"), txnApp = "evolve", txnId = 1)
+      val snap = VT.snapshot(spark, t)
+      assert(snap.columns.toSeq == Seq("id", "v", "tag"))
+      assert(snap.orderBy("id").select("id", "tag").as[(Int, Option[String])]
+        .collect().toSeq == Seq(1 -> None, 2 -> Some("x"), 3 -> Some("y")))
+      val changes = VT.tableChanges(spark, t, c.version - 1, c.version)
+      assert(changes.columns.contains("tag"))
+      assert(changes.select("id", "tag", "_change_type")
+        .as[(Int, Option[String], String)].collect().toSeq.sortBy(_._3) ==
+        Seq((3, Some("y"), "insert"), (2, Some("x"), "update_postimage"),
+          (2, None, "update_preimage")))
     }
   }
 
