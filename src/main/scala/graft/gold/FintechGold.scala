@@ -26,7 +26,8 @@ object FintechGold {
     * DECIMAL(38,2), never narrowed to (18,2) — a group total past 10^16
     * would make the narrowing cast a hard ANSI ArithmeticException (one
     * hot group kills the whole gold job) where the wide type is exact at
-    * the same scale. IncrementalAgg.sumState documents the same hazard. */
+    * the same scale. IncrementalAgg.sumStateMulti documents the same
+    * hazard. */
   private val moneyWide = DecimalType(38, 2)
 
   /** dim_customer: silver customers + surrogate key. */

@@ -66,17 +66,9 @@ final class GraftFileIndex(
   extends FileIndex {
 
   private val statuses: Seq[(String, FileStatus)] = fileNames.map { n =>
-    val p = java.nio.file.Paths.get(tableDir, n)
-    // file length from the MANIFEST when the commit recorded it (exact —
-    // data files are immutable), falling back to a filesystem stat for
-    // pre-size-stats commits: a million-file snapshot then costs zero
-    // per-file HEAD requests to plan
-    val len = stats.getOrElse(n, Map.empty)
-      .get(VersionedTable.BytesKey)
-      .flatMap(b => scala.util.Try(b._1.toLong).toOption)
-      .getOrElse(java.nio.file.Files.size(p))
-    n -> new FileStatus(len, false, 1, 128L * 1024 * 1024,
-      0L /* mtime: immutable once committed */, new HPath(p.toUri))
+    n -> new FileStatus(GraftFileIndex.fileBytes(tableDir, n, stats), false,
+      1, 128L * 1024 * 1024, 0L /* mtime: immutable once committed */,
+      new HPath(java.nio.file.Paths.get(tableDir, n).toUri))
   }
 
   override def rootPaths: Seq[HPath] =
@@ -338,6 +330,17 @@ final class GraftFileIndex(
 }
 
 object GraftFileIndex {
+  /** Length of data file `name`: from the MANIFEST when its commit
+    * recorded it (exact — data files are immutable), else a filesystem
+    * stat for pre-size-stats commits. A million-file snapshot then costs
+    * zero per-file HEAD requests to plan or to size for compaction. */
+  private[io] def fileBytes(tableDir: String, name: String,
+      stats: VersionedTable.FileStats): Long =
+    stats.get(name).flatMap(_.get(VersionedTable.BytesKey))
+      .flatMap(b => scala.util.Try(b._1.toLong).toOption)
+      .getOrElse(java.nio.file.Files.size(
+        java.nio.file.Paths.get(tableDir, name)))
+
   /** The canonical TimestampType stats encoding: a (possibly negative)
     * integer of UTC micros. Anything else is a legacy session-zone
     * rendering and must not prune. */

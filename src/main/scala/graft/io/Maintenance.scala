@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions.col
 /** Plain-parquet table maintenance (SURVEY §4): the Delta ZORDER / VACUUM
   * surface (reference `src/utils/spark_utils.py:519-588`) re-expressed for
   * a parquet directory that has no transaction log. (The log-based
-  * OPTIMIZE is [[VersionedTable.compact]], `compactBySize` and
-  * `compactSmallFiles`.)
+  * OPTIMIZE is one file-set rewrite in [[VersionedTable]]: `compact`
+  * rewrites the whole live set, `compactSmallFiles` only its small files,
+  * and `compactBySize` sizes a `compact`.)
   *
   *  - clusterBy (Z-ORDER approximation): range-repartition on the clustering
   *    keys + sort within partitions, so parquet row-group min/max footers

@@ -300,14 +300,13 @@ object VersionedTable {
 
   /** Replayed table state at a version: live files, current schema, and
     * the distinct schema lineage (last = current; >1 ⇒ the live files may
-    * span schema versions and reads need `mergeSchema`). */
+    * span schema versions, and reads scan the lineage union). */
   private final case class TableState(files: Seq[String],
       schemas: Seq[String], fileStats: FileStats,
       dv: Seq[String] = Nil,
       props: Map[String, String] = Map.empty,
       blooms: Seq[String] = Nil) {
     def schemaJson: String = schemas.lastOption.getOrElse("")
-    def mixedSchemas: Boolean = schemas.size > 1
   }
 
   /** State at version `v`, replayed from the nearest checkpoint at or
@@ -366,7 +365,7 @@ object VersionedTable {
         // single-schema reset below (meant for overwrite/compact, whose
         // fresh files are homogeneous) would collapse the lineage to one
         // entry, silently dropping columns that live only in older files
-        // from mergeSchema reads and from type enforcement.
+        // from union-schema reads and from type enforcement.
         schemas.clear()
         schemas ++= c.schemaLineage
       } else if (c.schemaJson.nonEmpty) {
@@ -376,8 +375,8 @@ object VersionedTable {
         // lineage instead of accumulating forever. Without this,
         // (a) overwrite(overwriteSchema = true) can never truly re-type
         // a dead column (the stale entry keeps poisoning enforcement)
-        // and (b) mixedSchemas stays true after a compaction unified
-        // the files, taxing every read with footer-merge for nothing.
+        // and (b) a dead column stays in every read's union schema after
+        // a compaction unified the files.
         val addSet = c.add.toSet
         if (files.forall(addSet.contains)) schemas.clear()
         schemas -= c.schemaJson // move-to-end: last element = current
@@ -419,8 +418,7 @@ object VersionedTable {
     * a version whose file set is empty) comes back as an empty frame with
     * the schema recorded in the log — not an error. Schema evolution:
     * when the live files span schema versions (tracked in the log, not
-    * probed from footers), the read unions columns via `mergeSchema` —
-    * tables with a single schema lineage skip that footer-merge cost. */
+    * probed from footers), the read scans the union of their columns. */
   def snapshot(spark: SparkSession, table: String,
       version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(table)).getOrElse(
@@ -430,56 +428,59 @@ object VersionedTable {
     readState(spark, table, st, st.files)
   }
 
-  /** Read `files` of state `st`, minus any rows the state's deletion
-    * vectors retire. The scan is planned over a [[GraftFileIndex]], so
-    * every pushed-down data filter prunes files against the log's per-file
-    * min/max stats at PLANNING time (Delta's stats-based skipping) — no
-    * caller cooperation needed; [[snapshotWhere]] remains as the explicit
-    * API but plain `snapshot(...).filter(...)` now skips identically.
-    *
-    * The scan schema is the UNION of the live files' schema lineage
-    * (tracked in the log, not probed from footers) — mixed-schema
-    * snapshots skip the per-file footer `mergeSchema` pass entirely, and
-    * files predating a column read it back as null, exactly as before.
-    *
-    * With no DVs this is a plain parquet scan (no metadata columns, no
-    * join); with DVs the scan carries the parquet `_metadata`
-    * file/row-position columns and LEFT-ANTI joins the (small, broadcast)
-    * DV entry set — pushdown and pruning on the scan are unaffected. */
-  /** The state's recorded schema — empty struct for a table whose log
-    * holds only metadata commits so far (e.g. `setProperties` enabling
-    * CDF before the first data write): parsing the empty schemaJson
-    * would throw a raw Jackson error. */
-  private def stateSchema(st: TableState): StructType =
-    if (st.schemaJson.isEmpty) StructType(Nil)
-    else DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
-
-  private def readState(spark: SparkSession, table: String,
-      st: TableState, files: Seq[String]): DataFrame = {
-    if (files.isEmpty) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], stateSchema(st))
-    }
-    val dataSchema = unionSchema(st.schemas)
-    // bloom sidecars load lazily, only when a scan actually pushes an
-    // equality/IN probe down to listFiles — a full-scan read never pays
+  /** The one scan of table data files: `files` read in `schema` through a
+    * [[GraftFileIndex]] relation, with the parquet `_metadata` columns
+    * available. The schema is given, never inferred from footers, so
+    * planning the read runs no Spark job; a file lacking a column reads
+    * it as null. Every pushed-down data filter prunes files against the
+    * per-file min/max `stats` at PLANNING time (Delta's stats-based
+    * skipping) — no caller cooperation needed; [[snapshotWhere]] remains
+    * as the explicit API but plain `snapshot(...).filter(...)` skips
+    * identically. Equality/IN probes also consult the `blooms` sidecars,
+    * loaded lazily: a full-scan read never pays for them. `streaming`
+    * surfaces the relation with `isStreaming = true`, which
+    * `MicroBatchExecution` requires of a source's batch. */
+  private def scan(spark: SparkSession, table: String, files: Seq[String],
+      schema: StructType, stats: FileStats = Map.empty,
+      blooms: Seq[String] = Nil, streaming: Boolean = false): DataFrame = {
     val bloomFn: (String, String) =>
         Option[org.apache.spark.util.sketch.BloomFilter] =
-      if (st.blooms.isEmpty) (_, _) => None
+      if (blooms.isEmpty) (_, _) => None
       else {
-        lazy val loaded = loadBlooms(table, st.blooms)
+        lazy val loaded = loadBlooms(table, blooms)
         (f, c) => loaded.get((f, c))
       }
-    val fi = new GraftFileIndex(table, files, st.fileStats, dataSchema,
+    val fi = new GraftFileIndex(table, files, stats, schema,
       spark.conf.get("spark.sql.session.timeZone"), bloomFn)
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      fi, StructType(Nil), dataSchema, None,
+      fi, StructType(Nil), schema, None,
       new org.apache.spark.sql.execution.datasources.parquet
         .ParquetFileFormat, Map.empty[String, String])(spark)
-    val base = spark.baseRelationToDataFrame(rel)
-    if (st.dv.isEmpty) base
-    else dvJoin(base, dvEntries(spark, table, st.dv), "left_anti")
+    if (streaming)
+      org.apache.spark.sql.graftshim.GraftStreamingShim
+        .streamingRelation(spark, rel)
+    else spark.baseRelationToDataFrame(rel)
   }
+
+  /** [[scan]] of `files` of state `st`, with the state's manifest stats
+    * and blooms, in the UNION of its schema lineage (tracked in the log,
+    * not probed from footers — files predating a column read it back as
+    * null), minus the rows the state's deletion vectors retire; `applyDv
+    * = false` leaves them in for callers that join DV entries themselves. */
+  private def readState(spark: SparkSession, table: String,
+      st: TableState, files: Seq[String],
+      applyDv: Boolean = true): DataFrame =
+    minusDv(spark, table, scan(spark, table, files, unionSchema(st.schemas),
+      st.fileStats, st.blooms), if (applyDv) st.dv else Nil)
+
+  /** `base` minus the rows the DV sidecars `dv` retire: a no-op without
+    * DVs; with them the scan's `_metadata` file/row-position columns
+    * LEFT-ANTI join the (small, broadcast) DV entry set — pushdown and
+    * pruning on the scan are unaffected. */
+  private def minusDv(spark: SparkSession, table: String, base: DataFrame,
+      dv: Seq[String]): DataFrame =
+    if (dv.isEmpty) base
+    else dvJoin(base, dvEntries(spark, table, dv), "left_anti")
 
   /** Union of a schema lineage (oldest → newest): first-seen field order
     * and spelling, later lineage entries append their new columns. Names
@@ -565,20 +566,20 @@ object VersionedTable {
     (st.files, st.fileStats, unionSchema(st.schemas), st.dv)
   }
 
-  /** [[readState]]'s streaming twin: scan `files` through a
-    * [[GraftFileIndex]] (manifest stats still prune pushed-down filters
-    * per micro-batch) but surface the relation with `isStreaming = true`
-    * so `MicroBatchExecution` accepts it, minus any rows `dvFiles`
-    * retire (a stream–batch broadcast anti-join — supported shape). The
-    * schema is the SOURCE'S frozen schema, not the state's: every batch
-    * of one streaming query must agree column-for-column, so files
-    * predating a column read nulls and later-added columns are ignored
-    * until the query restarts against the evolved schema. */
+  /** [[readState]]'s streaming twin: [[scan]] `files` as a streaming
+    * relation (manifest stats still prune pushed-down filters per
+    * micro-batch), minus any rows `dvFiles` retire (a stream–batch
+    * broadcast anti-join — supported shape). The schema is the SOURCE'S
+    * frozen schema, not the state's: every batch of one streaming query
+    * must agree column-for-column, so files predating a column read nulls
+    * and later-added columns are ignored until the query restarts against
+    * the evolved schema. */
   private[io] def streamingScan(spark: SparkSession, table: String,
       files: Seq[String], fileStats: FileStats, schema: StructType,
       dvFiles: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftStreamingShim
-    if (files.isEmpty) return GraftStreamingShim.emptyStreaming(spark, schema)
+    if (files.isEmpty)
+      return org.apache.spark.sql.graftshim.GraftStreamingShim
+        .emptyStreaming(spark, schema)
     // a stream resumed past the vacuum retention window must fail with
     // the RETENTION story at planning time, not a raw executor
     // FileNotFoundException mid-batch (same contract as tableChanges)
@@ -587,15 +588,8 @@ object VersionedTable {
         s"streaming batch file $f of $table was vacuumed — the " +
           "checkpoint is beyond the retention window; restart the " +
           "stream from a fresh checkpoint to reprocess"))
-    val fi = new GraftFileIndex(table, files, fileStats, schema,
-      spark.conf.get("spark.sql.session.timeZone"))
-    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      fi, StructType(Nil), schema, None,
-      new org.apache.spark.sql.execution.datasources.parquet
-        .ParquetFileFormat, Map.empty[String, String])(spark)
-    val base = GraftStreamingShim.streamingRelation(spark, rel)
-    if (dvFiles.isEmpty) base
-    else dvJoin(base, dvEntries(spark, table, dvFiles), "left_anti")
+    minusDv(spark, table,
+      scan(spark, table, files, schema, fileStats, streaming = true), dvFiles)
   }
 
   // --------------------------------------- change data feed (write-time)
@@ -755,13 +749,11 @@ object VersionedTable {
       return commitLoop(table, "delete_dv", Nil, _ => Nil, st.schemaJson,
         readVersion = Some(rv),
         rebaseOverAdds = isolation == Isolation.WriteSerializable)
-    val r = if (st.mixedSchemas)
-      spark.read.option("mergeSchema", "true")
-    else spark.read
-    val base = r.parquet(st.files.map(f => Paths.get(table, f).toString): _*)
-    // apply EXISTING DVs first so an already-deleted row can't be
+    // the positions come from the same scan snapshot subtracts them
+    // with; apply EXISTING DVs first so an already-deleted row can't be
     // re-deleted (keeps per-(file,row) entries unique within one state's
     // sidecar set — the invariant one snapshot's anti-join relies on)
+    val base = readState(spark, table, st, st.files, applyDv = false)
     val live =
       if (st.dv.isEmpty) withFilePos(base)
       else dvJoin(base, dvEntries(spark, table, st.dv), "left_anti",
@@ -782,8 +774,7 @@ object VersionedTable {
       // write. A zero-match delete removes the orphan sidecar and commits
       // a no-op (the commit still serializes against concurrent writers).
       val dvFiles = writeDataFiles(hits.coalesce(1), table, tag = "dv")
-      val matched = spark.read
-        .parquet(dvFiles.map(f => Paths.get(table, f).toString): _*).count()
+      val matched = scan(spark, table, dvFiles, hits.schema).count()
       if (matched == 0L) {
         dvFiles.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
         return commitLoop(table, "delete_dv", Nil, _ => Nil, st.schemaJson,
@@ -808,32 +799,20 @@ object VersionedTable {
     } finally matchedRows.unpersist(blocking = false)
   }
 
-  /** Manifest-level data skipping (Delta's stats-based pruning): read the
-    * snapshot restricted to `lo <= column <= hi` (either bound optional),
-    * consulting the per-file min/max recorded at write time — files whose
-    * range cannot intersect are never handed to Spark, so the scan's task
-    * count tracks the SELECTED data, not the table. On a 100 TB table
-    * clustered on the filter column ([[compact]] with `clusterBy`), a
-    * narrow range touches a handful of files; the driver does string/
-    * decimal compares over the manifest, zero I/O. Files without stats
-    * for the column (older commits, all-null files) are kept —
-    * conservative, never wrong. The residual filter is still applied, so
-    * results are exact regardless of stats quality. */
   /** Files of `st` whose recorded [min,max] for `column` may intersect
     * [lo,hi] (either bound optional); files without stats are kept —
     * conservative, never wrong. Numeric columns compare as exact
     * decimals (a double round-trip could mis-prune a boundary file);
     * everything else lexically — correct for strings and for Spark's
     * sortable date/timestamp casts. */
-  private def filesInRange(st: TableState, schema: StructType,
-      column: String, lo: Option[Any], hi: Option[Any],
-      zoneId: String): Seq[String] = {
+  private def filesInRange(st: TableState, column: String, lo: Option[Any],
+      hi: Option[Any], zoneId: String): Seq[String] = {
     // type from the UNION of the schema lineage, not just the latest
     // commit's: a subset-schema append can move-to-end a schema missing
     // this column, and falling back to lexical compare on a numeric
     // column would mis-prune ("10" < "2")
-    val colType = unionSchema(st.schemas).find(_.name == column)
-      .orElse(schema.find(_.name == column)).map(_.dataType)
+    val colType = unionSchema(st.schemas)
+      .find(_.name.equalsIgnoreCase(column)).map(_.dataType)
     val numeric =
       colType.exists(_.isInstanceOf[org.apache.spark.sql.types.NumericType])
     val isTs =
@@ -896,14 +875,24 @@ object VersionedTable {
     }
   }
 
+  /** Manifest-level data skipping (Delta's stats-based pruning): read the
+    * snapshot restricted to `lo <= column <= hi` (either bound optional),
+    * consulting the per-file min/max recorded at write time — files whose
+    * range cannot intersect are never handed to Spark, so the scan's task
+    * count tracks the SELECTED data, not the table. On a 100 TB table
+    * clustered on the filter column ([[compact]] with `clusterBy`), a
+    * narrow range touches a handful of files; the driver does string/
+    * decimal compares over the manifest, zero I/O. Files without stats
+    * for the column (older commits, all-null files) are kept —
+    * conservative, never wrong. The residual filter is still applied, so
+    * results are exact regardless of stats quality. */
   def snapshotWhere(spark: SparkSession, table: String, column: String,
       lo: Option[Any] = None, hi: Option[Any] = None,
       version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(table)).getOrElse(
       throw new IllegalArgumentException(s"no commits at $table"))
     val st = stateAt(table, v)
-    val schema = stateSchema(st)
-    val keep = filesInRange(st, schema, column, lo, hi,
+    val keep = filesInRange(st, column, lo, hi,
       spark.conf.get("spark.sql.session.timeZone"))
     val base = readState(spark, table, st, keep)
     val c = col(column)
@@ -1220,14 +1209,16 @@ object VersionedTable {
     }.toMap
 
   /** Per-file min/max + null counts of `statsFor` columns (and the file
-    * row count) over freshly written files — ONE narrow aggregate over
+    * row count) over freshly written files of `schema` (the written
+    * frame's) — ONE narrow aggregate over
     * just-written data (file-local map-side combine, no shuffle of
     * consequence), keyed by `_metadata.file_path`. Values are stored as
     * strings; all-null columns yield no min/max entry but DO record
     * their null count, which is what lets the planner prune them for
     * null-rejecting predicates. */
   private[io] def computeStats(spark: SparkSession, table: String,
-      files: Seq[String], statsFor: Seq[String]): FileStats = {
+      files: Seq[String], schema: StructType,
+      statsFor: Seq[String]): FileStats = {
     if (statsFor.isEmpty || files.isEmpty) return Map.empty
     // FOOTER-FIRST: the parquet writer already computed per-chunk
     // min/max/null/row statistics — read them back (O(files) metadata,
@@ -1248,10 +1239,10 @@ object VersionedTable {
         val colScanFiles = files.filterNot(scanFiles.contains)
         val colScan =
           if (scanCols.isEmpty || colScanFiles.isEmpty) Map.empty: FileStats
-          else scanStats(spark, table, colScanFiles, scanCols)
+          else scanStats(spark, table, colScanFiles, schema, scanCols)
         val fileScan =
           if (scanFiles.isEmpty) Map.empty: FileStats
-          else scanStats(spark, table, scanFiles, statsFor)
+          else scanStats(spark, table, scanFiles, schema, statsFor)
         // per-file union; overlapping sides carry an identical exact
         // RowsKey, so merge order cannot change any value
         return (footer.keySet ++ colScan.keySet ++ fileScan.keySet).map { f =>
@@ -1259,17 +1250,18 @@ object VersionedTable {
             colScan.getOrElse(f, Map.empty) ++
             fileScan.getOrElse(f, Map.empty))
         }.toMap
-      case None => return scanStats(spark, table, files, statsFor)
+      case None => return scanStats(spark, table, files, schema, statsFor)
     }
   }
 
   /** The scan-based stats pass (pre-r14 computeStats body): one Spark
-    * aggregate over the just-written files. Fallback only — see
-    * [[FooterStats]]. */
+    * aggregate over the just-written files of `schema`. Fallback only —
+    * see [[FooterStats]]. */
   private[io] def scanStats(spark: SparkSession, table: String,
-      files: Seq[String], statsFor: Seq[String]): FileStats = {
+      files: Seq[String], schema: StructType,
+      statsFor: Seq[String]): FileStats = {
     if (statsFor.isEmpty || files.isEmpty) return Map.empty
-    val df = spark.read.parquet(files.map(f => Paths.get(table, f).toString): _*)
+    val df = scan(spark, table, files, schema)
     // reserved `__` keys (row/null/byte counts) share the stats map with
     // real column names — a data column named like one of them would
     // store min/max under another column's count key and mis-prune;
@@ -1358,30 +1350,26 @@ object VersionedTable {
     *    file's filters in driver memory at a time), never a collect of
     *    every filter + mkString of a multi-GB string. */
   private def computeBlooms(spark: SparkSession, table: String,
-      files: Seq[String], bloomFor: Seq[String],
+      files: Seq[String], schema: StructType, bloomFor: Seq[String],
       fpp: Double, maxBytesOpt: Option[Long] = None): Seq[String] = {
     if (bloomFor.isEmpty || files.isEmpty) return Nil
     require(fpp > 0 && fpp < 1, s"bloomFpp must be in (0,1), got $fpp")
     // resolve the cap ONCE per commit: the global is a process default
     // another thread may mutate mid-commit — per-call callers pin it
     val maxBytes = maxBytesOpt.getOrElse(MaxBloomSidecarBytes)
-    val df = spark.read.parquet(files.map(f => Paths.get(table, f).toString): _*)
-    val cols = bloomFor.filter(df.columns.contains)
+    val cols = bloomFor.filter(schema.fieldNames.contains)
       .filterNot(_.startsWith("__")) // reserved-key namespace, never indexed
     if (cols.isEmpty) return Nil
     // pass 1: per-file row counts → power-of-4 size classes. Footer
     // metadata first (O(files), no job — the same lever as computeStats'
     // footer pass); the count job survives as the fallback. Both yield
-    // PLAIN filesystem paths for the per-class reads below.
+    // file names for the per-class reads below.
     val counts: Seq[(String, Long)] =
-      FooterStats.rowCounts(table, files) match {
-        case Some(m) => m.toSeq.map { case (n, c) =>
-          Paths.get(table, n).toString -> c
-        }
-        case None => df.groupBy(col("_metadata.file_path")).count()
-          .collect().map(r =>
-            new java.net.URI(r.getString(0)).getPath -> r.getLong(1)).toSeq
-      }
+      FooterStats.rowCounts(table, files).map(_.toSeq).getOrElse(
+        scan(spark, table, files, schema)
+          .groupBy(col("_metadata.file_path")).count()
+          .collect().map(r => Paths.get(new java.net.URI(r.getString(0))
+            .getPath).getFileName.toString -> r.getLong(1)).toSeq)
     def sizeClass(n: Long): Int =
       (63 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n))) / 2
     def numBits(items: Long): Long = math.min(1L << 26,
@@ -1418,7 +1406,7 @@ object VersionedTable {
         if (written + projected > maxBytes) {
           skipped += members.size
         } else {
-          val sub = spark.read.parquet(members.map(_._1): _*)
+          val sub = scan(spark, table, members.map(_._1), schema)
           val aggs = cols.map { c =>
             Bridge.column(new BloomFilterAggregate(
               new XxHash64(Seq(Bridge.expression(col(c)))),
@@ -1720,9 +1708,10 @@ object VersionedTable {
     val c = commitLoop(table, "append", files, _ => Nil, df.schema.json,
       None,
       txn = txn,
-      stats = withSizes(table, files, computeStats(spark, table, files, sf)),
-      bloomAdd = computeBlooms(spark, table, files, bfc, bloomFpp,
-        bloomMaxBytes),
+      stats = withSizes(table, files,
+        computeStats(spark, table, files, df.schema, sf)),
+      bloomAdd = computeBlooms(spark, table, files, df.schema, bfc,
+        bloomFpp, bloomMaxBytes),
       revalidate = () => {
         enforceAppendSchema(table, df.schema, mergeSchema)
         // re-check constraints too: a slot-race winner may have just
@@ -1808,20 +1797,15 @@ object VersionedTable {
       // change-feeding a full replacement; selective writers should
       // MERGE/DELETE instead, which capture O(delta).
       val cdc = prior match {
-        // an empty write of an empty table changes nothing — and a
-        // zero-path parquet read cannot even infer a schema
+        // an empty write of an empty table changes nothing
         case Some(p) if cdfEnabled(p.props) &&
             (p.files.nonEmpty || files.nonEmpty) =>
-          val old = readState(spark, table, p, p.files)
+          writeCdc(readState(spark, table, p, p.files)
             .withColumn("_change_type", lit("delete"))
-          val env =
-            if (files.isEmpty) old // delete-all overwrite
-            else old.unionByName(
-              spark.read.parquet(
-                files.map(f => Paths.get(table, f).toString): _*)
-                .withColumn("_change_type", lit("insert")),
-              allowMissingColumns = true)
-          writeCdc(env, table, math.max(1, files.size))
+            .unionByName(scan(spark, table, files, df.schema)
+              .withColumn("_change_type", lit("insert")),
+              allowMissingColumns = true),
+            table, math.max(1, files.size))
         case _ => Nil
       }
       // the remove set is derived from the slot the commit actually
@@ -1836,9 +1820,9 @@ object VersionedTable {
         v => if (v == 0) Nil else stateAt(table, v - 1).files,
         df.schema.json, readVersion = read, txn = txn,
         stats = withSizes(table, files,
-          computeStats(spark, table, files, sf)),
-        bloomAdd = computeBlooms(spark, table, files, bfc, bloomFpp,
-          bloomMaxBytes),
+          computeStats(spark, table, files, df.schema, sf)),
+        bloomAdd = computeBlooms(spark, table, files, df.schema, bfc,
+          bloomFpp, bloomMaxBytes),
         revalidate = () => {
           enforceOverwriteSchema(table, df.schema, overwriteSchema)
           enforceConstraints(table, df)
@@ -1968,8 +1952,6 @@ object VersionedTable {
     def step[T](name: String)(body: => T): T =
       Stages.time("vt", s"$op.$name")(body)
     requireNoDv(st, op, table)
-    val schema =
-      if (st.schemas.isEmpty) StructType(Nil) else unionSchema(st.schemas)
     // persisted: the key set drives the bounds aggregate, the hit
     // semi-join, the retire tag and the capture joins — unpersisted, the
     // caller's plan (often itself a join) re-ran once per consumer
@@ -1980,11 +1962,8 @@ object VersionedTable {
     }
     try {
       val hitNames = step("hit-scan") {
-        hitFiles(spark, table, st, schema, change, keySet) }
-      val hitRows =
-        if (hitNames.isEmpty)
-          spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-        else readState(spark, table, st, hitNames)
+        hitFiles(spark, table, st, change, keySet) }
+      val hitRows = readState(spark, table, st, hitNames)
       val Retired = "__graft_retired"
       val tagged = change match {
         case _ if hitNames.isEmpty => hitRows.withColumn(Retired, lit(false))
@@ -2024,8 +2003,7 @@ object VersionedTable {
               case ByPredicate(_) =>
                 retired.withColumn("_change_type", lit("delete"))
               case ByKeys(keys, _, _) =>
-                val fresh = keyJoin(spark.read.schema(written.schema)
-                  .parquet(added.map(f => Paths.get(table, f).toString): _*),
+                val fresh = keyJoin(scan(spark, table, added, written.schema),
                   keySet.get, keys, "left_semi")
                 def typed(rows: DataFrame, other: DataFrame, yes: String,
                     no: String): DataFrame =
@@ -2046,10 +2024,11 @@ object VersionedTable {
             writeCdc(env, table, hitNames.size)
           }
         val stats = step("stats") { withSizes(table, added, computeStats(
-          spark, table, added, effectiveCols(statsFor, trackedStatColumns(st))))
+          spark, table, added, written.schema,
+          effectiveCols(statsFor, trackedStatColumns(st))))
         }
         val blooms = step("blooms") { computeBlooms(spark, table, added,
-          trackedBloomColumns(table, st), 0.03) }
+          written.schema, trackedBloomColumns(table, st), 0.03) }
         step("commit") {
           commitLoop(table, op, added, _ => hitNames, written.schema.json,
             readVersion = rv, txn = txn, stats = stats, bloomAdd = blooms,
@@ -2063,7 +2042,7 @@ object VersionedTable {
 
   /** Names of the files of `st` that hold a row `change` retires. */
   private def hitFiles(spark: SparkSession, table: String, st: TableState,
-      schema: StructType, change: RowChange,
+      change: RowChange,
       keySet: Option[DataFrame]): Seq[String] = {
     if (st.files.isEmpty) return Nil
     val paths = change match {
@@ -2083,7 +2062,7 @@ object VersionedTable {
               max(col(k).isNull.cast("int"))).collect()(0)
             val ranged =
               if (b.isNullAt(0)) Nil // no non-null retired keys
-              else filesInRange(st, schema, k,
+              else filesInRange(st, k,
                 Some(b.get(0)), Some(b.get(1)),
                 spark.conf.get("spark.sql.session.timeZone"))
             // min/max never see nulls: a NULL retired key admits every
@@ -2175,7 +2154,7 @@ object VersionedTable {
     // carry the target state's FULL schema lineage: the re-added files
     // may span schema versions, and a lone schemaJson would let stateAt's
     // full-replacement reset collapse the lineage to one entry —
-    // mergeSchema reads would then drop columns living only in older
+    // union-schema reads would then drop columns living only in older
     // files, and currentSchemaMap would forget their types
     commitLoop(table, "restore", files,
       _ => cur.files, schema, readVersion = Some(rv),
@@ -2193,7 +2172,7 @@ object VersionedTable {
       bloomAdd = st.blooms)
   }
 
-  /** OPTIMIZE-style compaction as a commit: coalesce the current snapshot
+  /** OPTIMIZE-style compaction as a commit: rewrite the current snapshot
     * into `targetFiles` new files, retire the old ones. Time travel to
     * pre-compaction versions still works until vacuum.
     *
@@ -2213,11 +2192,11 @@ object VersionedTable {
       bloomMaxBytes: Option[Long] = None): Commit = {
     val rv = latestVersion(table).getOrElse(
       throw new IllegalArgumentException(s"no table at $table"))
-    val base = snapshot(spark, table, Some(rv))
+    val st = stateAt(table, rv)
     // range-repartition + local sort so each output file owns a narrow
     // key range — exactly what makes the recorded min/max stats
     // selective for snapshotWhere pruning.
-    val snap =
+    def layout(base: DataFrame): DataFrame =
       if (clusterBy.isEmpty) base.coalesce(targetFiles)
       else if (zorder) {
         val keyed = graft.ext.Layout.zorderKey(base, clusterBy,
@@ -2228,30 +2207,48 @@ object VersionedTable {
       }
       else base.repartitionByRange(targetFiles, clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
-    val added = writeDataFiles(snap, table)
-    // compact reads through snapshot(), which applies active deletion
-    // vectors — the rewrite MATERIALIZES them, so the commit retires
-    // every DV sidecar along with the old data files
-    val preSt = stateAt(table, rv)
-    commitLoop(table, "optimize", added, _ => preSt.files,
-      snap.schema.json, readVersion = Some(rv),
-      stats = withSizes(table, added, computeStats(spark, table, added,
-        if (statsFor.nonEmpty) statsFor
-        else if (clusterBy.nonEmpty)
-          (clusterBy ++ trackedStatColumns(preSt)).distinct
-        else trackedStatColumns(preSt))),
-      bloomAdd = computeBlooms(spark, table, added,
-        effectiveCols(bloomFor, trackedBloomColumns(table, preSt)),
+    rewriteFiles(spark, table, rv, st, st.files, layout,
+      if (statsFor.nonEmpty) statsFor
+      else (clusterBy ++ trackedStatColumns(st)).distinct,
+      effectiveCols(bloomFor, trackedBloomColumns(table, st)),
+      bloomFpp, bloomMaxBytes, isolation)
+  }
+
+  /** The one OPTIMIZE write behind [[compact]] and [[compactSmallFiles]]
+    * (Delta's OPTIMIZE): read `files` of state `st` (read version `rv`)
+    * through [[readState]], lay them out with `layout`, write them back
+    * with stats and blooms for `statsFor` / `bloomFor`, and commit
+    * `optimize` retiring `files` (dataChange = false: tailing streams and
+    * the change feed skip it). When `files` is the whole live set the
+    * rewrite replaces the table: the commit records the written (lineage
+    * union) schema, which resets the lineage, and retires every DV
+    * sidecar, which the read has materialized. A partial rewrite records
+    * no schema, so the table's current one (which the change feed
+    * conforms to and appends rebase against) stays as its last writer
+    * left it; its files hold lineage columns only. It retires no DV, as
+    * its callers pick no DV-covered file. */
+  private def rewriteFiles(spark: SparkSession, table: String, rv: Long,
+      st: TableState, files: Seq[String], layout: DataFrame => DataFrame,
+      statsFor: Seq[String], bloomFor: Seq[String], bloomFpp: Double,
+      bloomMaxBytes: Option[Long], isolation: Isolation): Commit = {
+    val whole = files.toSet == st.files.toSet
+    val laid = layout(readState(spark, table, st, files))
+    val added = writeDataFiles(laid, table)
+    commitLoop(table, "optimize", added, _ => files,
+      if (whole) laid.schema.json else "", readVersion = Some(rv),
+      stats = withSizes(table, added,
+        computeStats(spark, table, added, laid.schema, statsFor)),
+      bloomAdd = computeBlooms(spark, table, added, laid.schema, bloomFor,
         bloomFpp, bloomMaxBytes),
-      dvRemoveAt = _ => preSt.dv,
+      dvRemoveAt = _ => if (whole) st.dv else Nil,
       rebaseOverAdds = isolation == Isolation.WriteSerializable)
   }
 
   /** OPTIMIZE sized by bytes instead of a file count (the Delta
     * `maxFileSize` shape): target file count = ⌈live bytes /
-    * targetBytes⌉, measured from the actual on-disk sizes of the
-    * current snapshot's files — callers say "1 GiB files" once instead
-    * of re-deriving a count as the table grows. Skips the rewrite
+    * targetBytes⌉, measured from the sizes of the current snapshot's
+    * files — callers say "1 GiB files" once instead of re-deriving a
+    * count as the table grows. Skips the rewrite
     * entirely (returns None) when the table already has that many files
     * or fewer, no clustering was requested, AND no deletion vectors are
     * active — OPTIMIZE on an optimized table must not rewrite 100 TB for
@@ -2268,7 +2265,8 @@ object VersionedTable {
       throw new IllegalArgumentException(s"no table at $table"))
     val st = stateAt(table, rv)
     if (st.files.isEmpty) return None
-    val totalBytes = st.files.map(f => Files.size(Paths.get(table, f))).sum
+    val totalBytes =
+      st.files.map(GraftFileIndex.fileBytes(table, _, st.fileStats)).sum
     val target = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
     if (clusterBy.isEmpty && st.files.size <= target && st.dv.isEmpty) None
     else Some(compact(spark, table, target.toInt, clusterBy, statsFor,
@@ -2282,8 +2280,9 @@ object VersionedTable {
     * (every micro-batch commit lands a few small files; a week of
     * 1-minute batches is ten thousand of them), WITHOUT the full-table
     * rewrite `compact` does — at 100 TB the difference is the whole job.
-    * Commits as `optimize` (dataChange = false): a tailing stream never
-    * re-serves the moved rows, the change feed skips it.
+    * A [[rewriteFiles]] write: the outputs carry the lineage-union
+    * columns, and a pass that picks every live file replaces the table
+    * like [[compact]].
     *
     * Files covered by an active deletion vector are left alone (a raw
     * rewrite would resurrect their deleted rows; sidecars may also cover
@@ -2303,39 +2302,20 @@ object VersionedTable {
       if (st.dv.isEmpty) Set.empty
       else dvEntries(spark, table, st.dv).select(col("__dv_fn"))
         .distinct().collect().map(_.getString(0)).toSet
+    // a file that cannot be sized (gone from disk) is never small
     def sizeOf(f: String): Long =
-      st.fileStats.get(f).flatMap(_.get(BytesKey))
-        .flatMap(b => scala.util.Try(b._1.toLong).toOption)
-        .getOrElse(scala.util.Try(Files.size(Paths.get(table, f)))
-          .getOrElse(Long.MaxValue))
+      scala.util.Try(GraftFileIndex.fileBytes(table, f, st.fileStats))
+        .getOrElse(Long.MaxValue)
     val small = st.files.filter(f =>
       !dvCovered.contains(f) && sizeOf(f) < smallBytes)
     if (small.size < minFiles) return None
     val bytes = small.map(sizeOf).sum
     val target = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val r = if (st.mixedSchemas) spark.read.option("mergeSchema", "true")
-      else spark.read
-    val merged = r
-      .parquet(small.map(f => Paths.get(table, f).toString): _*)
-      .coalesce(target)
-    val added = writeDataFiles(merged, table)
-    // schemaJson stays EMPTY: a partial rewrite must not touch the
-    // schema lineage. Committing the merged subset's schema would
-    // move-to-end it as the table's CURRENT schema — when the small
-    // files predate an evolution, that silently regresses st.schemaJson
-    // and every later merge/read keyed off it. (The full compact
-    // rewrites the whole live set, so recording its schema is correct
-    // there.) The rewritten file's columns are all in the lineage
-    // already — they came from lineage-member files.
-    Some(commitLoop(table, "optimize", added, _ => small,
-      schemaJson = "", readVersion = Some(rv),
-      // sticky indexing, same as every rewrite: the new files re-record
-      // whatever the table tracks
-      stats = withSizes(table, added,
-        computeStats(spark, table, added, trackedStatColumns(st))),
-      bloomAdd = computeBlooms(spark, table, added,
-        trackedBloomColumns(table, st), 0.03),
-      rebaseOverAdds = isolation == Isolation.WriteSerializable))
+    // sticky indexing, same as every rewrite: the new files re-record
+    // whatever the table tracks
+    Some(rewriteFiles(spark, table, rv, st, small, _.coalesce(target),
+      trackedStatColumns(st), trackedBloomColumns(table, st), 0.03, None,
+      isolation))
   }
 
   /** Table property enabling POST-APPEND auto-compaction (Delta's
@@ -2494,28 +2474,17 @@ object VersionedTable {
     val toSet = stTo.files.toSet
     def conform(base: DataFrame): DataFrame =
       base.select(schema.fields.map(f =>
-        (if (base.columns.contains(f.name)) col(f.name).cast(f.dataType)
+        (if (base.columns.exists(_.equalsIgnoreCase(f.name)))
+          col(f.name).cast(f.dataType)
         else lit(null).cast(f.dataType)).as(f.name)).toIndexedSeq: _*)
     // each side reads at ITS version's deletion-vector state: a row a DV
     // had already retired at `from` must not resurface as a delete when
     // its file is rewritten, and a row DV-retired by `to` must not
     // appear as an insert in a file added in the range
-    def readSide(files: Seq[String], dv: Seq[String],
-        mixed: Boolean): DataFrame = {
-      if (files.isEmpty)
-        return conform(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], schema))
-      val r = if (mixed) spark.read.option("mergeSchema", "true")
-      else spark.read
-      val base = r.parquet(files.map(f => Paths.get(table, f).toString): _*)
-      conform(
-        if (dv.isEmpty) base
-        else dvJoin(base, dvEntries(spark, table, dv), "left_anti"))
-    }
-    val before = readSide(stFrom.files.filterNot(toSet), stFrom.dv,
-      stFrom.mixedSchemas)
-    val after = readSide(stTo.files.filterNot(fromSet), stTo.dv,
-      stTo.mixedSchemas)
+    val before = conform(readState(spark, table, stFrom,
+      stFrom.files.filterNot(toSet)))
+    val after = conform(readState(spark, table, stTo,
+      stTo.files.filterNot(fromSet)))
     val carried = stFrom.files.filter(toSet)
     val dataCols = after.columns.filterNot(keys.contains).toSeq
     // DV corrections over files CARRIED across the range — invisible to
@@ -2554,16 +2523,11 @@ object VersionedTable {
         val touched = entries.select("__dv_fn").distinct()
           .collect().map(_.getString(0)).toSeq.sorted
         if (touched.isEmpty) None
-        else {
-          val r = if (stTo.mixedSchemas || stFrom.mixedSchemas)
-            spark.read.option("mergeSchema", "true")
-          else spark.read
-          val base = r.parquet(
-            touched.map(f => Paths.get(table, f).toString): _*)
-          Some(conform(dvJoin(base, entries, "left_semi"))
-            .select((keys ++ dataCols).map(col): _*)
-            .withColumn("_change_type", lit(tpe)))
-        }
+        else Some(conform(dvJoin(
+            readState(spark, table, stTo, touched, applyDv = false),
+            entries, "left_semi"))
+          .select((keys ++ dataCols).map(col): _*)
+          .withColumn("_change_type", lit(tpe)))
       }
       // deletes: entries at `to` absent at `from`; inserts: the reverse
       correction(entryDiff(stTo.dv, stFrom.dv), "delete").toSeq ++

@@ -141,9 +141,12 @@ object Monitoring {
     // FIRST (ascending NULLS FIRST) and lands inside every early day's
     // trailing window, corrupting avg_prev/pct_change for real days —
     // null-ts health is completeness's job, not the volume baseline's
+    // one partition of daily rows (a few hundred per year): the window's
+    // clustering requirement is then met without a second exchange
     val daily = df.where(col(tsCol).isNotNull)
       .groupBy(to_date(col(tsCol)).as("day"))
       .agg(count(lit(1)).as("n"))
+      .coalesce(1)
     // one window over all days, under an explicit key: every daily row
     // has n >= 1, so `n > 0` is TRUE throughout. A literal key would be
     // optimized away, leaving WindowExec's "No Partition Defined" warning

@@ -70,21 +70,12 @@ object IncrementalAgg {
   /** RETRACTABLE state from raw rows: (keys*, n, sum_v). Counts and
     * decimal sums form a group (every delta has an inverse), so this
     * state — unlike [[aggState]]'s min/max — can absorb deletes and
-    * updates, not just appends. */
+    * updates, not just appends. The k = 1 case of [[sumStateMulti]], its
+    * one measure stored as `sum_v`. */
   def sumState(df: DataFrame, keys: Seq[String], valueCol: String,
       decimals: DecimalType = DecimalType(38, 2)): DataFrame =
-    df.groupBy(keys.map(col): _*).agg(
-      count(lit(1)).as("n"),
-      // realign the agg-widened sum to the canonical state type: the
-      // bootstrap state and every applyChangeFeed refresh must carry the
-      // SAME sum_v type, or a state table alternates schemas between
-      // full and incremental writes (versioned-table schema enforcement
-      // rejects exactly that drift). The default is (38,2) — max
-      // precision — so the realigning cast can NEVER overflow-null a
-      // group total (a narrower canonical type would silently null any
-      // group summing past its precision under non-ANSI casts; 10^36
-      // cents is beyond any physical table).
-      sum(col(valueCol).cast(decimals)).cast(decimals).as("sum_v"))
+    sumStateMulti(df, keys, Seq(valueCol), decimals)
+      .withColumnRenamed(s"sum_$valueCol", "sum_v")
 
   /** Fold a change feed ([[graft.io.VersionedTable.changeFeed]] with
     * `includePreimage=true`) into a retractable [[sumState]]: inserts and
@@ -95,35 +86,15 @@ object IncrementalAgg {
     * costs O(changes), not O(table): one keyed aggregate over the (small)
     * change feed, one keyed merge against the (key-cardinality) state.
     * Exactness is inherited from the decimal group algebra — the q153
-    * oracle checks maintained ≡ recomputed bit-for-bit. */
+    * oracle checks maintained ≡ recomputed bit-for-bit. The k = 1 case of
+    * [[applyChangeFeedMulti]]. */
   def applyChangeFeed(state: DataFrame, cdf: DataFrame, keys: Seq[String],
       valueCol: String,
-      decimals: DecimalType = DecimalType(38, 2)): DataFrame = {
-    val sign = when(
-      col("_change_type").isin("insert", "update_postimage"), 1L)
-      .when(col("_change_type").isin("delete", "update_preimage"), -1L)
-    val delta = cdf
-      .filter(sign.isNotNull)
-      .groupBy(keys.map(col): _*).agg(
-        sum(sign).as("n"),
-        // retraction as NEGATION, not a ±1 decimal multiply: negation
-        // keeps the operand's exact type, while a decimal multiply
-        // widens (and at max precision would force a scale-losing
-        // adjustment). Exact at any `decimals`.
-        sum(when(sign > 0, col(valueCol).cast(decimals))
-          .otherwise(-col(valueCol).cast(decimals))).as("sum_v"))
-      // realign the agg-widened sum so the union with the state and the
-      // final sums keep one exact fixed-point type
-      .select(keys.map(col) ++ Seq(col("n"),
-        col("sum_v").cast(decimals).as("sum_v")): _*)
-    val aligned = state.select(keys.map(col) ++ Seq(col("n"),
-      col("sum_v").cast(decimals).as("sum_v")): _*)
-    aligned.unionByName(delta)
-      .groupBy(keys.map(col): _*).agg(
-        sum(col("n")).as("n"),
-        sum(col("sum_v")).cast(decimals).as("sum_v"))
-      .filter(col("n") > 0)
-  }
+      decimals: DecimalType = DecimalType(38, 2)): DataFrame =
+    applyChangeFeedMulti(
+      state.withColumnRenamed("sum_v", s"sum_$valueCol"), cdf, keys,
+      Seq(valueCol), decimals)
+      .withColumnRenamed(s"sum_$valueCol", "sum_v")
 
   /** Retractable COUNT(DISTINCT) state — the aggregate single-level IVM
     * cannot maintain (a delete only removes a value from the distinct set
@@ -262,22 +233,22 @@ object IncrementalAgg {
       }: _*)
   }
 
-  /** Reader-facing view of a retractable [[sumState]]. */
+  /** Reader-facing view of a retractable [[sumState]]: its measure `v`
+    * through [[finalizeSumsMulti]], as `sum_value` / `avg_value`. */
   def finalizeSums(state: DataFrame, keys: Seq[String]): DataFrame =
-    state.select(keys.map(col) ++ Seq(
-      col("n"),
-      col("sum_v").cast(DoubleType).as("sum_value"),
-      (col("sum_v").cast(DoubleType) / col("n").cast(DoubleType))
-        .as("avg_value")): _*)
+    finalizeSumsMulti(state, keys, Seq("v"))
+      .withColumnRenamed("sum_v", "sum_value")
+      .withColumnRenamed("avg_v", "avg_value")
 
   /** RETRACTABLE state over SEVERAL measures at once:
     * (keys*, n, sum_<c> per value column). A real materialized view
     * rarely maintains one sum — amount + fee + net per merchant is the
     * normal shape — and maintaining k single-measure states would fold
-    * the change feed k times and store k copies of the group keys. Same
-    * group algebra as [[sumState]] per column (count + decimal sums form
-    * a group; every delta has an inverse), same canonical (38,2)
-    * realignment so bootstrap and refresh writes carry one schema. */
+    * the change feed k times and store k copies of the group keys. Count
+    * and decimal sums form a group per column (every delta has an
+    * inverse). The sums are realigned to the canonical `decimals` type
+    * (default (38,2), max precision, so the cast can never overflow-null
+    * a group total), so bootstrap and refresh writes carry one schema. */
   def sumStateMulti(df: DataFrame, keys: Seq[String],
       valueCols: Seq[String],
       decimals: DecimalType = DecimalType(38, 2)): DataFrame = {
@@ -305,6 +276,10 @@ object IncrementalAgg {
       .filter(sign.isNotNull)
       .groupBy(keys.map(col): _*)
       .agg(sum(sign).as("n"),
+        // retraction as NEGATION, not a ±1 decimal multiply: negation
+        // keeps the operand's exact type, while a decimal multiply
+        // widens (and at max precision would force a scale-losing
+        // adjustment). Exact at any `decimals`.
         valueCols.map(c =>
           sum(when(sign > 0, col(c).cast(decimals))
             .otherwise(-col(c).cast(decimals)))

@@ -702,4 +702,26 @@ class PlanQualitySpec extends SparkSpec {
     // and the rep window drops the clusters aggregate's join back
     assert(got <= want - 1, s"$got keyed exchanges, reference $want")
   }
+
+  test("volumeAnomalyDF shuffles once: the daily groupBy feeds the window " +
+    "through one partition, with no second exchange") {
+    val events = spark.range(800).select(timestamp_seconds(
+      lit(1704067200L) + (col("id") % 8) * 86400).as("ts"))
+    val out = graft.monitoring.Monitoring.volumeAnomalyDF(events, "ts")
+    // the adaptive wrapper is a leaf: inspect the plan it starts from,
+    // where every exchange the query needs is already placed
+    val plan = out.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.initialPlan
+      case p => p
+    }
+    val exchanges = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    }
+    assert(exchanges.size == 1, plan.toString)
+    assert(exchanges.head.outputPartitioning.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.physical.HashPartitioning],
+      plan.toString)
+    assert(out.count() == 8)
+  }
 }

@@ -160,6 +160,83 @@ class PropertiesSpec extends SparkSpec {
     }, cases = 6)
   }
 
+  test("appends, subset-schema appends, deferred deletes and both " +
+    "compactions read back what a Map model holds, and the net change " +
+    "feed is the model's diff") {
+    import graft.io.{VersionedTable => VT}
+    // one write: its kind, a row count and picks into the live ids
+    val opGen = for {
+      kind <- Gen.oneOf("append", "subset", "delete", "compact", "small")
+      n <- Gen.choose(1, 3)
+      picks <- Gen.listOfN(3, Gen.choose(0, 1000))
+    } yield (kind, n, picks)
+    val caseGen = Gen.choose(1, 5).flatMap(Gen.listOfN(_, opGen))
+    // id -> (v, extra); a subset-schema row's extra is null
+    type Model = Map[Int, (String, String)]
+    def bag(rows: Seq[Seq[Any]]): Map[Seq[Any], Int] =
+      rows.groupBy(identity).map { case (k, v) => (k, v.size) }
+    // the feed conforms to the to-version's current schema, which a
+    // subset-schema append narrows to (id, v)
+    def row(id: Int, e: (String, String), withExtra: Boolean): Seq[Any] =
+      if (withExtra) Seq(id, e._1, e._2) else Seq(id, e._1)
+    // ids are never reused, so the net diff is inserts and deletes only
+    def diff(a: Model, b: Model, withExtra: Boolean): Map[Seq[Any], Int] =
+      bag((b -- a.keys).toSeq.map { case (id, e) =>
+        row(id, e, withExtra) :+ "insert" } ++
+        (a -- b.keys).toSeq.map { case (id, e) =>
+          row(id, e, withExtra) :+ "delete" })
+    check("file-set rewrites", Prop.forAllNoShrink(caseGen) { ops =>
+      TestDirs.withTempDir("graft-rewrite") { dir =>
+        val t = dir.resolve("t").toString
+        var nextId = 0
+        var model: Model = Map.empty
+        def append(n: Int, step: Int, full: Boolean): Unit = {
+          val rows = (nextId until nextId + n).map(id =>
+            id -> ((s"$step-$id", if (full) s"x$step-$id" else null)))
+          nextId += n
+          val df =
+            if (full) rows.map { case (id, (v, x)) => (id, v, x) }
+              .toDF("id", "v", "extra")
+            else rows.map { case (id, (v, _)) => (id, v) }.toDF("id", "v")
+          VT.append(spark, df.coalesce(1), t, optimizeWrite = false)
+          model ++= rows
+        }
+        def feedOk(from: Long, to: Long, a: Model, b: Model): Boolean = {
+          val f = VT.changeFeed(spark, t, from, to, Seq("id"))
+          val withExtra = f.columns.contains("extra")
+          bag(f.collect().toSeq.map(_.toSeq)) == diff(a, b, withExtra)
+        }
+        append(2, -1, full = true)
+        append(2, -2, full = true)
+        val (v0, m0) = (VT.latestVersion(t).get, model)
+        ops.zipWithIndex.forall { case ((kind, n, picks), step) =>
+          val (prev, before) = (VT.latestVersion(t).get, model)
+          kind match {
+            case "append" => append(n, step, full = true)
+            case "subset" => append(n, step, full = false)
+            case "delete" =>
+              val live = model.keys.toSeq.sorted
+              val ids =
+                if (live.isEmpty) Seq(-1)
+                else picks.take(n).map(p => live(p % live.size)).distinct
+              VT.deleteWhereDeferred(spark, t, col("id").isin(ids: _*))
+              model --= ids
+            case "compact" => VT.compact(spark, t, 1 + picks.head % 2)
+            case _ =>
+              VT.compactSmallFiles(spark, t, smallBytes = 1L << 30,
+                minFiles = 2)
+          }
+          val cur = VT.latestVersion(t).get
+          val snap = VT.snapshot(spark, t).select("id", "v", "extra")
+            .collect().toSeq.map(_.toSeq)
+          bag(snap) == bag(model.toSeq.map { case (id, e) =>
+            row(id, e, withExtra = true) }) &&
+            feedOk(prev, cur, before, model)
+        } && feedOk(v0, VT.latestVersion(t).get, m0, model)
+      }
+    }, cases = 6)
+  }
+
   test("surrogate keys are dense 1..N regardless of input partitioning") {
     check("surrogate", Prop.forAll(dfGen, Gen.chooseNum(1, 5)) { (rows, parts) =>
       val df = toDF(rows).repartition(parts)

@@ -1429,9 +1429,9 @@ class VersionedTableSpec extends SparkSpec {
       VT.append(spark, df(2 -> "b").coalesce(1), t)           // old schema
       VT.append(spark, Seq((3, "c", 30)).toDF("id", "v", "w")
         .coalesce(1), t, mergeSchema = true)                  // evolved
-      // every fixture file is tiny, so the rewrite folds all three —
-      // the empty-schemaJson commit must leave the lineage alone
-      // regardless of which files it touched
+      // every fixture file is tiny, so the rewrite folds all three — a
+      // whole-set rewrite records the lineage-union schema, which must
+      // still carry the evolved column and its type
       assert(VT.compactSmallFiles(spark, t, minFiles = 2).isDefined)
       // the evolved column survives reads...
       val snap = VT.snapshot(spark, t)
@@ -1624,5 +1624,87 @@ class VersionedTableSpec extends SparkSpec {
       assert(VT.history(spark, t).orderBy("version")
         .select("op").as[String].collect().last == "set_props")
     }
+  }
+
+  test("changeFeed and compactSmallFiles plan their reads without a " +
+    "Spark job: the scan takes the log's schema, not a footer inference") {
+    import org.apache.spark.sql.graftbridge.Bridge
+    val key = "graft.test.vt-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) != null)
+          jobs.incrementAndGet()
+    }
+    // jobs the calling thread starts inside `body`
+    def jobsOf[T](body: => T): (T, Int) = {
+      Bridge.waitListenerBus(spark)
+      jobs.set(0)
+      spark.sparkContext.setLocalProperty(key, "probe")
+      val r = try body finally spark.sparkContext.setLocalProperty(key, null)
+      Bridge.waitListenerBus(spark)
+      (r, jobs.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      withTable { t =>
+        VT.append(spark, df(1 -> "a", 2 -> "b", 3 -> "c").coalesce(1), t)
+        VT.merge(spark, df(2 -> "B", 4 -> "d"), t, Seq("id"))     // v1
+        VT.deleteWhere(spark, t, col("id") === 1)                  // v2
+        // both sides of the range hold changed files: the parent read
+        // each with a schema-inferring spark.read, one job apiece
+        val (feed, planJobs) = jobsOf(
+          VT.changeFeed(spark, t, 0, 2, Seq("id"), includePreimage = true))
+        assert(planJobs == 0, s"changeFeed planning ran $planJobs job(s)")
+        assert(feed.select("id", "v", "_change_type").as[(Int, String, String)]
+          .collect().toSet == Set((1, "a", "delete"),
+            (2, "b", "update_preimage"), (2, "B", "update_postimage"),
+            (4, "d", "insert")))
+      }
+      withTable { t =>
+        VT.append(spark, df(1 -> "a").coalesce(1), t, optimizeWrite = false)
+        VT.append(spark, df(2 -> "b").coalesce(1), t, optimizeWrite = false)
+        // the write is the only job: reading the two files plans none
+        val (c, compactJobs) =
+          jobsOf(VT.compactSmallFiles(spark, t, minFiles = 2))
+        assert(c.exists(_.remove.size == 2))
+        assert(compactJobs == 1, s"compactSmallFiles ran $compactJobs jobs")
+        assert(VT.snapshot(spark, t).as[(Int, String)].collect().toSet ==
+          Set(1 -> "a", 2 -> "b"))
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("only the scan builds a file relation; spark.read is left to the " +
+    "DV and CDF sidecar readers") {
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get(
+      "src/main/scala/graft/io/VersionedTable.scala")
+    assert(Files.isRegularFile(src), s"run from the repo root: $src")
+    // every member of the object starts at two spaces of indentation;
+    // a line belongs to the member whose header last started
+    val Member = """^  [a-z@].*""".r
+    val Def = """^  (?:[\w@\[\]]+ )*def (\w+).*""".r
+    val allowed = Set("scan", "dvEntries", "tableChanges")
+    var owner = ""
+    val hits = Files.readAllLines(src).asScala.toSeq.zipWithIndex.flatMap {
+      case (line, i) =>
+        line match {
+          case Def(name) => owner = name
+          case Member() => owner = ""
+          case _ =>
+        }
+        val read = """\bspark\.read\b""".r.findFirstIn(line).isDefined
+        val relation = line.contains("HadoopFsRelation(")
+        if (read || relation) Some((owner, read, s"$src:${i + 1}: ${line.trim}"))
+        else None
+    }
+    val offenders = hits.collect {
+      case (o, true, at) if !allowed(o) => at
+      case (o, false, at) if o != "scan" => at
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+    assert(hits.count(!_._2) == 1, hits.mkString("\n", "\n", ""))
   }
 }

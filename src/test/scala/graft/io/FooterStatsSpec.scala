@@ -61,7 +61,8 @@ class FooterStatsSpec extends graft.SparkSpec {
     // must be footer-answerable
     assert(fallback.isEmpty, s"unexpected fallback columns: $fallback")
     assert(badFiles.isEmpty, s"unexpected fallback files: $badFiles")
-    val scanned = VersionedTable.scanStats(spark, table, files, cols)
+    val scanned =
+      VersionedTable.scanStats(spark, table, files, df.schema, cols)
     assert(files.nonEmpty)
     files.foreach { f =>
       val fm = footer(f)
@@ -89,9 +90,11 @@ class FooterStatsSpec extends graft.SparkSpec {
       assert(footer(files.head).contains("l"))
       // composed path still yields the full scan's answer for ts
       val composed =
-        VersionedTable.computeStats(spark, table, files, Seq("ts", "l"))
+        VersionedTable.computeStats(spark, table, files, df.schema,
+          Seq("ts", "l"))
       val scanned =
-        VersionedTable.scanStats(spark, table, files, Seq("ts", "l"))
+        VersionedTable.scanStats(spark, table, files, df.schema,
+          Seq("ts", "l"))
       files.foreach { f =>
         scanned(f).foreach { case (k, v) =>
           assert(composed(f)(k) == v, s"composed stat '$k' differs")
@@ -119,7 +122,8 @@ class FooterStatsSpec extends graft.SparkSpec {
       FooterStats.tryCompute(table, files, cols).get
     assert(fallback.isEmpty, s"unexpected fallback columns: $fallback")
     assert(badFiles.isEmpty, s"unexpected fallback files: $badFiles")
-    val scanned = VersionedTable.scanStats(spark, table, files, cols)
+    val scanned =
+      VersionedTable.scanStats(spark, table, files, df.schema, cols)
     files.foreach { f =>
       assert(footer(f).keySet == scanned(f).keySet,
         s"stat keys differ for $f:\nfooter ${footer(f).keySet.toSeq.sorted}" +
@@ -195,9 +199,11 @@ class FooterStatsSpec extends graft.SparkSpec {
       assert(footer(files.head).contains("l"))
       // composed path still yields the full scan's answer for ts
       val composed =
-        VersionedTable.computeStats(spark, table, files, Seq("ts", "l"))
+        VersionedTable.computeStats(spark, table, files, df.schema,
+          Seq("ts", "l"))
       val scanned =
-        VersionedTable.scanStats(spark, table, files, Seq("ts", "l"))
+        VersionedTable.scanStats(spark, table, files, df.schema,
+          Seq("ts", "l"))
       files.foreach { f =>
         scanned(f).foreach { case (k, v) =>
           assert(composed(f)(k) == v, s"composed stat '$k' differs")
@@ -224,7 +230,8 @@ class FooterStatsSpec extends graft.SparkSpec {
     assert(badFiles == Seq(victim))
     assert(fallback.isEmpty)
     val goodFiles = files.filterNot(_ == victim)
-    val scanned = VersionedTable.scanStats(spark, table, goodFiles, Seq("l"))
+    val scanned = VersionedTable.scanStats(spark, table, goodFiles,
+      df.schema, Seq("l"))
     goodFiles.foreach(f => assert(footer(f) == scanned(f)))
     assert(!footer.contains(victim))
   }
@@ -235,8 +242,8 @@ class FooterStatsSpec extends graft.SparkSpec {
     // org.apache.spark.sql.parquet.row.metadata for the parity proof.
     val dir = Files.createTempDirectory("footerstats-foreign")
     val sub = dir.resolve("t")
-    spark.range(10).select(col("id").as("l")).coalesce(1)
-      .write.parquet(sub.toString)
+    val own = spark.range(10).select(col("id").as("l"))
+    own.coalesce(1).write.parquet(sub.toString)
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       "message m { optional int64 l; }")
     val hconf = new org.apache.hadoop.conf.Configuration()
@@ -264,9 +271,11 @@ class FooterStatsSpec extends graft.SparkSpec {
     // end-to-end composed stats equal the pure scan for EVERY file —
     // the foreign file's answers come from its own narrow scan pass
     val composed =
-      VersionedTable.computeStats(spark, sub.toString, files, Seq("l"))
+      VersionedTable.computeStats(spark, sub.toString, files, own.schema,
+        Seq("l"))
     val scanned =
-      VersionedTable.scanStats(spark, sub.toString, files, Seq("l"))
+      VersionedTable.scanStats(spark, sub.toString, files, own.schema,
+        Seq("l"))
     files.foreach { f =>
       scanned(f).foreach { case (k, v) =>
         assert(composed(f)(k) == v, s"composed stat '$k' differs for $f")
@@ -311,7 +320,7 @@ class FooterStatsSpec extends graft.SparkSpec {
         try l.iterator().asScala.map(_.getFileName.toString)
           .filter(_.endsWith(".parquet")).toSeq.sorted
         finally l.close()
-      val scanned = VersionedTable.scanStats(spark, t, files,
+      val scanned = VersionedTable.scanStats(spark, t, files, df.schema,
         Seq("id", "amount"))
       val (footer, fb, bf) =
         FooterStats.tryCompute(t, files, Seq("id", "amount")).get
@@ -346,13 +355,12 @@ class FooterStatsSpec extends graft.SparkSpec {
         val dir = Files.createTempDirectory("prop-fstats")
         try {
           val t = dir.resolve("t").toString
-          unscaled.map(u =>
+          val frame = unscaled.map(u =>
               new java.math.BigDecimal(new java.math.BigInteger(u.toString),
                 scale).toPlainString)
             .toDF("x")
             .select(col("x").cast(s"decimal($precision,$scale)").as("dec"))
-            .coalesce(1)
-            .write.parquet(t)
+          frame.coalesce(1).write.parquet(t)
           val l = Files.list(java.nio.file.Paths.get(t))
           val files =
             try l.iterator().asScala.map(_.getFileName.toString)
@@ -360,7 +368,8 @@ class FooterStatsSpec extends graft.SparkSpec {
             finally l.close()
           val (footer, fb, bad) =
             FooterStats.tryCompute(t, files, Seq("dec")).get
-          val scanned = VersionedTable.scanStats(spark, t, files, Seq("dec"))
+          val scanned = VersionedTable.scanStats(spark, t, files,
+            frame.schema, Seq("dec"))
           fb.isEmpty && bad.isEmpty &&
             files.forall(f => footer(f) == scanned(f))
         } finally {
@@ -383,7 +392,8 @@ class FooterStatsSpec extends graft.SparkSpec {
     val (table, files) = writeScratch(df)
     assert(files.size == 4)
     val (footer, _, _) = FooterStats.tryCompute(table, files, Seq("l")).get
-    val scanned = VersionedTable.scanStats(spark, table, files, Seq("l"))
+    val scanned = VersionedTable.scanStats(spark, table, files, df.schema,
+      Seq("l"))
     files.foreach(f => assert(footer(f) == scanned(f)))
     // bounds genuinely differ across files (range-clustered)
     assert(footer.values.map(_("l")).toSet.size == 4)
