@@ -44,9 +44,17 @@ object Ivf {
     when(n > 0, d / n).otherwise(lit(0.0)) // centroids pre-normalized
   }
 
-  /** Array of sims to all centroids (let-bound once per row). */
-  private[ext] def simArray(vec: Column, m: Model): Column =
-    array(m.centroids.map(c => centroidSim(vec, c)): _*)
+  /** The `nprobe` cells a query vector probes, best first: (−cosine,
+    * cell id) structs over all centroids, sorted, sliced to `nprobe`,
+    * ids kept (ties go to the lower id). The one probe ranking of
+    * [[topK]] and [[IvfPq.topK]]. */
+  private[ext] def probeCells(vec: Column, m: Model, nprobe: Int): Column = {
+    val ranked = array_sort(zip_with(
+      array(m.centroids.map(c => centroidSim(vec, c)): _*),
+      sequence(lit(0), lit(m.k - 1)),
+      (s, i) => struct((-s).as("neg"), i.cast(IntegerType).as("idx"))))
+    transform(slice(ranked, 1, nprobe), e => e.getField("idx"))
+  }
 
   /** Best-cell id: the 0-based index of the centroid with the greatest
     * cosine, first maximum winning; a null or zero vector lands in cell 0.
@@ -190,16 +198,10 @@ object Ivf {
         Similarity.norm(cv).as("__cn"),
         cellId(cv, m).as("cell"))
       .filter(finite(col("__cn")))
-    // top-nprobe cells per query: sort (−sim, idx) structs, slice, explode
-    val sims = simArray(cv, m)
-    val ranked = array_sort(zip_with(sims,
-      sequence(lit(0), lit(m.k - 1)),
-      (s, i) => struct((-s).as("neg"), i.cast(IntegerType).as("idx"))))
-    val probes = transform(slice(ranked, 1, nprobe), e => e.getField("idx"))
     val q = queries.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("query_id"), cv.as("__qv"),
         Similarity.norm(cv).as("__qn"),
-        explode(probes).as("cell"))
+        explode(probeCells(cv, m, nprobe)).as("cell"))
       .filter(finite(col("__qn")))
     val qSide = if (broadcastQueries) broadcast(q) else q
     val scored = qSide.join(c, Seq("cell"))

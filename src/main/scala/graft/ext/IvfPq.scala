@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.LongType
 
 import graft.util.Stages
 
@@ -121,16 +121,9 @@ object IvfPq {
       roundDigits: Int = 4, broadcastQueries: Boolean = true): DataFrame = {
     val r = if (shortlist > 0) shortlist else 10 * k
     val cv = col(vecCol).cast("array<double>")
-    // nprobe best cells per query (by cosine to the coarse centroids,
-    // mirroring Ivf.topK's probe order)
-    val sims = Ivf.simArray(cv, index.ivf)
-    val ranked = array_sort(zip_with(sims,
-      sequence(lit(0), lit(index.ivf.k - 1)),
-      (s, i) => struct((-s).as("neg"), i.cast(IntegerType).as("idx"))))
-    val probes = transform(slice(ranked, 1, nprobe), e => e.getField("idx"))
     val q0 = queries.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("query_id"), cv.as("__qv"),
-        explode(probes).as("cell"))
+        explode(Ivf.probeCells(cv, index.ivf, nprobe)).as("cell"))
       .withColumn("__rq", residual(col("__qv"), index.ivf, col("cell")))
     // ADC table of the residual against THIS cell: M×K folds per
     // (query, probed cell) row — nprobe tables per query, total

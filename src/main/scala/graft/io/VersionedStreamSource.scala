@@ -176,38 +176,30 @@ final class VersionedStreamSource(
     }
   }
 
-  /** The data files version `c` APPENDS, Nil for commits a tailing
-    * reader ignores, or throw for data-changing commits (unless
-    * `skipChangeCommits`). */
-  private def addsOf(c: VT.Commit): Seq[String] = {
-    val pureAdd = c.remove.isEmpty && c.dvAdd.isEmpty && c.dvRemove.isEmpty
-    c.op match {
-      case _ if c.add.isEmpty && pureAdd => Nil // metadata-only commit
-      case "optimize" => Nil // rewrite without data change
-      // ANY blind add-only commit serves as appends — including a
-      // pure-insert MERGE (no hits) and a CDC apply of inserts: what
-      // matters is the ACTIONS (no removes, no DV change), not the op
-      // name. RESTORE is the exception: its adds are files a tailing
-      // reader already served — re-serving them double-counts.
-      case op if pureAdd && op != "restore" => c.add
-      case _ if skipChangeCommits => Nil
-      case op => throw new IllegalStateException(
-        s"streaming read of $table hit version ${c.version} ('$op'), " +
-          "which changed existing rows — a tail of appends cannot " +
-          "express that. Restart from a fresh checkpoint to reprocess " +
-          "the table, or set skipChangeCommits=true to skip " +
-          "data-changing commits")
+  /** What commit `c` serves in this stream's mode ([[VT.served]]). A
+    * commit that changed existing rows fails the stream, unless
+    * `skipChangeCommits` skips it wholesale. */
+  private def slice(c: VT.Commit): Option[VT.Slice] =
+    VT.served(c, readChangeFeed) match {
+      case s: VT.Slice => Some(s)
+      case VT.Skip => None
+      case VT.Unservable if skipChangeCommits => None
+      case VT.Unservable => throw new IllegalStateException(
+        s"streaming read of $table hit version ${c.version} ('${c.op}'), " +
+          "which changed existing rows" + (if (readChangeFeed)
+            s" without a change-data sidecar (set ${VT.CdfProp}=true " +
+              "before such writes)"
+          else " — a tail of appends cannot express that") +
+          ". Restart from a fresh checkpoint to reprocess the table, or " +
+          "set skipChangeCommits=true to skip data-changing commits")
     }
-  }
 
-  /** Files commit `c` contributes to a batch in the ACTIVE mode —
-    * change-data sidecars + synthesized-insert adds in change-feed mode,
-    * plain adds otherwise. */
+  /** Files commit `c` contributes to a batch in the ACTIVE mode. */
   private def servedFiles(c: VT.Commit): Int =
-    if (readChangeFeed)
-      scala.util.Try(VT.changeFilesOf(table, c).fold(0)(_._1.size))
-        .getOrElse(0)
-    else scala.util.Try(addsOf(c).size).getOrElse(0)
+    VT.served(c, readChangeFeed) match {
+      case VT.Slice(files, _) => files.size
+      case _ => 0
+    }
 
   /** Rate-limited end version for a batch starting after
     * `fromExclusive`: admit whole versions until the NEXT one would push
@@ -366,23 +358,6 @@ final class VersionedStreamSource(
     okSchemas.add(json)
   }
 
-  /** `_change_type` / `_commit_version` / `_commit_timestamp` stamps on
-    * a change-feed batch slice. `insertType` tags sidecar-less adds. */
-  private def stamped(df: DataFrame, insertType: Boolean, version: Long,
-      ts: Long): DataFrame = {
-    val typed =
-      if (insertType)
-        df.withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("insert"))
-      else df
-    typed
-      .withColumn("_commit_version",
-        org.apache.spark.sql.functions.lit(version))
-      .withColumn("_commit_timestamp",
-        org.apache.spark.sql.functions.timestamp_millis(
-          org.apache.spark.sql.functions.lit(ts)))
-  }
-
   /** Snapshot files [from, until) of the sorted list at version `v`,
     * deletion vectors subtracted (the DV anti-join is per-file — entries
     * for unserved files are inert, so every slice passes the full set).
@@ -390,51 +365,39 @@ final class VersionedStreamSource(
     * version, like the unsliced bootstrap. */
   private def snapshotSlice(v: Long, from: Int, until: Int): DataFrame = {
     val (files, stats, dv) = snapshotAt(v)
-    val base = VT.streamingScan(spark, table,
-      files.slice(from, until), stats, dataSchema, dv)
-    if (!readChangeFeed) base
-    else stamped(base, insertType = true, v,
-      VT.commitsIn(table, v - 1, v).headOption.fold(0L)(_.ts))
+    VT.changeSlice(spark, table, files.slice(from, until), dataSchema,
+      stats, dv, streaming = true, stamp = Option.when(readChangeFeed)(
+        VT.Stamp(v, VT.commitsIn(table, v - 1, v).headOption.fold(0L)(_.ts),
+          inserts = true)))
   }
 
-  /** Tail batch: the data (or change envelopes) of versions (f, endV]. */
+  /** Tail batch: the data (or change envelopes) of versions (f, endV],
+    * read in the bound schema (files predating a column read nulls; see
+    * [[checkSchema]] for columns added later). */
   private def tailBatch(f: Long, endV: Long): DataFrame = {
     val commits = VT.commitsIn(table, f, endV)
+    val slices = commits.flatMap(c =>
+      slice(c).map { s => checkSchema(c); (c, s) })
     if (!readChangeFeed) {
-      val adds = commits.flatMap { c =>
-        val a = addsOf(c)
-        if (a.nonEmpty) checkSchema(c)
-        a
-      }
       // per-file stats come from the ADDING commit, not the end
       // state: a later (skipped) compaction may have already retired
       // these files from the live state, but their bytes are still
       // on disk until vacuum and their manifest stats still prune
       val stats = commits.foldLeft(Map.empty: VT.FileStats)(_ ++ _.stats)
-      VT.streamingScan(spark, table, adds, stats, schema, Nil)
+      VT.changeSlice(spark, table, slices.flatMap(_._2.files), schema,
+        stats, streaming = true)
     } else {
       // change-feed tail: one envelope slice per commit (versions
       // stamp differently, so slices don't merge into one scan);
       // sidecar files carry `_change_type` themselves, adds get it
-      // synthesized. A data-changing commit with no sidecar throws
-      // (skipChangeCommits swallows it, as in plain-row mode).
-      val cdfSchema = StructType(dataSchema.fields :+
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType))
-      val parts = commits.flatMap { c =>
-        val cf =
-          if (skipChangeCommits)
-            scala.util.Try(VT.changeFilesOf(table, c))
-              .getOrElse(None)
-          else VT.changeFilesOf(table, c)
-        cf.collect { case (files, synth) if files.nonEmpty =>
-          checkSchema(c)
-          val base = VT.streamingScan(spark, table, files, c.stats,
-            if (synth) dataSchema else cdfSchema, Nil)
-          stamped(base, insertType = synth, c.version, c.ts)
-        }
-      }
-      parts.reduceOption(_.unionByName(_)).getOrElse(
+      // synthesized
+      val cdfSchema = // the sidecars' columns: data + `_change_type`
+        StructType(dataSchema.fields ++ VT.ChangeMeta.take(1))
+      slices.map { case (c, VT.Slice(files, inserts)) =>
+        VT.changeSlice(spark, table, files,
+          if (inserts) dataSchema else cdfSchema, c.stats, streaming = true,
+          stamp = Some(VT.Stamp(c.version, c.ts, inserts)))
+      }.reduceOption(_.unionByName(_)).getOrElse(
         org.apache.spark.sql.graftshim.GraftStreamingShim
           .emptyStreaming(spark, schema))
     }
@@ -511,7 +474,7 @@ final class VersionedStreamSourceProvider
           "binds"))
     val data = VT.snapshotParts(t, v)._3
     if (!cdf(params)) data
-    else StructType(data.fields ++ VersionedStreamSource.MetaFields)
+    else StructType(data.fields ++ VT.ChangeMeta)
   }
 
   override def sourceSchema(sqlContext: SQLContext,
@@ -598,16 +561,6 @@ object VersionedStreamSource {
     override def json: String = s"""{"v":$v,"i":$i}"""
   }
 
-  /** Envelope metadata columns of change-feed mode (Delta CDF's). */
-  val MetaCols: Set[String] =
-    Set("_change_type", "_commit_version", "_commit_timestamp")
-
-  private[io] val MetaFields: Seq[org.apache.spark.sql.types.StructField] =
-    Seq(
-      org.apache.spark.sql.types.StructField("_change_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("_commit_version",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("_commit_timestamp",
-        org.apache.spark.sql.types.TimestampType))
+  /** Names of the envelope metadata columns of change-feed mode. */
+  val MetaCols: Set[String] = VT.ChangeMeta.map(_.name).toSet
 }

@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StringType, StructField, StructType, TimestampType}
 
 import graft.util.{Fmt, Stages}
 
@@ -131,7 +131,10 @@ object VersionedTable {
       // pre/post-image envelopes captured at WRITE time — Delta's
       // `_change_data` design; see [[tableChanges]]); only data-changing
       // ops on a CDF-enabled table carry them, parse defaults to empty
-      cdcAdd: Seq[String] = Nil)
+      cdcAdd: Seq[String] = Nil,
+      // schema the `cdcAdd` sidecars were written in (the envelope
+      // frame's: data columns + `_change_type`); set iff `cdcAdd` is
+      cdcSchema: String = "")
 
   // ---------------------------------------------------------------- log IO
 
@@ -171,7 +174,8 @@ object VersionedTable {
     val bl = if (c.bloomAdd.isEmpty) ""
       else s""","bloomAdd":${arr(c.bloomAdd)}"""
     val cd = if (c.cdcAdd.isEmpty) ""
-      else s""","cdcAdd":${arr(c.cdcAdd)}"""
+      else s""","cdcAdd":${arr(c.cdcAdd)},""" +
+        s""""cdcSchema":${Fmt.jsonString(c.cdcSchema)}"""
     // per-writer nonce: the object-store arbiter adjudicates an ambiguous
     // put by byte-equality read-back, which is only sound if commit JSON
     // is writer-unique. Data commits are (UUID-named add files), but
@@ -234,7 +238,8 @@ object VersionedTable {
       propsUnset = strs("propsUnset"),
       schemaLineage = strs("schemaLineage"),
       bloomAdd = strs("bloomAdd"),
-      cdcAdd = strs("cdcAdd"))
+      cdcAdd = strs("cdcAdd"),
+      cdcSchema = Option(n.get("cdcSchema")).fold("")(_.asText()))
   }
 
   /** The committed version carrying transaction (`txnApp`, `txnId`), if
@@ -512,13 +517,19 @@ object VersionedTable {
     }.toSeq)
   }
 
-  /** The distinct (file, row position) pairs retired by `dvFiles`; the
-    * empty file list yields the empty entry set (no parquet read). */
+  /** The schema deletion-vector sidecars hold: (data file name, row
+    * position) per retired row. */
+  private val DvSchema = StructType(Seq(StructField("file_name", StringType),
+    StructField("row_index", LongType)))
+
+  /** The distinct (file, row position) pairs retired by `dvFiles`, read
+    * through [[scan]] in [[DvSchema]]; the empty file list yields the
+    * empty entry set (no parquet read). */
   private def dvEntries(spark: SparkSession, table: String,
       dvFiles: Seq[String]): DataFrame =
     if (dvFiles.isEmpty)
       spark.range(0).select(lit("").as("__dv_fn"), lit(0L).as("__dv_ri"))
-    else spark.read.parquet(dvFiles.map(f => Paths.get(table, f).toString): _*)
+    else scan(spark, table, dvFiles, DvSchema)
       .select(col("file_name").as("__dv_fn"),
         col("row_index").as("__dv_ri"))
       .distinct()
@@ -566,47 +577,23 @@ object VersionedTable {
     (st.files, st.fileStats, unionSchema(st.schemas), st.dv)
   }
 
-  /** [[readState]]'s streaming twin: [[scan]] `files` as a streaming
-    * relation (manifest stats still prune pushed-down filters per
-    * micro-batch), minus any rows `dvFiles` retire (a stream–batch
-    * broadcast anti-join — supported shape). The schema is the SOURCE'S
-    * frozen schema, not the state's: every batch of one streaming query
-    * must agree column-for-column, so files predating a column read nulls
-    * and later-added columns are ignored until the query restarts against
-    * the evolved schema. */
-  private[io] def streamingScan(spark: SparkSession, table: String,
-      files: Seq[String], fileStats: FileStats, schema: StructType,
-      dvFiles: Seq[String]): DataFrame = {
-    if (files.isEmpty)
-      return org.apache.spark.sql.graftshim.GraftStreamingShim
-        .emptyStreaming(spark, schema)
-    // a stream resumed past the vacuum retention window must fail with
-    // the RETENTION story at planning time, not a raw executor
-    // FileNotFoundException mid-batch (same contract as tableChanges)
-    files.filterNot(f => Files.exists(Paths.get(table, f)))
-      .headOption.foreach(f => throw new IllegalStateException(
-        s"streaming batch file $f of $table was vacuumed — the " +
-          "checkpoint is beyond the retention window; restart the " +
-          "stream from a fresh checkpoint to reprocess"))
-    minusDv(spark, table,
-      scan(spark, table, files, schema, fileStats, streaming = true), dvFiles)
-  }
-
   // --------------------------------------- change data feed (write-time)
-  // Delta's `_change_data` design (concept reference:
-  // delta.enableChangeDataFeed; the reference repo consumes it through
-  // `readChangeFeed`, /root/reference/src/utils/spark_utils.py:285-344
-  // context): when the table property below is set, every data-CHANGING
+  // Delta's `_change_data` design (delta.enableChangeDataFeed; the
+  // reference consumes it through `readChangeFeed`, `spark_utils.py:
+  // 285-344`): when the table property below is set, every data-CHANGING
   // write captures its row-level envelopes (update_preimage /
   // update_postimage / delete / insert) into parquet sidecars named by
-  // the commit (`cdcAdd`). Readers then serve changes by SCANNING those
-  // sidecars — O(changed rows), no key joins, no keys needed — where the
-  // manifest-diff [[changeFeed]] must recompute the diff per read.
-  // Appends carry no sidecar: their adds ARE the insert envelopes, which
-  // readers synthesize for free. Capture costs one extra pass over the
-  // touched sliver at write time, paid once, amortized over every
-  // downstream consumer — the right trade for a 100 TB table feeding
-  // many incremental readers.
+  // the commit (`cdcAdd`) and written in the schema it records
+  // (`cdcSchema`). Appends carry no sidecar: their adds ARE the insert
+  // envelopes, read in the append's own recorded schema. Both change
+  // readers — the batch [[tableChanges]] and the `readChangeFeed` stream
+  // of [[VersionedStreamSource]] — ask [[served]] what a commit offers
+  // and read it through [[changeSlice]]: a [[scan]] of O(changed rows)
+  // in a recorded schema, with no key joins and no footer inference,
+  // where the manifest-diff [[changeFeed]] must recompute the diff per
+  // read. Capture costs one extra pass over the touched sliver at write
+  // time, paid once, amortized over every downstream consumer — the
+  // right trade for a 100 TB table feeding many incremental readers.
 
   /** Table property enabling write-time change capture (set it via
     * [[setProperties]] BEFORE the writes whose changes you need). */
@@ -616,47 +603,107 @@ object VersionedTable {
     props.get(CdfProp).exists(_.trim.equalsIgnoreCase("true"))
 
   /** Write `envelope` (data columns + `_change_type`) as this commit's
-    * change-data sidecar files. `hint` keeps the sidecar file count
-    * proportional to the files the write touched, not to
+    * change-data sidecar files; returns them with the schema they hold,
+    * for the commit's `cdcAdd` / `cdcSchema`. `hint` keeps the sidecar
+    * file count proportional to the files the write touched, not to
     * shuffle.partitions. */
   private def writeCdc(envelope: DataFrame, table: String,
-      hint: Int): Seq[String] =
-    writeDataFiles(envelope.coalesce(math.max(1, hint)), table, tag = "cdc")
+      hint: Int): (Seq[String], String) =
+    (writeDataFiles(envelope.coalesce(math.max(1, hint)), table,
+      tag = "cdc"), envelope.schema.json)
 
-  /** How a change reader serves commit `c`: `None` — nothing to serve
-    * (metadata-only, no-op, or an `optimize` rewrite that moved rows
-    * without changing them); `Some((files, synthesizeInserts))` — scan
-    * these parquet files, adding `_change_type = 'insert'` when they are
-    * plain data files of a blind append (sidecar-less adds), as-is when
-    * they are change-data sidecars already carrying the column. Throws
-    * for a data-changing commit with no sidecar: its removes cannot be
-    * reconstructed after the fact (enable [[CdfProp]] before the write,
-    * or fall back to the key-based [[changeFeed]]). RESTORE always
-    * throws — its adds are files a tailing reader already served, so
-    * re-serving them as inserts would double-count. */
-  private[io] def changeFilesOf(table: String,
-      c: Commit): Option[(Seq[String], Boolean)] = {
+  /** The envelope metadata columns a change reader stamps on its rows
+    * (Delta CDF's), in output order. */
+  private[io] val ChangeMeta: Seq[StructField] = Seq(
+    StructField("_change_type", StringType),
+    StructField("_commit_version", LongType),
+    StructField("_commit_timestamp", TimestampType))
+
+  /** What a change reader may serve from one commit (see [[served]]). */
+  private[io] sealed trait Served
+  /** Nothing: a metadata-only or no-op commit, or an `optimize` rewrite
+    * that moved rows without changing them. */
+  private[io] case object Skip extends Served
+  /** Scan `files`: a pure add's data files, served as inserts
+    * (`inserts`), or change-data sidecars carrying `_change_type`. */
+  private[io] final case class Slice(files: Seq[String], inserts: Boolean)
+      extends Served
+  /** The commit changed existing rows and no slice expresses that. */
+  private[io] case object Unservable extends Served
+
+  /** THE classification of commit `c` for every change reader: a
+    * `changeFeed` reader gets the commit's sidecars when it has them;
+    * otherwise a pure add (no removes, no DV change — whatever the op)
+    * serves its adds as inserts, except RESTORE, whose adds a tailing
+    * reader already served. Anything else is [[Unservable]] (its removes
+    * cannot be reconstructed after the fact); each caller words that
+    * refusal with its own remedy. */
+  private[io] def served(c: Commit, changeFeed: Boolean): Served = {
     val pureAdd = c.remove.isEmpty && c.dvAdd.isEmpty && c.dvRemove.isEmpty
-    if (c.cdcAdd.nonEmpty) Some((c.cdcAdd, false))
-    else if (c.op == "optimize") None
-    else if (c.add.isEmpty && pureAdd) None // metadata / no-op commit
-    else if (pureAdd && c.op != "restore") Some((c.add, true))
-    else throw new IllegalStateException(
-      s"version ${c.version} of $table ('${c.op}') changed existing " +
-        s"rows without a change-data sidecar — set table property " +
-        s"$CdfProp=true before such writes, or use the key-based " +
-        "changeFeed")
+    if (changeFeed && c.cdcAdd.nonEmpty) Slice(c.cdcAdd, inserts = false)
+    else if (c.op == "optimize" || c.add.isEmpty && pureAdd) Skip
+    else if (pureAdd && c.op != "restore") Slice(c.add, inserts = true)
+    else Unservable
+  }
+
+  /** Change-feed attribution of a slice: the serving commit's version
+    * and time; `inserts` tags every row `_change_type = 'insert'`. */
+  private[io] final case class Stamp(version: Long, ts: Long,
+      inserts: Boolean)
+
+  /** THE one slice read of the change readers: `files` through [[scan]]
+    * in `schema` (streaming when `streaming`), minus the rows the DV
+    * sidecars `dv` retire, stamped with the [[ChangeMeta]] columns when
+    * a `stamp` is given. A vacuumed file fails at planning time with the
+    * RETENTION story, not a scan-time file-not-found: a reader stalled
+    * past the window must restart from a current snapshot — Delta's
+    * contract too. */
+  private[io] def changeSlice(spark: SparkSession, table: String,
+      files: Seq[String], schema: StructType, stats: FileStats = Map.empty,
+      dv: Seq[String] = Nil, streaming: Boolean = false,
+      stamp: Option[Stamp] = None): DataFrame = {
+    files.filterNot(f => Files.exists(Paths.get(table, f)))
+      .headOption.foreach(f => throw new IllegalStateException(
+        s"change file $f of $table was vacuumed — the read reaches " +
+          "beyond the retention window; reprocess from a current snapshot " +
+          "(a stream: restart it from a fresh checkpoint)"))
+    val base =
+      if (files.isEmpty && streaming)
+        org.apache.spark.sql.graftshim.GraftStreamingShim
+          .emptyStreaming(spark, schema)
+      else minusDv(spark, table,
+        scan(spark, table, files, schema, stats, streaming = streaming), dv)
+    stamp.fold(base) { s =>
+      (if (s.inserts) base.withColumn("_change_type", lit("insert"))
+      else base)
+        .withColumn("_commit_version", lit(s.version))
+        .withColumn("_commit_timestamp", timestamp_millis(lit(s.ts)))
+    }
+  }
+
+  /** `t` with every field, element and value nullable: the form Spark's
+    * parquet writer stores in a file footer, so a change read yields the
+    * nullability a footer-inferring read would. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), true)
+    case other => other
   }
 
   /** Change feed served from WRITE-TIME sidecars (Delta's
     * `table_changes`): every row-level change committed in versions
     * `(fromVersion, toVersion]`, as `_change_type`-tagged envelopes with
     * `_commit_version` / `_commit_timestamp` attribution — no keys
-    * needed, unlike the manifest-diff [[changeFeed]]. Appends stream
-    * their add files as inserts directly; MERGE / DELETE / CDC-apply
+    * needed, unlike the manifest-diff [[changeFeed]]. Appends serve
+    * their add files as inserts; MERGE / DELETE / CDC-apply / overwrite
     * commits must have been written with [[CdfProp]] set (throws
-    * otherwise, naming the offending version). Cost: a scan of O(changed
-    * rows) — the sidecars and the appended files — never the table.
+    * otherwise, naming the offending version). Every file is read in the
+    * schema its commit recorded, so planning runs no Spark job, and the
+    * slices are conformed to the `toVersion` schema. Cost: a scan of
+    * O(changed rows) — the sidecars and the appended files — never the
+    * table.
     *
     * Semantics vs [[changeFeed]]: this is the per-commit HISTORY — a
     * key updated in three commits of the range yields three
@@ -677,42 +724,30 @@ object VersionedTable {
       s"fromVersion $fromVersion > toVersion $toVersion")
     require(vs.contains(toVersion), s"version $toVersion not in log")
     val schema = unionSchema(stateAt(table, toVersion).schemas)
-    val metas = Seq("_change_type", "_commit_version", "_commit_timestamp")
     val parts = commitsIn(table, fromVersion, toVersion).flatMap { c =>
-      changeFilesOf(table, c).collect {
-        case (files, synth) if files.nonEmpty =>
-          // fail with the RETENTION story, not a scan-time
-          // file-not-found: sidecars (and retired append files) age out
-          // with vacuum, and a reader stalled past the window must
-          // restart from a fresh snapshot — Delta's contract too
-          files.filterNot(f => Files.exists(Paths.get(table, f)))
-            .headOption.foreach(f => throw new IllegalStateException(
-              s"change file $f of $table version ${c.version} was " +
-                "vacuumed — the requested range is beyond the retention " +
-                "window; reprocess from a current snapshot"))
-          val base = spark.read.option("mergeSchema", "true")
-            .parquet(files.map(f => Paths.get(table, f).toString): _*)
-          (if (synth) base.withColumn("_change_type", lit("insert"))
-          else base)
-            .withColumn("_commit_version", lit(c.version))
-            .withColumn("_commit_timestamp", timestamp_millis(lit(c.ts)))
+      served(c, changeFeed = true) match {
+        case Skip => None
+        case Slice(files, inserts) => Some(changeSlice(spark, table, files,
+          nullable(DataType.fromJson(
+            if (inserts) c.schemaJson else c.cdcSchema))
+            .asInstanceOf[StructType],
+          stamp = Some(Stamp(c.version, c.ts, inserts))))
+        case Unservable => throw new IllegalStateException(
+          s"version ${c.version} of $table ('${c.op}') changed existing " +
+            s"rows without a change-data sidecar — set table property " +
+            s"$CdfProp=true before such writes, or use the key-based " +
+            "changeFeed")
       }
     }
     val u = parts.reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .getOrElse {
-        val full = StructType(schema.fields ++ Seq(
-          StructField("_change_type", org.apache.spark.sql.types.StringType),
-          StructField("_commit_version", org.apache.spark.sql.types.LongType),
-          StructField("_commit_timestamp",
-            org.apache.spark.sql.types.TimestampType)))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], full)
-      }
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(schema.fields ++ ChangeMeta)))
     // conform to the to-version schema: sidecars from before a column
     // evolution null-fill it, like any schema-evolved history read
     u.select((schema.fields.map(f =>
       (if (u.columns.contains(f.name)) col(f.name).cast(f.dataType)
       else lit(null).cast(f.dataType)).as(f.name)).toSeq ++
-      metas.map(col)): _*)
+      ChangeMeta.map(f => col(f.name))): _*)
   }
 
   private def requireNoDv(st: TableState, op: String, table: String): Unit =
@@ -774,7 +809,7 @@ object VersionedTable {
       // write. A zero-match delete removes the orphan sidecar and commits
       // a no-op (the commit still serializes against concurrent writers).
       val dvFiles = writeDataFiles(hits.coalesce(1), table, tag = "dv")
-      val matched = scan(spark, table, dvFiles, hits.schema).count()
+      val matched = scan(spark, table, dvFiles, DvSchema).count()
       if (matched == 0L) {
         dvFiles.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
         return commitLoop(table, "delete_dv", Nil, _ => Nil, st.schemaJson,
@@ -788,14 +823,14 @@ object VersionedTable {
       // task (coalesce above the actual partition count is a no-op, so
       // small deletes still land in few sidecar files).
       val cdc =
-        if (!cdfEnabled(st.props)) Nil
+        if (!cdfEnabled(st.props)) (Nil, "")
         else writeCdc(matchedRows.drop("__fn", "__ri")
           .withColumn("_change_type", lit("delete")), table,
           math.max(1, st.files.size))
       commitLoop(table, "delete_dv", Nil, _ => Nil, st.schemaJson,
         readVersion = Some(rv), dvAdd = dvFiles,
         rebaseOverAdds = isolation == Isolation.WriteSerializable,
-        cdcAdd = cdc)
+        cdc = cdc)
     } finally matchedRows.unpersist(blocking = false)
   }
 
@@ -1087,7 +1122,7 @@ object VersionedTable {
       propsUnset: Seq[String] = Nil,
       schemaLineage: Seq[String] = Nil,
       bloomAdd: Seq[String] = Nil,
-      cdcAdd: Seq[String] = Nil): Commit = {
+      cdc: (Seq[String], String) = (Nil, "")): Commit = {
     var attempt = 0
     while (attempt < maxRetries) {
       // idempotence FIRST: if this transaction already committed (an
@@ -1161,7 +1196,7 @@ object VersionedTable {
         dvAdd = dvAdd, dvRemove = dvRemoveAt(next),
         propsSet = propsSet, propsUnset = propsUnset,
         schemaLineage = schemaLineage, bloomAdd = bloomAdd,
-        cdcAdd = cdcAdd)
+        cdcAdd = cdc._1, cdcSchema = cdc._2)
       if (tryPublish(table, next, commitJson(c))) {
         // the commit is DURABLE once published — a failure writing the
         // derived checkpoint must not fail the caller (a retrying
@@ -1806,7 +1841,7 @@ object VersionedTable {
               .withColumn("_change_type", lit("insert")),
               allowMissingColumns = true),
             table, math.max(1, files.size))
-        case _ => Nil
+        case _ => (Nil, "")
       }
       // the remove set is derived from the slot the commit actually
       // LANDS in, not the version observed before the loop: a bootstrap
@@ -1828,7 +1863,7 @@ object VersionedTable {
           enforceConstraints(table, df)
         },
         dvRemoveAt = v => if (v == 0) Nil else stateAt(table, v - 1).dv,
-        cdcAdd = cdc)
+        cdc = cdc)
     }
 
   /** Apply a change-feed frame (`_change_type` ∈ insert /
@@ -1997,7 +2032,8 @@ object VersionedTable {
             if (hitNames.nonEmpty) written.coalesce(hitNames.size)
             else written, table) }
         val cdc =
-          if (!cdfEnabled(st.props) || added.isEmpty && hitNames.isEmpty) Nil
+          if (!cdfEnabled(st.props) || added.isEmpty && hitNames.isEmpty)
+            (Nil, "")
           else step("cdf-capture") {
             val env = change match {
               case ByPredicate(_) =>
@@ -2034,7 +2070,7 @@ object VersionedTable {
             readVersion = rv, txn = txn, stats = stats, bloomAdd = blooms,
             revalidate = () => enforce(),
             rebaseOverAdds = isolation == Isolation.WriteSerializable,
-            cdcAdd = cdc)
+            cdc = cdc)
         }
       } finally tagged.unpersist(blocking = false)
     } finally keySet.foreach(_.unpersist(blocking = false))

@@ -572,4 +572,47 @@ class CdfSpec extends SparkSpec {
       assert(env == Seq((1, None, "delete"), (3, Some(30), "insert")))
     }
   }
+
+  test("one range over a subset-schema append, a mergeSchema append and " +
+    "a re-typing overwrite reads in the to-version schema") {
+    withDirs { (t, _) =>
+      VT.append(spark, df(1 -> "a", 2 -> "b"), t)                 // v0
+      enable(t)                                                   // v1
+      VT.append(spark, Seq(3).toDF("id"), t)                      // v2
+      VT.append(spark, Seq((4, "d", 40)).toDF("id", "v", "w"), t,
+        mergeSchema = true)                                       // v3
+      VT.overwrite(spark, Seq((5, "e", "50")).toDF("id", "v", "w"), t,
+        overwriteSchema = true)                                   // v4: w int -> string
+      def read(to: Long) = {
+        val tc = VT.tableChanges(spark, t, 1, to)
+        val rows = tc.select(col("id"), col("v"), col("w").cast("string"),
+            col("_change_type"), col("_commit_version"))
+          .as[(Int, Option[String], Option[String], String, Long)]
+          .collect().toSeq.sortBy(r => (r._5, r._4, r._1))
+        (tc.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)),
+          rows)
+      }
+      val (schema, rows) = read(4)
+      assert(rows == Seq(
+        (3, None, None, "insert", 2L),
+        (4, Some("d"), Some("40"), "insert", 3L),
+        (1, Some("a"), None, "delete", 4L),
+        (2, Some("b"), None, "delete", 4L),
+        (3, None, None, "delete", 4L),
+        (4, Some("d"), Some("40"), "delete", 4L),
+        (5, Some("e"), Some("50"), "insert", 4L)))
+      // data columns read nullable, as a parquet footer holds them
+      assert(schema == Seq(("id", "int", true), ("v", "string", true),
+        ("w", "string", true), ("_change_type", "string", true),
+        ("_commit_version", "bigint", false),
+        ("_commit_timestamp", "timestamp", false)))
+      // before the overwrite the range ends in the int-typed w
+      val (schema3, rows3) = read(3)
+      assert(rows3 == rows.take(2))
+      assert(schema3 == Seq(("id", "int", true), ("v", "string", true),
+        ("w", "int", true), ("_change_type", "string", false),
+        ("_commit_version", "bigint", false),
+        ("_commit_timestamp", "timestamp", false)))
+    }
+  }
 }

@@ -1673,11 +1673,36 @@ class VersionedTableSpec extends SparkSpec {
         assert(VT.snapshot(spark, t).as[(Int, String)].collect().toSet ==
           Set(1 -> "a", 2 -> "b"))
       }
+      withTable { t =>
+        VT.append(spark, df(1 -> "a", 2 -> "b", 3 -> "c").coalesce(1), t)
+        VT.deleteWhereDeferred(spark, t, col("id") === 1)
+        VT.deleteWhereDeferred(spark, t, col("id") === 2)
+        // the two DV sidecars are read in their fixed schema too
+        val (snap, snapJobs) = jobsOf(VT.snapshot(spark, t))
+        assert(snapJobs == 0, s"snapshot over DVs planning ran $snapJobs job(s)")
+        assert(snap.as[(Int, String)].collect().toSet == Set(3 -> "c"))
+      }
+      withTable { t =>
+        VT.append(spark, df(1 -> "a", 2 -> "b").coalesce(1), t)     // v0
+        VT.setProperties(t, Map(VT.CdfProp -> "true"))               // v1
+        VT.append(spark, df(3 -> "c").coalesce(1), t)                // v2
+        VT.merge(spark, df(2 -> "B"), t, Seq("id"))                  // v3
+        VT.deleteWhereDeferred(spark, t, col("id") === 1)            // v4
+        // appends read in their commit's schema, sidecars in the one
+        // their commit recorded: no commit of the range infers one
+        val (env, envJobs) = jobsOf(VT.tableChanges(spark, t, -1, 4))
+        assert(envJobs == 0, s"tableChanges planning ran $envJobs job(s)")
+        assert(env.select("id", "v", "_change_type")
+          .as[(Int, String, String)].collect().toSet == Set(
+            (1, "a", "insert"), (2, "b", "insert"), (3, "c", "insert"),
+            (2, "b", "update_preimage"), (2, "B", "update_postimage"),
+            (1, "a", "delete")))
+      }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("only the scan builds a file relation; spark.read is left to the " +
-    "DV and CDF sidecar readers") {
+  test("only the scan builds a file relation; VersionedTable has no " +
+    "spark.read") {
     import scala.jdk.CollectionConverters._
     val src = java.nio.file.Paths.get(
       "src/main/scala/graft/io/VersionedTable.scala")
@@ -1686,7 +1711,6 @@ class VersionedTableSpec extends SparkSpec {
     // a line belongs to the member whose header last started
     val Member = """^  [a-z@].*""".r
     val Def = """^  (?:[\w@\[\]]+ )*def (\w+).*""".r
-    val allowed = Set("scan", "dvEntries", "tableChanges")
     var owner = ""
     val hits = Files.readAllLines(src).asScala.toSeq.zipWithIndex.flatMap {
       case (line, i) =>
@@ -1701,7 +1725,7 @@ class VersionedTableSpec extends SparkSpec {
         else None
     }
     val offenders = hits.collect {
-      case (o, true, at) if !allowed(o) => at
+      case (_, true, at) => at
       case (o, false, at) if o != "scan" => at
     }
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
